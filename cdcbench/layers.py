@@ -3,20 +3,25 @@
 Sources: the benchmark's spans around each call into the engine, the
 Spark event log (jobs and tasks per span), ``StreamingQueryProgress``
 (Structured Streaming phases), the table's commit log (``history()``)
-and the scan reports captured around each read. Every metric is
-emitted for every workload; a layer a workload does not exercise
-reports 0. Medians here are plain medians over the run's samples.
+and the scan reports captured around each read. The live-phase
+metrics cover the measured window; ``drain.*`` covers the catch-up
+drain and ``query.*`` the last query pass. Every metric is emitted for
+every workload; a layer a workload does not exercise reports 0.
+Medians here are plain medians over the run's samples.
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 from datetime import datetime
 
 from measure import median, percentile
 from spans import read_event_log
+from stargen import HEADLINE
+
 
 def _med(values) -> float:
     m = median(list(values))
@@ -65,17 +70,55 @@ def _sink_writes(history: list[dict], mirror: str, n_buckets: int) -> dict:
     return {"touched": touched, "files": files, "bytes": size, "runs": runs_pending}
 
 
+def _stream_split(batches, pb, merges, dur):
+    """Structured Streaming accounting of micro-batches: per-batch
+    ``durationMs`` rows, and the share of trigger wall covered by
+    framework time (trigger - addBatch) plus the traced
+    ``process_batch``; the rest is the foreachBatch callback's own
+    overhead."""
+    dm = [b.get("durationMs", {}) for b in batches]
+    accounted = total = 0.0
+    for b, d in zip(batches, dm):
+        s = pb.get(b["batchId"])
+        if s is None:
+            continue
+        trig = d.get("triggerExecution", 0) / 1000
+        total += trig
+        accounted += trig - d.get("addBatch", 0) / 1000 + dur(s)
+    outside = [dur(s) - dur(merges[b]) for b, s in pb.items() if b in merges]
+    return dm, (accounted / total if total else 0.0), outside
+
+
+def _compact_ratio(batch_ids, files_of, files) -> float:
+    """Distinct keys ÷ events over the given batches."""
+    events = keys = 0
+    for b in batch_ids:
+        changes = [c for f in files_of.get(b, []) for c in files(f)]
+        events += len(changes)
+        keys += len({k for _, k, _ in changes})
+    return keys / events if events else 0.0
+
+
+def _union_s(intervals) -> float:
+    """Length of the union of ``(start, end)`` intervals."""
+    total, end = 0.0, -math.inf
+    for a, b in sorted(intervals):
+        if b > end:
+            total += b - max(a, end)
+            end = b
+    return total
+
+
 def layer_metrics(ctx: dict, eventlog_dir: str, keep: str | None) -> dict:
     tracer = ctx["tracer"]
-    t0 = ctx["t_timed"]
-    spans = [s for s in tracer.spans if s["start"] >= t0]
+    t0, t_end = ctx["t_timed"], ctx["t_live_end"]
     by_id = {s["id"]: s for s in tracer.spans}
 
     def dur(s):
         return s["end"] - s["start"]
 
-    def named(name):
-        return [s for s in spans if s["name"] == name]
+    def named(name, lo=t0, hi=t_end):
+        return [s for s in tracer.spans if s["name"] == name and lo <= s["start"] < hi]
 
     # Spark 4 writes a rolling log: a directory of ``events_<n>_*`` files
     logs = sorted(glob.glob(os.path.join(eventlog_dir, "**", "events_*"), recursive=True))
@@ -87,27 +130,25 @@ def layer_metrics(ctx: dict, eventlog_dir: str, keep: str | None) -> dict:
             sid = by_id.get(sid, {}).get("parent")
         return sid
 
-    def jobs_under(names) -> dict[int, list]:
+    def jobs_under(names, lo=t0, hi=t_end) -> dict[int, list]:
         out: dict[int, list] = {}
         for j in jobs.values():
             sid = root_of(j["span"], names)
-            if sid is not None and by_id[sid]["start"] >= t0:
+            if sid is not None and lo <= by_id[sid]["start"] < hi:
                 out.setdefault(sid, []).append(j)
         return out
 
-    # -- Structured Streaming ------------------------------------------
+    log = ctx["log"]
+    ckpt = ctx["ckpt"]
+    files_of: dict[int, list] = {}
+    for f, b in ckpt.file_batch.items():
+        files_of.setdefault(b, []).append(f)
+
+    # -- Structured Streaming (live phase) -----------------------------
     batches = _progress_rows(ctx["progress"], t0)
-    dm = [b.get("durationMs", {}) for b in batches]
     pb = {s["op"]: s for s in named("pipeline.process_batch")}
     merges = {s["op"]: s for s in named("sink.merge")}
-    accounted = total = 0.0
-    for b, d in zip(batches, dm):
-        s = pb.get(b["batchId"])
-        if s is None:
-            continue
-        trig = d.get("triggerExecution", 0) / 1000
-        total += trig
-        accounted += trig - d.get("addBatch", 0) / 1000 + dur(s)
+    dm, accounted, outside = _stream_split(batches, pb, merges, dur)
     batch_jobs: dict[str, int] = {}
     for j in jobs.values():
         if j["batch"] is not None:
@@ -126,16 +167,8 @@ def layer_metrics(ctx: dict, eventlog_dir: str, keep: str | None) -> dict:
     start = max((i for i, h in enumerate(history)
                  if h.get("batch_id") is not None and h["batch_id"] < first), default=0)
     writes = _sink_writes(history[start:], ctx["mirror"], ctx["n_buckets"])
-    log = ctx["log"]
-    ckpt = ctx["ckpt"]
-    files_of: dict[int, list] = {}
-    for f, b in ckpt.file_batch.items():
-        files_of.setdefault(b, []).append(f)
-    events = keys = 0
-    for b in (b["batchId"] for b in batches):
-        changes = [c for f in files_of.get(b, []) for c in log.files[f]]
-        events += len(changes)
-        keys += len({k for _, k, _ in changes})
+    keys = sum(len({k for f in files_of.get(b["batchId"], []) for _, k, _ in log.files[f]})
+               for b in batches)
     row_bytes = 0.0
     if history:
         f, s = 0, 0
@@ -151,10 +184,10 @@ def layer_metrics(ctx: dict, eventlog_dir: str, keep: str | None) -> dict:
 
     late = ctx["publisher"].late
     late_p90 = percentile(late, 0.9)
-    applied_events = sum(len(log.files[i]) for i in ctx["publisher"].due)
+    timed_events = sum(len(log.files[i]) for i in ctx["timed_files"])
     m = {
         "gen.late_p90_s": (late_p90[0] if late_p90 else max(late, default=0.0), "s"),
-        "gen.offered_events": (applied_events, "count"),
+        "gen.offered_events": (timed_events, "count"),
         "gen.gen_s": (ctx["gen_s"], "s"),
         "session.start_s": (ctx["marks"]["session"], "s"),
         "setup.bootstrap_s": (ctx["marks"]["bootstrap"], "s"),
@@ -173,12 +206,13 @@ def layer_metrics(ctx: dict, eventlog_dir: str, keep: str | None) -> dict:
         "stream.rows_per_batch_p50": (_med(b["numInputRows"] for b in batches), "count"),
         "stream.jobs_per_batch_p50": (
             _med(batch_jobs.get(str(b["batchId"]), 0) for b in batches), "count"),
-        "stream.accounted_share": (accounted / total if total else 0.0, "ratio"),
+        "stream.accounted_share": (accounted, "ratio"),
         "pipeline.process_batch_s_p50": (_med(dur(s) for s in pb.values()), "s"),
         "pipeline.fan_out_s_p50": (_med(dur(s) for s in named("pipeline.fan_out")), "s"),
-        "pipeline.outside_merge_s_p50": (_med(
-            dur(s) - dur(merges[b]) for b, s in pb.items() if b in merges), "s"),
-        "cdc.compact_ratio": (keys / events if events else 0.0, "ratio"),
+        "pipeline.outside_merge_s_p50": (_med(outside), "s"),
+        "cdc.compact_ratio": (
+            _compact_ratio([b["batchId"] for b in batches], files_of,
+                           lambda f: log.files[f]), "ratio"),
         "sink.merge_s_p50": (_med(dur(s) for s in merges.values()), "s"),
         "sink.merge_jobs_p50": (_med(len(v) for v in merge_jobs.values()), "count"),
         "sink.merge_tasks_p50": (
@@ -206,12 +240,71 @@ def layer_metrics(ctx: dict, eventlog_dir: str, keep: str | None) -> dict:
         "read.lookup_s_p50": (_med(r["t"] for r in reads if r["kind"] == "lookup"), "s"),
         "read.scan_s_p50": (_med(r["t"] for r in reads if r["kind"] == "scan"), "s"),
         "proc.cpu_s_per_kevent": (
-            ctx["cpu_live"] / (applied_events / 1000) if applied_events else 0.0, "s"),
+            ctx["cpu_live"] / (timed_events / 1000) if timed_events else 0.0, "s"),
         "proc.peak_rss_mb": (ctx["peak_rss_mb"], "MB"),
-        "trace.spans": (len(tracer.spans), "count"),
-        "trace.self_s": (tracer.self_s, "s"),
     }
+    m.update(_drain_metrics(ctx.get("drain"), named, dur, files_of))
+    m.update(_query_metrics(ctx.get("queries"), tracer.spans, jobs, root_of, dur))
+    m["trace.spans"] = (len(tracer.spans), "count")
+    m["trace.self_s"] = (tracer.self_s, "s")
     if keep:
         os.makedirs(keep, exist_ok=True)
         tracer.dump(os.path.join(keep, f"spans-{ctx['workload']}-{ctx['seed']}.jsonl"))
+    return m
+
+
+def _drain_metrics(drain, named, dur, files_of) -> dict:
+    """The catch-up drain: large micro-batches, so per-row compute
+    (parse, compaction, bucket writes) outweighs fixed cost."""
+    drain = drain or {"t0": 0.0, "t1": 0.0, "progress": [], "events": 0,
+                      "first": 0, "backlog": []}
+    lo, hi = drain["t0"], drain["t1"]
+    batches = _progress_rows(drain["progress"], lo)
+    pb = {s["op"]: s for s in named("pipeline.process_batch", lo, hi)}
+    merges = {s["op"]: s for s in named("sink.merge", lo, hi)}
+    dm, accounted, outside = _stream_split(batches, pb, merges, dur)
+    first, backlog = drain["first"], drain["backlog"]
+    wall = hi - lo
+    return {
+        "drain.events_per_s": (drain["events"] / wall if wall > 0 else 0.0, "events/s"),
+        "drain.batches": (len(batches), "count"),
+        "drain.rows_per_batch_p50": (_med(b["numInputRows"] for b in batches), "count"),
+        "drain.trigger_ms_p50": (_med(d.get("triggerExecution", 0) for d in dm), "ms"),
+        "drain.framework_gap_ms_p50": (
+            _med(d.get("triggerExecution", 0) - d.get("addBatch", 0) for d in dm), "ms"),
+        "drain.process_batch_s_p50": (_med(dur(s) for s in pb.values()), "s"),
+        "drain.merge_s_p50": (_med(dur(s) for s in merges.values()), "s"),
+        "drain.outside_merge_s_p50": (_med(outside), "s"),
+        "drain.compact_ratio": (
+            _compact_ratio([b["batchId"] for b in batches], files_of,
+                           lambda f: backlog[f - first]), "ratio"),
+        "drain.accounted_share": (accounted, "ratio"),
+    }
+
+
+def _query_metrics(queries, spans, jobs, root_of, dur) -> dict:
+    """Per headline query of the last pass: wall and Spark jobs; and the
+    pass's driver share, the part of its wall no Spark job covers."""
+    last = queries["last"] if queries else -1
+    qspans = {s["name"][len("query."):]: s for s in spans
+              if s["name"].startswith("query.") and s["name"] != "query.pass"
+              and s["op"] == last}
+    names = {"query." + n for n in HEADLINE}
+    under: dict[str, list] = {}
+    for j in jobs.values():
+        sid = root_of(j["span"], names)
+        if sid is not None and j["end"] is not None:
+            under.setdefault(sid, []).append((j["submit"], j["end"]))
+    m = {}
+    wall = covered = 0.0
+    for n in HEADLINE:
+        s = qspans.get(n)
+        ivs = under.get(s["id"], []) if s else []
+        m[f"query.{n}_s"] = (dur(s) if s else 0.0, "s")
+        m[f"query.{n}.jobs"] = (len(ivs), "count")
+        if s:
+            wall += dur(s)
+            covered += _union_s((max(a, s["start"]), min(b, s["end"])) for a, b in ivs)
+    m["query.pass_s"] = (wall, "s")
+    m["query.driver_share"] = (1 - covered / wall if wall else 0.0, "ratio")
     return m

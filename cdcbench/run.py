@@ -7,17 +7,22 @@ from a seeded Debezium change stream while one client reads it:
 
 1. set-up: start the session; publish the snapshot dump as the first
    file of the change stream and start the streaming query, which
-   bootstraps the mirror with it (Kappa style); then run the live load
-   below, untimed, while the JIT catches up;
-2. live phase (``--seconds``): a generator thread publishes change
+   bootstraps the mirror with it (Kappa style);
+2. warm-up: the live load below runs untimed while the JIT catches up;
+3. live phase (``--seconds``): a generator thread publishes change
    files on a fixed schedule (open loop) into the file source, which
    stands in for Kafka; Structured Streaming applies them with the
-   default trigger. Meanwhile the main thread runs a closed loop of
-   point lookups (``read_keys``) and cluster-column range scans
-   (``read_where``) on the mirror, alternating;
-3. checks: the final mirror equals the state folded from the
+   default trigger. Meanwhile the main thread reads the mirror at a
+   fixed pace, alternating point lookups (``read_keys``) and
+   cluster-column range scans (``read_where``);
+4. checks: the final mirror equals the state folded from the
    generated log, and every read equals a state the mirror passed
    through while the read ran.
+
+A traced run (``--trace 1``) then drains a catch-up backlog in large
+batches and runs the engine's headline registry queries (each checked
+against its DuckDB oracle), so the per-layer table covers large
+batches and the query layer too.
 
 The last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics`` (end-to-end metrics with ``--trace 0``,
@@ -29,6 +34,7 @@ from __future__ import annotations
 import argparse
 import contextlib
 import json
+import math
 import os
 import random
 import shutil
@@ -43,18 +49,32 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
+import stargen  # noqa: E402
 from measure import TreeSampler, host_probe, percentile, steal_share  # noqa: E402
 
 WORKLOADS = ("live_cow", "serve_mor")
 #: sample floor: a p90 needs 100 samples so that 10 lie beyond it
 MIN_FILES = 100
-#: untimed live load before the measured window (part of set-up)
-WARM_S = 10
+#: untimed live load between set-up and the measured window
+WARM_S = 6
 N_BUCKETS = 8
 LOOKUP_KEYS = 10
 #: zipcode range of one scan: ~0.5% of the table
 SCAN_WIDTH = 450
+#: the client starts one read per period (later if a read overruns)
+READ_PERIOD_S = 1.0
 WAIT_TIMEOUT_S = 90
+#: live files generated beyond the warm-up and the window, for reads
+#: that overrun the end of the warm-up
+SPARE_S = 20
+#: catch-up drain of the traced run: backlog files of this many events,
+#: one file per micro-batch
+DRAIN_FILES, DRAIN_FILE_EVENTS = 3, 20_000
+#: query pass of the traced run (``stargen.HEADLINE`` on seeded
+#: star-schema tables): the first pass warms the JIT, the last is
+#: reported
+STAR_SCALE = 0.01
+QUERY_PASSES = 2
 #: the record's columns; the mirror also keeps each change's op/ts_ms/seq
 FIELDS = [f.split()[0] for f in gen.RECORD_DDL.split(", ")]
 
@@ -73,6 +93,16 @@ class WorkloadConfig:
             self.merge_mode = "mor"
             self.table_kw.update(cluster_cols=["zipcode"], target_file_bytes=32 << 10)
             self.pipe_kw = {"compact_minor_ratio": 0.04, "compact_major_ratio": 0.1}
+
+
+def window_s(profile: gen.Profile, seconds: float) -> float:
+    """The measured window: ``seconds``, stretched so that at least
+    ``MIN_FILES`` files fall due inside it."""
+    return max(seconds, (MIN_FILES + 1) / profile.rate_files_s)
+
+
+def files_needed(profile: gen.Profile, seconds: float) -> int:
+    return math.ceil((WARM_S + window_s(profile, seconds) + SPARE_S) * profile.rate_files_s)
 
 
 def parse_args(argv=None):
@@ -112,11 +142,12 @@ def host_env(work: str) -> dict:
 
 
 def ensure_cache(name: str, log: gen.ChangeLog, seed: int) -> str:
-    """Render the seeded inputs once per ``(workload, seed)`` and
-    profile: a changed profile gets a fresh cache entry."""
+    """Render the seeded inputs once per ``(workload, seed)``, profile
+    and length: a changed profile or length gets a fresh cache entry."""
     import hashlib
 
-    tag = hashlib.sha1(repr(log.profile).encode()).hexdigest()[:10]
+    key = repr((log.profile, len(log.files)))
+    tag = hashlib.sha1(key.encode()).hexdigest()[:10]
     cache = os.path.join(ROOT, ".cdcbench", "cache", f"{name}-{seed}-{tag}")
     if os.path.exists(os.path.join(cache, "done")):
         return cache
@@ -179,11 +210,12 @@ class Checkpoint:
 
 class Publisher(threading.Thread):
     """Open-loop load generator. Live file ``first + k`` is due at
-    ``t0 + k / rate`` whatever the engine is doing; publishing stops at
-    ``stop_at`` once ``min_timed`` files were due at or after
-    ``t_timed``. Each file is written under a hidden name and renamed
-    into the watched directory, so the source never sees a partial
-    file."""
+    ``t0 + k / rate`` whatever the engine is doing; publishing stops
+    before the first file due at or after ``stop_at`` (set by the main
+    thread once the measured window is known). Running out of files
+    sets ``exhausted``, which fails the run. Each file is written under
+    a hidden name and renamed into the watched directory, so the source
+    never sees a partial file."""
 
     def __init__(self, bodies: list[str], live_dir: str) -> None:
         super().__init__(daemon=True)
@@ -191,6 +223,8 @@ class Publisher(threading.Thread):
         self.published = 0
         self.due: dict[int, float] = {}
         self.late: list[float] = []
+        self.t_timed = self.stop_at = math.inf
+        self.exhausted = False
         self.halt = threading.Event()
         self._last_ns = 0
 
@@ -206,29 +240,29 @@ class Publisher(threading.Thread):
         os.rename(tmp, os.path.join(self.live_dir, f"f-{i:05d}.jsonl"))
         self.published = i + 1
 
-    def schedule(self, t0: float, rate: float, t_timed: float, stop_at: float,
-                 min_timed: int) -> None:
-        self.t0, self.rate, self.t_timed = t0, rate, t_timed
-        self.stop_at, self.min_timed = stop_at, min_timed
-        self.first = self.published
+    def start_at(self, t0: float, rate: float) -> None:
+        self.t0, self.rate, self.first = t0, rate, self.published
+        self.start()
 
     def timed(self) -> list[int]:
         """Files due inside the measured window."""
-        return [i for i, due in sorted(self.due.items()) if due >= self.t_timed]
+        return [i for i, due in sorted(self.due.items())
+                if self.t_timed <= due < self.stop_at]
 
     def run(self) -> None:
         i = self.first
-        n_timed = 0
-        while i < len(self.bodies):
+        while True:
             due = self.t0 + (i - self.first) / self.rate
-            if due >= self.stop_at and n_timed >= self.min_timed:
+            if due >= self.stop_at:
                 break
-            if self.halt.wait(max(0.0, due - time.time())):
+            if i >= len(self.bodies):
+                self.exhausted = True
+                break
+            if self.halt.wait(max(0.0, due - time.time())) or due >= self.stop_at:
                 break
             self.publish(i)
             self.due[i] = due
             self.late.append(time.time() - due)
-            n_timed += due >= self.t_timed
             i += 1
 
 
@@ -237,8 +271,11 @@ def row_dict(r) -> dict:
 
 
 class Client:
-    """The closed-loop reader: on its own table handle, it alternates
-    10-key lookups and zipcode range scans, keys and ranges seeded."""
+    """The reader: on its own table handle, it starts one read every
+    ``READ_PERIOD_S`` (the next one at once if a read overruns),
+    alternating 10-key lookups and zipcode range scans, keys and ranges
+    seeded. A fixed pace keeps the work it adds to the host the same
+    on a fast host and a slow one."""
 
     KINDS = ("lookup", "scan")
 
@@ -248,6 +285,7 @@ class Client:
         self.publisher, self.tracer = publisher, tracer
         self.reads: list[dict] = []
         self.failed = 0
+        self._n = 0
 
     def read(self, kind: str) -> dict:
         lo = self.ckpt.applied()
@@ -268,15 +306,22 @@ class Client:
         rec["rows"] = {r[gen.KEY]: row_dict(r) for r in rows}
         return rec
 
-    def loop(self, done) -> None:
-        i = 0
-        while not done():
+    def loop(self, until: float) -> None:
+        """Read until ``until`` (epoch seconds); no read starts later."""
+        nxt = time.time()
+        while True:
+            now = time.time()
+            if nxt >= until:
+                time.sleep(max(0.0, until - now))
+                return
+            time.sleep(max(0.0, nxt - now))
             try:
-                self.reads.append(self.read(self.KINDS[i % len(self.KINDS)]))
+                self.reads.append(self.read(self.KINDS[self._n % len(self.KINDS)]))
             except Exception as e:  # noqa: BLE001 - a failed read is counted
                 print(f"# read failed: {e!r}", file=sys.stderr)
                 self.failed += 1
-            i += 1
+            self._n += 1
+            nxt = max(nxt + READ_PERIOD_S, time.time())
 
 
 def check_reads(reads: list[dict], log: gen.ChangeLog) -> int:
@@ -365,12 +410,15 @@ def run(args) -> dict:
     cfg = WorkloadConfig(args.workload)
     host_before = host_probe()
     t_gen = time.time()
-    log = gen.ChangeLog(cfg.profile, args.seed)
+    log = gen.ChangeLog(cfg.profile, args.seed, files_needed(cfg.profile, args.seconds))
     cache = ensure_cache(cfg.name, log, args.seed)
     bodies = []
     for i in range(len(log.files)):
         with open(os.path.join(cache, "files", f"{i:05d}.jsonl")) as f:
             bodies.append(f.read())
+    star = None
+    if args.trace:
+        star = ensure_star(args.seed)
     gen_s = time.time() - t_gen
 
     work = os.path.join(ROOT, ".cdcbench", f"run-{args.workload}-{args.seed}-{os.getpid()}")
@@ -381,10 +429,10 @@ def run(args) -> dict:
     tempfile.tempdir = env["TMPDIR"]
     try:
         with TreeSampler() as mem:
-            out = _session(args, cfg, log, cache, bodies, work, env, mem)
+            out = _session(args, cfg, log, bodies, star, work, env, mem)
         ctx = out.pop("ctx")
         ctx.update(gen_s=gen_s, peak_rss_mb=mem.peak_kb / 1024,
-                   setup_s=ctx["t_timed"] - T_PROC - gen_s)
+                   setup_s=ctx["t_setup"] - T_PROC - gen_s)
         if args.trace:
             from layers import layer_metrics
 
@@ -402,7 +450,17 @@ def run(args) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _session(args, cfg, log, cache, bodies, work, env, mem) -> dict:
+def ensure_star(seed: int) -> str:
+    """The query pass's tables, written once per seed and scale."""
+    path = os.path.join(ROOT, ".cdcbench", "cache", f"star-{seed}-{STAR_SCALE}")
+    if not os.path.exists(os.path.join(path, "done")):
+        shutil.rmtree(path, ignore_errors=True)
+        stargen.write(path, seed, STAR_SCALE)
+        open(os.path.join(path, "done"), "w").close()
+    return path
+
+
+def _session(args, cfg, log, bodies, star, work, env, mem) -> dict:
     from pyspark.sql.types import StructType
 
     from changedatacapture_spark.streaming import pipeline as pipeline_mod
@@ -443,34 +501,35 @@ def _session(args, cfg, log, cache, bodies, work, env, mem) -> dict:
                 time.sleep(0.02)
             return True
 
-        # -- set-up: bootstrap through the stream, then run the live
-        # load untimed until the JIT has caught up: batch walls still
-        # fall by a third over the first ~20 s of live load
+        # -- set-up: bootstrap the mirror through the stream -------------
         t_b = time.time()
         publisher.publish(0)
         query = pipe.start(file_envelope_stream(spark, live, max_files_per_trigger=10_000),
                            checkpoint_dir=ckpt.path)
-        warm_ok = wait_applied(1)
+        boot_ok = wait_applied(1)
         if cfg.merge_mode == "mor":
             # lay the bootstrapped base out at the target file size
             # (OPTIMIZE) before the live stream starts
             writer.compact(target_file_bytes=writer.target_file_bytes)
-        marks["bootstrap"] = time.time() - t_b
+        t_setup = time.time()
+        marks["bootstrap"] = t_setup - t_b
+
+        # -- warm-up: the live load, untimed, while the JIT catches up:
+        # batch walls still fall by a third over the first ~20 s
         client = Client(args.seed, SnapshotTable(spark, mirror, key_cols=[gen.KEY], **cfg.table_kw),
                         log, ckpt, publisher, tracer)
-        t_warm = time.time()
-        t_timed = t_warm + WARM_S
-        live_end = t_timed + args.seconds
-        publisher.schedule(t_warm, prof.rate_files_s, t_timed, live_end, MIN_FILES)
-        publisher.start()
-        client.loop(lambda: time.time() >= t_timed)
-        marks["warm"] = time.time() - t_warm
+        publisher.start_at(t_setup, prof.rate_files_s)
+        client.loop(t_setup + WARM_S)
         n_warm = len(client.reads)
 
         # -- live phase ------------------------------------------------
         t_timed = time.time()
+        marks["warm"] = t_timed - t_setup
+        publisher.t_timed = t_timed
+        live_end = t_timed + window_s(prof, args.seconds)
+        publisher.stop_at = live_end
         cpu0 = mem.cpu_s()
-        client.loop(lambda: time.time() >= live_end)
+        client.loop(live_end)
         reads, failed_reads = client.reads[n_warm:], client.failed
         lag_end = publisher.published - ckpt.applied()
         publisher.join()
@@ -480,17 +539,16 @@ def _session(args, cfg, log, cache, bodies, work, env, mem) -> dict:
         stream_error = query.exception()
         progress = list(query.recentProgress)
         query.stop()
+        t_live_end = time.time()
 
         # -- checks ----------------------------------------------------
         n_files = publisher.published
         expect = gen.fold({}, (c for f in log.files[:n_files] for c in f))
         final = {r[gen.KEY]: row_dict(r) for r in client.table.read().collect()}
-        final_ok = final == expect and drained and warm_ok and stream_error is None
-        if final != expect:
-            diff = [k for k in set(final) | set(expect) if final.get(k) != expect.get(k)]
-            print(f"# final mismatch on {len(diff)} keys, e.g. "
-                  + json.dumps([[k, final.get(k), expect.get(k)] for k in sorted(diff)[:3]]),
-                  file=sys.stderr)
+        final_ok = (_same_state("final", final, expect) and drained and boot_ok
+                    and stream_error is None and not publisher.exhausted)
+        if publisher.exhausted:
+            print(f"# generator ran out of files after {n_files}", file=sys.stderr)
         bad_reads = check_reads(client.reads, log)
         history = writer.history()
         ckpt.refresh()
@@ -510,12 +568,19 @@ def _session(args, cfg, log, cache, bodies, work, env, mem) -> dict:
         ctx = {
             "workload": cfg.name, "seed": args.seed, "log": log, "reads": reads,
             "fresh": fresh, "publisher": publisher, "ckpt": ckpt, "progress": progress,
-            "history": history, "marks": marks,
+            "history": history, "marks": marks, "timed_files": timed_files,
             "cpu_live": cpu_live, "lag_end": lag_end, "t_timed": t_timed,
+            "t_setup": t_setup, "t_live_end": t_live_end,
             "mirror": mirror, "n_buckets": N_BUCKETS, "rows_final": len(expect),
             "tracer": tracer,
         }
         if tracer:
+            drain = _drain(spark, pipe, log, publisher, ckpt, client.table, expect)
+            queries = _query_pass(spark, star, tracer)
+            attempted += 1 + len(stargen.HEADLINE) * QUERY_PASSES
+            failed += (not drain["ok"]) + len(queries["mismatch"])
+            detail.update(drain_ok=drain["ok"], query_mismatch=queries["mismatch"])
+            ctx.update(drain=drain, queries=queries)
             # the event log is complete only once the session stops
             _stop_session(spark)
             spark = None
@@ -528,6 +593,89 @@ def _session(args, cfg, log, cache, bodies, work, env, mem) -> dict:
                 publisher.join()
         if spark is not None:
             _stop_session(spark)
+
+
+def _same_state(what: str, got: dict, expect: dict) -> bool:
+    if got == expect:
+        return True
+    diff = [k for k in set(got) | set(expect) if got.get(k) != expect.get(k)]
+    print(f"# {what} mismatch on {len(diff)} keys, e.g. "
+          + json.dumps([[k, got.get(k), expect.get(k)] for k in sorted(diff)[:3]]),
+          file=sys.stderr)
+    return False
+
+
+def _drain(spark, pipe, log, publisher, ckpt, table, expect) -> dict:
+    """Catch-up after an outage: publish a backlog of large files that
+    follows the applied log, drain it with an ``availableNow`` query on
+    the same checkpoint (one file per micro-batch) and check the mirror
+    against the fold of log and backlog."""
+    from changedatacapture_spark.streaming.pipeline import file_envelope_stream
+
+    first = publisher.published
+    backlog = log.backlog(first, DRAIN_FILES, DRAIN_FILE_EVENTS)
+    del publisher.bodies[first:]
+    for j, changes in enumerate(backlog):
+        publisher.bodies.append(gen.render(changes, log.backlog_seq(j, DRAIN_FILE_EVENTS)))
+        publisher.publish(first + j)
+    t0 = time.time()
+    query = pipe.start(file_envelope_stream(spark, publisher.live_dir, max_files_per_trigger=1),
+                       checkpoint_dir=ckpt.path, available_now=True)
+    done = query.awaitTermination(WAIT_TIMEOUT_S * 2)
+    t1 = time.time()
+    if not done:
+        query.stop()
+    error = query.exception()
+    progress = list(query.recentProgress)
+    ckpt.refresh()
+    expect = gen.fold(dict(expect), (c for f in backlog for c in f))
+    final = {r[gen.KEY]: row_dict(r) for r in table.read().collect()}
+    ok = bool(done) and error is None and ckpt.applied() == first + len(backlog)
+    ok = _same_state("drain", final, expect) and ok
+    return {"t0": t0, "t1": t1, "first": first, "backlog": backlog,
+            "events": sum(len(f) for f in backlog), "progress": progress, "ok": ok}
+
+
+def _canon(df) -> list[tuple]:
+    """Order-insensitive form of a result frame: columns sorted by
+    name, rows sorted, cells compared by ``repr`` for floats."""
+    df = df[sorted(df.columns)]
+    if len(df):
+        df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+    return [tuple("NaN" if isinstance(v, float) and math.isnan(v) else
+                  repr(v) if isinstance(v, float) else v for v in row)
+            for row in df.itertuples(index=False)]
+
+
+def _query_pass(spark, star: str, tracer) -> dict:
+    """``QUERY_PASSES`` passes of the headline registry queries, each
+    query collected to pandas under a span ``query.<name>`` (op = pass
+    index); then, untimed, the last pass's results are compared with
+    the DuckDB oracle SQL of each query."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    fns, oracles = entry.queries(), entry.oracle_sql()
+    frames = {}
+    for p in range(QUERY_PASSES):
+        with tracer.span("query.pass", op=p):
+            for name in stargen.HEADLINE:
+                with tracer.span("query." + name, op=p):
+                    frames[name] = fns[name](spark, star).toPandas()
+    con = duckdb.connect()
+    for t in stargen.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{star}/{t}.parquet')")
+    mismatch = []
+    for name in stargen.HEADLINE:
+        want = con.execute(oracles[name]).df()
+        got = frames[name]
+        if sorted(got.columns) != sorted(want.columns) or _canon(got) != _canon(want):
+            print(f"# query {name} differs from its oracle: {len(got)} vs {len(want)} rows",
+                  file=sys.stderr)
+            mismatch.append(name)
+    con.close()
+    return {"last": QUERY_PASSES - 1, "mismatch": mismatch}
 
 
 def _pct(values, q: float, name: str):
