@@ -193,7 +193,7 @@ def layer_metrics(ctx: dict, eventlog_dir: str, keep: str | None) -> dict:
         "setup.bootstrap_s": (ctx["marks"]["bootstrap"], "s"),
         "setup.warm_s": (ctx["marks"]["warm"], "s"),
         "source.lag_files_end": (ctx["lag_end"], "count"),
-        "source.lag_files_max": (max((r["lag"] for r in reads), default=0), "count"),
+        "source.lag_files_max": (max(ctx["lags"], default=0), "count"),
         "stream.batches": (len(batches), "count"),
         "stream.trigger_ms_p50": (_med(d.get("triggerExecution", 0) for d in dm), "ms"),
         "stream.add_batch_ms_p50": (_med(d.get("addBatch", 0) for d in dm), "ms"),

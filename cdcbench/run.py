@@ -3,18 +3,21 @@
     python3 cdcbench/run.py --workload live_cow --seed 1 --seconds 20 --trace 0
 
 Run from the repository root. A run keeps a snapshot mirror current
-from a seeded Debezium change stream while one client reads it:
+from a seeded Debezium change stream (on ``serve_mor`` while one client
+reads it):
 
 1. set-up: start the session; publish the snapshot dump as the first
    file of the change stream and start the streaming query, which
    bootstraps the mirror with it (Kappa style);
-2. warm-up: the live load below runs untimed while the JIT catches up;
+2. warm-up: the live load below runs untimed until a fixed number of
+   micro-batches has committed, so the window starts at the same point
+   of the JIT's progress on a fast host and a slow one;
 3. live phase (``--seconds``): a generator thread publishes change
    files on a fixed schedule (open loop) into the file source, which
    stands in for Kafka; Structured Streaming applies them with the
-   default trigger. Meanwhile the main thread reads the mirror at a
-   fixed pace, alternating point lookups (``read_keys``) and
-   cluster-column range scans (``read_where``);
+   default trigger. On ``serve_mor`` the main thread meanwhile reads
+   the mirror at a fixed pace, alternating point lookups
+   (``read_keys``) and cluster-column range scans (``read_where``);
 4. checks: the final mirror equals the state folded from the
    generated log, and every read equals a state the mirror passed
    through while the read ran.
@@ -38,6 +41,7 @@ import math
 import os
 import random
 import shutil
+import signal
 import sys
 import tempfile
 import threading
@@ -55,17 +59,21 @@ from measure import TreeSampler, host_probe, percentile, steal_share  # noqa: E4
 WORKLOADS = ("live_cow", "serve_mor")
 #: sample floor: a p90 needs 100 samples so that 10 lie beyond it
 MIN_FILES = 100
-#: untimed live load between set-up and the measured window
-WARM_S = 6
+#: the untimed live load between set-up and the measured window ends
+#: after a workload's ``warm_batches`` micro-batches, or after this
+#: long if they take longer
+WARM_CAP_S = 45
 N_BUCKETS = 8
 LOOKUP_KEYS = 10
 #: zipcode range of one scan: ~0.5% of the table
 SCAN_WIDTH = 450
 #: the client starts one read per period (later if a read overruns)
 READ_PERIOD_S = 1.0
+#: the main thread samples the source lag this often between reads
+POLL_S = 0.1
 WAIT_TIMEOUT_S = 90
-#: live files generated beyond the warm-up and the window, for reads
-#: that overrun the end of the warm-up
+#: live files generated beyond the longest warm-up and the window, for
+#: reads that overrun the end of the window
 SPARE_S = 20
 #: catch-up drain of the traced run: backlog files of this many events,
 #: one file per micro-batch
@@ -89,8 +97,19 @@ class WorkloadConfig:
         self.table_kw = {"n_buckets": N_BUCKETS, "retain_history": 32}
         self.pipe_kw: dict = {}
         self.merge_mode = "cow"
+        #: whether a client reads the mirror beside the writes
+        self.reads = False
+        #: live micro-batches of the warm-up. Batch walls keep falling
+        #: over the first dozen or so batches while the JVM warms up; a
+        #: warm-up of fixed work puts the window at the same point of
+        #: that curve whatever the host's speed, where a fixed wall would
+        #: put a slow host's window earlier on it, making it slower still.
+        #: 12-15 s of live load on a quiet 4-vCPU host either way.
+        self.warm_batches = 8
         if name == "serve_mor":
             self.merge_mode = "mor"
+            self.reads = True
+            self.warm_batches = 4
             self.table_kw.update(cluster_cols=["zipcode"], target_file_bytes=32 << 10)
             self.pipe_kw = {"compact_minor_ratio": 0.04, "compact_major_ratio": 0.1}
 
@@ -102,7 +121,7 @@ def window_s(profile: gen.Profile, seconds: float) -> float:
 
 
 def files_needed(profile: gen.Profile, seconds: float) -> int:
-    return math.ceil((WARM_S + window_s(profile, seconds) + SPARE_S) * profile.rate_files_s)
+    return math.ceil((WARM_CAP_S + window_s(profile, seconds) + SPARE_S) * profile.rate_files_s)
 
 
 def parse_args(argv=None):
@@ -271,19 +290,23 @@ def row_dict(r) -> dict:
 
 
 class Client:
-    """The reader: on its own table handle, it starts one read every
+    """The main thread while the stream runs. With ``reading`` set it is
+    the reader: on its own table handle, it starts one read every
     ``READ_PERIOD_S`` (the next one at once if a read overruns),
     alternating 10-key lookups and zipcode range scans, keys and ranges
     seeded. A fixed pace keeps the work it adds to the host the same
-    on a fast host and a slow one."""
+    on a fast host and a slow one. Between reads it samples the
+    source's lag (files published but not yet committed)."""
 
     KINDS = ("lookup", "scan")
 
-    def __init__(self, seed: int, table, log, ckpt, publisher, tracer) -> None:
+    def __init__(self, seed: int, table, log, ckpt, publisher, tracer, reading: bool) -> None:
         self.rng = random.Random(seed * 7919 + 1)
         self.table, self.log, self.ckpt = table, log, ckpt
         self.publisher, self.tracer = publisher, tracer
+        self.reading = reading
         self.reads: list[dict] = []
+        self.lags: list[int] = []
         self.failed = 0
         self._n = 0
 
@@ -306,22 +329,26 @@ class Client:
         rec["rows"] = {r[gen.KEY]: row_dict(r) for r in rows}
         return rec
 
-    def loop(self, until: float) -> None:
-        """Read until ``until`` (epoch seconds); no read starts later."""
+    def loop(self, until: float, done=None) -> None:
+        """Run until ``until`` (epoch seconds) or until ``done()`` holds;
+        no read starts later."""
         nxt = time.time()
         while True:
             now = time.time()
-            if nxt >= until:
-                time.sleep(max(0.0, until - now))
+            if now >= until or (done is not None and done()):
                 return
-            time.sleep(max(0.0, nxt - now))
-            try:
-                self.reads.append(self.read(self.KINDS[self._n % len(self.KINDS)]))
-            except Exception as e:  # noqa: BLE001 - a failed read is counted
-                print(f"# read failed: {e!r}", file=sys.stderr)
-                self.failed += 1
-            self._n += 1
-            nxt = max(nxt + READ_PERIOD_S, time.time())
+            if self.reading and now >= nxt:
+                try:
+                    self.reads.append(self.read(self.KINDS[self._n % len(self.KINDS)]))
+                except Exception as e:  # noqa: BLE001 - a failed read is counted
+                    print(f"# read failed: {e!r}", file=sys.stderr)
+                    self.failed += 1
+                self._n += 1
+                nxt = max(nxt + READ_PERIOD_S, time.time())
+                continue
+            self.lags.append(self.publisher.published - self.ckpt.applied())
+            wake = min(until, nxt) if self.reading else until
+            time.sleep(max(0.0, min(POLL_S, wake - now)))
 
 
 def check_reads(reads: list[dict], log: gen.ChangeLog) -> int:
@@ -514,23 +541,25 @@ def _session(args, cfg, log, bodies, star, work, env, mem) -> dict:
         t_setup = time.time()
         marks["bootstrap"] = t_setup - t_b
 
-        # -- warm-up: the live load, untimed, while the JIT catches up:
-        # batch walls still fall by a third over the first ~20 s
+        # -- warm-up: the live load, untimed, for a fixed number of
+        # micro-batches (batch 0 was the bootstrap)
         client = Client(args.seed, SnapshotTable(spark, mirror, key_cols=[gen.KEY], **cfg.table_kw),
-                        log, ckpt, publisher, tracer)
+                        log, ckpt, publisher, tracer, cfg.reads)
         publisher.start_at(t_setup, prof.rate_files_s)
-        client.loop(t_setup + WARM_S)
-        n_warm = len(client.reads)
+        client.loop(t_setup + WARM_CAP_S, done=lambda: len(ckpt.commits()) > cfg.warm_batches)
+        n_warm, n_warm_lags = len(client.reads), len(client.lags)
 
         # -- live phase ------------------------------------------------
         t_timed = time.time()
         marks["warm"] = t_timed - t_setup
+        warm_batches = len(ckpt.commits()) - 1
         publisher.t_timed = t_timed
         live_end = t_timed + window_s(prof, args.seconds)
         publisher.stop_at = live_end
         cpu0 = mem.cpu_s()
         client.loop(live_end)
         reads, failed_reads = client.reads[n_warm:], client.failed
+        lags = client.lags[n_warm_lags:] + [r["lag"] for r in reads]
         lag_end = publisher.published - ckpt.applied()
         publisher.join()
         t_live = time.time() - t_timed
@@ -561,7 +590,9 @@ def _session(args, cfg, log, bodies, star, work, env, mem) -> dict:
                   + len(timed_files) - len(fresh))
         detail = {
             "final_ok": final_ok, "bad_reads": bad_reads, "failed_reads": failed_reads,
-            "files": len(timed_files), "reads": len(reads),
+            "files": len(timed_files), "reads": len(reads), "warm_batches": warm_batches,
+            "batch_s": [round(p.durationMs.get("triggerExecution", 0) / 1000, 2)
+                        for p in progress if p.numInputRows > 0],
             "live_s": round(t_live, 3), "stream_error": str(stream_error or "") or None,
             "setup": {k: round(v, 2) for k, v in marks.items()},
         }
@@ -569,7 +600,7 @@ def _session(args, cfg, log, bodies, star, work, env, mem) -> dict:
             "workload": cfg.name, "seed": args.seed, "log": log, "reads": reads,
             "fresh": fresh, "publisher": publisher, "ckpt": ckpt, "progress": progress,
             "history": history, "marks": marks, "timed_files": timed_files,
-            "cpu_live": cpu_live, "lag_end": lag_end, "t_timed": t_timed,
+            "cpu_live": cpu_live, "lag_end": lag_end, "lags": lags, "t_timed": t_timed,
             "t_setup": t_setup, "t_live_end": t_live_end,
             "mirror": mirror, "n_buckets": N_BUCKETS, "rows_final": len(expect),
             "tracer": tracer,
@@ -696,6 +727,8 @@ def e2e_metrics(ctx) -> dict:
 
 def main(argv=None) -> int:
     args = parse_args(argv)
+    # a terminated run still stops its JVM and removes its files
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if not os.path.isdir(os.path.join(ROOT, "changedatacapture_spark")):
         print(f"engine package not found under {ROOT}", file=sys.stderr)
         return 2

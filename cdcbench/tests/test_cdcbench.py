@@ -42,11 +42,11 @@ def test_star_tables_are_deterministic_per_seed():
 
 def test_log_length_covers_the_run():
     """A run never publishes more files than were generated: the
-    warm-up, the (stretched) window and the spare all fit."""
+    longest warm-up, the (stretched) window and the spare all fit."""
     for name, prof in gen.PROFILES.items():
         for seconds in (1, 20, 60):
             n = run.files_needed(prof, seconds)
-            busy = run.WARM_S + run.window_s(prof, seconds)
+            busy = run.WARM_CAP_S + run.window_s(prof, seconds)
             assert n >= (busy + run.SPARE_S) * prof.rate_files_s
             assert run.window_s(prof, seconds) * prof.rate_files_s > run.MIN_FILES
 
@@ -105,7 +105,7 @@ def test_layer_metric_names_match_benchmark_json(tmp_path):
     ctx = {"tracer": tracer, "t_timed": 0.0, "t_live_end": 1.0, "progress": [], "history": [],
            "mirror": str(tmp_path), "n_buckets": 8, "log": gen.ChangeLog(TINY, 1, 6),
            "ckpt": ckpt, "reads": [], "publisher": publisher, "gen_s": 0.0, "timed_files": [1],
-           "marks": {"session": 0.0, "bootstrap": 0.0, "warm": 0.0}, "lag_end": 0,
+           "marks": {"session": 0.0, "bootstrap": 0.0, "warm": 0.0}, "lag_end": 0, "lags": [],
            "cpu_live": 0.0, "rows_final": 1, "workload": "live_cow", "seed": 1,
            "peak_rss_mb": 0.0}
     names = set(layers.layer_metrics(ctx, str(tmp_path), None))
