@@ -240,27 +240,12 @@ class SecondaryIndex:
         argument as the pipeline's post-batch hook: the sync's merge
         already committed, so a crash here only defers the fold to
         the next sync."""
-        did = "none"
-        if self.compact_every is not None:
-            ptr = self.postings._read_pointer()
-            if (
-                ptr is not None
-                and len(ptr.get("runs") or []) >= self.compact_every
-            ):
-                self.postings.compact_runs()
-                did = "minor"
-        if did == "none" and (
-            self.compact_minor_ratio is not None
-            or self.compact_major_ratio is not None
-            or self.compact_max_files_per_bucket is not None
-        ):
-            n = self.postings.compact_by_size(
-                self.compact_minor_ratio,
-                self.compact_major_ratio,
-                self.compact_max_files_per_bucket,
-            )
-            did = "size" if n else "none"
-        return did
+        return self.postings.compact_by_size(
+            self.compact_minor_ratio,
+            self.compact_major_ratio,
+            self.compact_max_files_per_bucket,
+            self.compact_every,
+        )
 
     # -- lookup -----------------------------------------------------------
 

@@ -163,22 +163,23 @@ class CdcPipeline:
         #: copy-on-write amplification would rewrite the table per
         #: micro-batch (see SnapshotTable.merge mode="mor")
         self.merge_mode = merge_mode
-        #: in MoR mode, MINOR-compact (SnapshotTable.compact_runs —
-        #: fold all pending delta runs into one at DELTA cost, base
+        #: maintenance policy, evaluated after every batch by one
+        #: SnapshotTable.compact_by_size call (None disables a tier).
+        #: Run-count tier, for MoR: MINOR-compact (compact_runs — fold
+        #: all pending delta runs into one at DELTA cost, base
         #: untouched) once this many runs are pending: the cadence
         #: that bounds read amplification at base + compact_every
         #: runs without paying a full-table rewrite per trigger. The
         #: MAJOR compact() (fold into the base) stays a scheduled
-        #: maintenance op, like OPTIMIZE. None = caller schedules
-        #: all compaction
+        #: maintenance op, like OPTIMIZE. All tiers None = caller
+        #: schedules all compaction
         self.compact_every = compact_every
-        #: size-based policy (SnapshotTable.compact_by_size): evaluate
-        #: pending-run bytes against the base after every MoR batch —
-        #: minor-fold past ``compact_minor_ratio * base_bytes``,
-        #: major-fold past ``compact_major_ratio * base_bytes``. Byte
-        #: thresholds track real read/write amplification where the
-        #: run-count cadence treats 1 KB ticks and 10 GB backfills
-        #: alike; both policies compose (count fires first if both set)
+        #: byte tiers: minor-fold past ``compact_minor_ratio *
+        #: base_bytes`` of pending runs, major-fold past
+        #: ``compact_major_ratio * base_bytes``. Byte thresholds track
+        #: real read/write amplification where the run-count cadence
+        #: treats 1 KB ticks and 10 GB backfills alike; both policies
+        #: compose (count fires first if both set)
         self.compact_minor_ratio = compact_minor_ratio
         self.compact_major_ratio = compact_major_ratio
         #: file-count tier of the same policy: re-pack (major compact,
@@ -400,35 +401,14 @@ class CdcPipeline:
         finally:
             if multi_consumer:
                 compacted.unpersist()
-        if self.merge_mode == "mor":
-            did = "none"
-            if self.compact_every is not None:
-                ptr = self.table._read_pointer()
-                if (
-                    ptr is not None
-                    and len(ptr.get("runs") or []) >= self.compact_every
-                ):
-                    # MINOR fold: all pending runs collapse into one at
-                    # delta cost (delete masks preserved, base
-                    # untouched). A crash after the merge commit but
-                    # before this fold only defers it to a later batch —
-                    # the fold is a physical rewrite carrying the batch
-                    # id through, so replay idempotence is untouched.
-                    self.table.compact_runs()
-                    did = "minor"
-            if did == "none" and (
-                self.compact_minor_ratio is not None
-                or self.compact_major_ratio is not None
-                or self.compact_max_files_per_bucket is not None
-            ):
-                # byte-budget + file-count policy: same crash-deferral
-                # argument — a missed evaluation re-runs after the
-                # next batch
-                self.table.compact_by_size(
-                    self.compact_minor_ratio,
-                    self.compact_major_ratio,
-                    self.compact_max_files_per_bucket,
-                )
+        # the maintenance policy, in either merge mode: the file-count
+        # tier heals churny clustered copy-on-write merges too
+        self.table.compact_by_size(
+            self.compact_minor_ratio,
+            self.compact_major_ratio,
+            self.compact_max_files_per_bucket,
+            self.compact_every,
+        )
 
     def bootstrap(self, raw: DataFrame, batch_id: int = -1) -> None:
         """Kappa-style historical bootstrap: apply an arbitrarily large

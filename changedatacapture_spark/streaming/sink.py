@@ -36,7 +36,8 @@ import shutil
 import threading
 import time
 from collections.abc import Sequence
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -377,6 +378,263 @@ def _align_key_types(df: DataFrame, table_schema, key_cols) -> DataFrame:
         if want is not None and k in have and have[k] != want:
             out = out.withColumn(k, F.col(k).cast(want))
     return out
+
+
+_MOR_GUARDED = (
+    "merge-on-read does not compose with order-guarded merges: guard "
+    "tombstones must be physically retained, which is the copy-on-write "
+    "path's job"
+)
+
+
+@dataclass
+class _Attempt:
+    """One merge attempt: the pointer it planned against and what it
+    staged under its writer-unique physical id ``pv``."""
+
+    ptr: dict
+    #: committed schema the plan read the table's files under
+    schema: object
+    #: bucket modulus the staged files were routed with
+    n_buckets: int
+    batch_id: int | None
+    pv: int | None = None
+    #: base buckets the commit replaces (found by the probe)
+    touched: list = field(default_factory=list)
+    batch_rows: int = 0
+    #: base buckets whose new files landed under ``pv``
+    written: list = field(default_factory=list)
+    #: merge-on-read run entries the commit appends
+    runs: list = field(default_factory=list)
+
+    @property
+    def base(self) -> int:
+        return int(self.ptr["version"])
+
+
+class _CopyOnWrite:
+    """Copy-on-write merge: each touched bucket is rewritten as its
+    committed rows minus the batch's keys, plus the batch's upserts
+    (the MERGE-equivalence in the module docstring).
+
+    A strategy holds only what differs between merge modes; the plan →
+    stage → commit skeleton in :meth:`SnapshotTable.merge` owns the
+    replay check, table creation, schema evolution, the probe, the
+    manifest overlay, the commit and the retries."""
+
+    #: persist the batch and observe its touched buckets before writing
+    probes = True
+    #: plan the write with adaptive execution off (see
+    #: ``SnapshotTable.merge_static_planning``)
+    static_write = True
+    #: commit even when the batch staged nothing (records its batch id)
+    commits_empty = True
+    #: guard metadata the commit records; None carries the pointer's
+    guard: dict | None = None
+
+    def __init__(self, op_col: str, delete_op: str) -> None:
+        self.op_col = op_col
+        self.delete_op = delete_op
+
+    def initial(self, t, compacted: DataFrame) -> DataFrame:
+        """The table's rows when this batch creates it."""
+        return compacted.filter(F.col(self.op_col) != self.delete_op).drop(
+            self.op_col
+        )
+
+    def check(self, ptr: dict) -> None:
+        # a rewrite reads base buckets only: its output would let stale
+        # run rows outrank the batch
+        if ptr.get("runs"):
+            raise ValueError(
+                "copy-on-write merge on a table with pending merge-on-read "
+                "runs would strand the runs' rows: call compact() to fold "
+                "them in first (or keep merging with mode='mor')"
+            )
+
+    def rebases(self, a: _Attempt, ptr: dict) -> bool:
+        """Whether ``a``'s staged files may be re-pointed at the winner's
+        pointer ``ptr`` after a lost commit, with no job re-run. Sound
+        iff the winner changed nothing this merge read or wrote: every
+        bucket it TOUCHED keeps its planning-time manifest entry
+        (disjoint write sets, the Delta conflict rule) and the schema
+        the plan read its files under is unchanged. On any doubt the
+        merge replans, which is always correct."""
+        if json.loads(ptr["schema"]) != json.loads(a.ptr["schema"]):
+            return False
+        return all(
+            ptr["buckets"].get(str(b)) == a.ptr["buckets"].get(str(b))
+            for b in a.touched
+        )
+
+    @staticmethod
+    def _current(t, a: _Attempt) -> DataFrame | None:
+        """The touched buckets' committed rows (None if no touched
+        bucket holds any), read under the planning-time schema."""
+        paths = [
+            f"{t.path}/v={a.ptr['buckets'][str(b)]}/bucket={b}"
+            for b in a.touched
+            if str(b) in a.ptr["buckets"]
+        ]
+        return t.spark.read.schema(a.schema).parquet(*paths) if paths else None
+
+    def write(self, t, source: DataFrame, a: _Attempt) -> None:
+        upserts = source.filter(F.col(self.op_col) != self.delete_op).drop(
+            self.op_col
+        )
+        current = self._current(t, a)
+        new_data, bucket_local = upserts, False
+        if current is not None:
+            batch_keys = source.select(*t.key_cols)
+            use_broadcast = a.batch_rows <= t.broadcast_key_limit
+            if use_broadcast:
+                batch_keys = F.broadcast(batch_keys)
+            thr = t.bucket_local_merge_bytes
+            bucket_local = use_broadcast and thr is not None
+            if bucket_local:
+                # short-circuit the driver-side scandir sum at the
+                # threshold: a shard-scale table crosses it after one or
+                # two bucket dirs instead of paying an O(touched
+                # buckets) listing per merge (ADVICE r18)
+                seen = 0
+                for b in a.touched:
+                    v = a.ptr["buckets"].get(str(b))
+                    if v is not None:
+                        seen += t._bucket_dir_bytes(v, [b])
+                        if seen >= thr:
+                            break
+                bucket_local = seen >= thr
+            # recover the physical bucket id from the file path (the
+            # partition column is stripped from the data files)
+            kept = current.withColumn("bucket", t._bucket_col()).join(
+                batch_keys, t.key_cols, "left_anti"
+            )
+            # two-sided null backfill: batch may add columns the table
+            # lacks and omit columns the table has
+            if bucket_local:
+                # the kept side is ALREADY bucket-local (every scan
+                # split holds whole files out of bucket dirs, and the
+                # broadcast anti-join adds no exchange), so the table's
+                # rows stream straight from their old files to their
+                # new bucket dir — only the BATCH shuffles into bucket
+                # layout. Repartitioning here would move every kept row
+                # through an exchange: O(touched bucket bytes) of
+                # shuffle per merge instead of O(batch bytes). Cost:
+                # ~one extra (batch-sized) file per touched bucket per
+                # merge, which the file-count compaction tier bounds.
+                upserts = upserts.repartition(t.n_buckets, "bucket")
+            # (hash-join path: the anti-join itself re-keys the kept
+            # side, so bucket locality is gone — the write keeps its
+            # explicit bucket shuffle)
+            new_data = kept.unionByName(upserts, allowMissingColumns=True)
+        # the fresh dir can only hold touched buckets; adopting only
+        # those is discipline
+        touched = set(a.touched)
+        a.written = [
+            b
+            for b in t._write_buckets(
+                new_data, a.pv, dynamic=True, expected_base=a.base,
+                repartition=not bucket_local,
+            )
+            if b in touched
+        ]
+
+
+class _OrderGuarded(_CopyOnWrite):
+    """Order-guarded merge: an incoming row wins only if its
+    ``guard_cols`` tuple exceeds the incumbent's.
+
+    Fixes SURVEY §7.6.2 (the reference applies batches independently,
+    so an earlier-timestamp event arriving a batch late overwrites
+    newer state — accepted there, opt-out here). Deletes are retained
+    as *tombstones* carrying their guard tuple, so a late, older upsert
+    cannot resurrect a newer delete; :meth:`SnapshotTable.read` hides
+    them from the logical view.
+
+    Physically: union the touched buckets' current rows with the batch
+    and take the per-key ``max_by(guard)`` winner — merge IS the
+    compaction operator, so any sequence of guarded merges over any
+    batch split of a log equals one global compaction (the invariant
+    tests/test_property_cdc.py proves). Cost stays proportional to
+    touched buckets + batch, same as copy-on-write. Tombstones persist
+    until :meth:`SnapshotTable.gc_tombstones` compacts the ones older
+    than the source's replay horizon.
+    """
+
+    #: the write compacts whole touched buckets, not just the batch:
+    #: it keeps adaptive planning
+    static_write = False
+
+    def __init__(self, op_col: str, delete_op: str, guard_cols: list) -> None:
+        super().__init__(op_col, delete_op)
+        self.guard = {
+            "op_col": op_col,
+            "delete_op": delete_op,
+            "guard_cols": guard_cols,
+        }
+
+    def initial(self, t, compacted: DataFrame) -> DataFrame:
+        from changedatacapture_spark.operators.cdc import compact_latest
+
+        return compact_latest(compacted, t.key_cols, self.guard["guard_cols"])
+
+    def write(self, t, source: DataFrame, a: _Attempt) -> None:
+        from changedatacapture_spark.operators.cdc import compact_latest
+
+        merged_in = source.drop("bucket")
+        current = self._current(t, a)
+        if current is not None:
+            merged_in = current.unionByName(merged_in, allowMissingColumns=True)
+        winners = compact_latest(merged_in, t.key_cols, self.guard["guard_cols"])
+        a.written = t._write_buckets(
+            winners.withColumn("bucket", t._bucket_col()), a.pv,
+            expected_base=a.base,
+        )
+
+
+class _MergeOnRead(_CopyOnWrite):
+    """Merge-on-read: the batch — deletes riding as a keyed ``_mor_del``
+    mask — appends as one bucket-partitioned delta run and the manifest
+    carries forward untouched. The write reads no table state, so it
+    needs no probe, and write cost is ∝ batch size: a high-churn batch
+    touching every bucket rewrites the WHOLE table under copy-on-write
+    but appends only ~batch-size bytes here (SURVEY §7.5), paid for at
+    read time by one latest-per-key aggregate until a compaction folds
+    the runs."""
+
+    probes = False
+    #: an idle stream tick that lands no bytes and evolves no schema
+    #: commits nothing: a run entry would be pure pointer noise, count
+    #: toward the run-count compaction tier and bloat every read's run
+    #: list
+    commits_empty = False
+
+    def check(self, ptr: dict) -> None:
+        if ptr.get("guard"):
+            raise ValueError(_MOR_GUARDED)
+
+    def rebases(self, a: _Attempt, ptr: dict) -> bool:
+        # appends commute: a lost commit re-commits onto the winner's
+        # run list (run ORDER still serializes last-writer-wins per key)
+        return True
+
+    def write(self, t, source: DataFrame, a: _Attempt) -> None:
+        run = source.withColumn(
+            "_mor_del", F.col(self.op_col) == F.lit(self.delete_op)
+        ).drop(self.op_col)
+        written = t._write_buckets(run, a.pv, expected_base=a.base)
+        if written:
+            # per-file row counts ride the run entry (driver-side footer
+            # reads, no job): they keep estimate_rows_where — and the
+            # index-routing hot-value gate on it — live while runs are
+            # pending, and price MoR read amplification in every scan
+            # report (run_files/run_rows)
+            a.runs = [{
+                "v": a.pv,
+                "batch_id": a.batch_id,
+                "buckets": sorted(written),
+                "fstats": t._footer_fstats(a.pv, written),
+            }]
 
 
 class SnapshotTable:
@@ -2681,22 +2939,53 @@ class SnapshotTable:
         ptr = self._read_pointer()
         if ptr is not None:
             self._adopt_committed_layout(ptr)
-        base = self.version
-        version = base + 1
+        self._replace(df, batch_id, -1 if ptr is None else int(ptr["version"]))
+
+    def _replace(
+        self,
+        df: DataFrame,
+        batch_id: int | None,
+        base: int,
+        guard: dict | None = None,
+        schema_json: str | None = None,
+        records_per_file: int | None = None,
+    ) -> int:
+        """Commit ``df`` as the table's whole contents onto logical
+        version ``base`` (-1 creates the table): one range-clustered
+        write under a fresh physical id, fresh zone maps, vacuum. The
+        pre-write check and the commit CAS both run against ``base``,
+        so two racing creations never share a directory and the loser
+        fails loudly. Returns the physical id written."""
         pv = self._new_data_version()
         written = self._write_buckets(
             df.withColumn("bucket", self._bucket_col()), pv,
-            expected_base=base, range_cluster=True,
+            expected_base=base, records_per_file=records_per_file,
+            range_cluster=True,
         )
         self._commit(
-            version,
+            base + 1,
             batch_id,
             {b: pv for b in written},
-            json.dumps(df.schema.jsonValue()),
+            schema_json or json.dumps(df.schema.jsonValue()),
+            guard,
             expected_base=base,
             data_version=pv,
         )
         self._vacuum()
+        return pv
+
+    @staticmethod
+    def _overlay(buckets: dict, touched, written, pv: int) -> dict[int, int]:
+        """The bucket manifest after a rewrite of ``touched``: each
+        touched bucket drops out (emptied by deletes unless rewritten),
+        each written one points at ``pv``, and every other bucket
+        carries forward by reference."""
+        manifest = {int(b): v for b, v in buckets.items()}
+        for b in touched:
+            manifest.pop(b, None)
+        for b in written:
+            manifest[b] = pv
+        return manifest
 
     def merge(
         self,
@@ -2726,82 +3015,115 @@ class SnapshotTable:
         batch columns raise instead.
 
         ``guard_cols`` (e.g. ``["ts", "seq"]``) switches to the
-        order-guarded mode — see :meth:`_merge_ordered`. Default mode
+        order-guarded mode — see :class:`_OrderGuarded`. Default mode
         is last-batch-wins, matching the reference
         (cdc_stream.py:664-689 applies batches independently).
 
-        ``retry_conflicts`` (default 0 = the original fail-loudly
-        contract) bounds OPTIMISTIC-CONCURRENCY retries on
-        :class:`ConcurrentWriteError` — the Delta conflict-resolution
-        semantics. Every attempt stages its files under a
-        writer-unique physical directory (:meth:`_new_data_version`),
-        so concurrent writers can never touch each other's bytes —
-        whichever side of the commit CAS a writer lands on, the other
-        side's files are exactly what its commit (or replan) computed.
-        A merge that loses the commit race but finds the intervening
-        commits touched a DISJOINT bucket set (same schema, same
-        bucket count, its staged files still on disk) REBASES: a pure
-        manifest-overlay commit, no Spark job re-runs, sound because
-        the losing writer's bucket contents were computed from bucket
-        files the winner provably didn't change. Overlapping buckets,
-        schema/layout drift, or a loss detected before any file was
-        written force a FULL REPLAN against the winner's committed
-        state. Either way both writers' batches end up applied, one
-        commit per writer in the history, until the retry budget is
-        exhausted — then the original loud failure.
-
         ``mode="mor"`` switches to MERGE-ON-READ (the deletion-vector
         analogue; SURVEY §7.5's "merge-on-read for high-churn
-        tables"): instead of rewriting every touched bucket
-        (copy-on-write amplification ∝ bucket size), the batch —
-        deletes riding as a keyed ``_mor_del`` mask — appends as one
-        bucket-partitioned DELTA RUN and the manifest carries forward
-        untouched; write cost is ∝ batch size. Readers fold runs over
-        the base with one map-side-combinable latest-per-key aggregate
-        (``_mor_resolve``); :meth:`compact` folds runs back into a
-        fresh copy-on-write base (the OPTIMIZE cadence bounds read
-        amplification). MoR does not compose with ``guard_cols`` (a
-        guard needs physically retained tombstones), and a ``cow``
-        merge while runs are pending raises rather than stranding run
-        rows. Conflict retries in MoR never re-run the write job:
-        appends commute, so a lost CAS re-commits against the winner's
-        pointer with this run appended (see :meth:`_merge_mor`).
+        tables"; see :class:`_MergeOnRead`): the batch appends as one
+        delta run instead of rewriting every touched bucket. Readers
+        fold runs over the base with one map-side-combinable
+        latest-per-key aggregate (``_mor_resolve``); :meth:`compact`
+        folds runs back into a fresh copy-on-write base (the OPTIMIZE
+        cadence bounds read amplification). MoR does not compose with
+        ``guard_cols`` (a guard needs physically retained tombstones),
+        and a ``cow`` merge while runs are pending raises rather than
+        stranding run rows.
+
+        Every mode runs the same plan → stage → commit skeleton; the
+        mode strategy only writes the staged files. ``retry_conflicts``
+        (default 0 = the original fail-loudly contract) bounds
+        OPTIMISTIC-CONCURRENCY retries on :class:`ConcurrentWriteError`
+        — the Delta conflict-resolution semantics. Every attempt
+        stages its files under a writer-unique physical directory
+        (:meth:`_new_data_version`), so concurrent writers can never
+        touch each other's bytes — whichever side of the commit CAS a
+        writer lands on, the other side's files are exactly what its
+        commit (or replan) computed. Each lost race costs one retry.
+        The next attempt REBASES when it can — a pure manifest-overlay
+        commit onto the winner's pointer, no Spark job re-runs: sound
+        for a bucket rewrite when the intervening commits touched a
+        DISJOINT bucket set under the same schema, and always for a
+        merge-on-read append (appends commute). A changed bucket
+        count, staged files no longer on disk, overlapping buckets,
+        schema drift, or a loss detected before any file was written
+        force a FULL REPLAN against the winner's committed state.
+        Either way both writers' batches end up applied, one commit
+        per writer in the history, until the retry budget is
+        exhausted — then the original loud failure.
         """
+        from pyspark.sql.types import StructType
+
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
-        if batch_id is not None and batch_id == self.last_batch_id():
-            return
-        cur = self._read_pointer()
         if mode == "mor":
-            if guard_cols is not None or (cur and cur.get("guard")):
-                raise ValueError(
-                    "merge-on-read does not compose with order-guarded "
-                    "merges: guard tombstones must be physically "
-                    "retained, which is the copy-on-write path's job"
-                )
-            self._merge_mor(
-                compacted, op_col, delete_op, batch_id, evolve_schema,
-                retry_conflicts,
-            )
-            return
-        if cur and cur.get("runs"):
-            raise ValueError(
-                "copy-on-write merge on a table with pending merge-on-read "
-                "runs would strand the runs' rows: call compact() to fold "
-                "them in first (or keep merging with mode='mor')"
-            )
-        if guard_cols is not None:
-            self._merge_ordered(
-                compacted, list(guard_cols), op_col, delete_op, batch_id,
-                evolve_schema,
-            )
-            return
+            if guard_cols is not None:
+                raise ValueError(_MOR_GUARDED)
+            strategy = _MergeOnRead(op_col, delete_op)
+        elif guard_cols is not None:
+            strategy = _OrderGuarded(op_col, delete_op, list(guard_cols))
+        else:
+            strategy = _CopyOnWrite(op_col, delete_op)
+        staged = None
         for attempt in range(retry_conflicts + 1):
+            # per attempt: after a lost race the winner may have been
+            # this batch's own replay
+            if batch_id is not None and batch_id == self.last_batch_id():
+                return
             try:
-                self._merge_once(
-                    compacted, op_col, delete_op, batch_id, evolve_schema,
-                    try_rebase=retry_conflicts > 0,
+                ptr = self._read_pointer()
+                if ptr is None:
+                    self._replace(
+                        strategy.initial(self, compacted), batch_id, -1,
+                        strategy.guard,
+                    )
+                    return
+                strategy.check(ptr)
+                self._adopt_committed_layout(ptr)
+                schema = StructType.fromJson(json.loads(ptr["schema"]))
+                # before any job: an unsafe type change raises here
+                evolved = StructType(_evolved_fields(
+                    schema, compacted.schema, op_col, evolve_schema,
+                    self.key_cols,
+                ))
+                if staged is not None and not self._rebases(
+                    strategy, staged, ptr
+                ):
+                    staged = None
+                if staged is None:
+                    staged = self._stage(strategy, compacted, ptr, schema, batch_id)
+                if (
+                    not strategy.commits_empty
+                    and not staged.runs
+                    and evolved == schema
+                ):
+                    return
+                version = int(ptr["version"])
+                rebased = version != staged.base
+                self._commit(
+                    version + 1,
+                    batch_id,
+                    self._overlay(
+                        ptr["buckets"], staged.touched, staged.written,
+                        staged.pv,
+                    ),
+                    json.dumps(evolved.jsonValue()),
+                    strategy.guard,
+                    expected_base=version,
+                    fresh_stats=self.stats_on_merge,
+                    # a rebased commit points buckets at files planned
+                    # against an earlier version: carried stats would
+                    # describe the winner's view of content this
+                    # writer replaced
+                    stale_stats_buckets=(
+                        set(staged.touched) | set(staged.written)
+                        if rebased else None
+                    ),
+                    data_version=staged.pv,
+                    runs=(ptr.get("runs") or []) + staged.runs,
                 )
+                self._vacuum()
                 return
             except ConcurrentWriteError:
                 if attempt == retry_conflicts:
@@ -2843,557 +3165,101 @@ class SnapshotTable:
                     else:
                         self.spark.conf.set(key, prior)
 
-    def _merge_once(
-        self,
-        compacted: DataFrame,
-        op_col: str,
-        delete_op: str,
-        batch_id: int | None,
-        evolve_schema: bool,
-        try_rebase: bool = False,
-    ) -> None:
-        """One optimistic merge attempt against the current pointer;
-        raises :class:`ConcurrentWriteError` when it loses the race
-        and (if ``try_rebase``) the cheap manifest rebase was not
-        applicable — the caller's loop replans."""
-        if not self.exists():
-            self.overwrite(
-                compacted.filter(F.col(op_col) != delete_op).drop(op_col), batch_id
+    def _rebases(self, strategy, a: _Attempt, ptr: dict) -> bool:
+        """Whether the files ``a`` staged before losing a commit race
+        may be committed onto the winner's pointer ``ptr`` as they are:
+        the bucket modulus they were routed with still holds, they are
+        still on disk (a winner's vacuum may have collected them), and
+        the strategy's own conflict rule agrees."""
+        buckets = a.written + [b for r in a.runs for b in r["buckets"]]
+        return (
+            a.n_buckets == self.n_buckets
+            and all(
+                os.path.isdir(f"{self.path}/v={a.pv}/bucket={b}")
+                for b in buckets
             )
-            return
-
-        from pyspark.sql.types import StructType
-
-        ptr = self._read_pointer()
-        if ptr.get("runs"):
-            # a concurrent MoR writer appended runs after merge()'s
-            # entry check: this plan reads base buckets only, so its
-            # rewrite would let stale run rows outrank the batch
-            raise ValueError(
-                "copy-on-write merge found pending merge-on-read runs: "
-                "compact() first or merge with mode='mor'"
-            )
-        self._adopt_committed_layout(ptr)
-        base = int(ptr["version"])
-        table_schema = StructType.fromJson(json.loads(ptr["schema"]))
-        evolved_fields = _evolved_fields(
-            table_schema, compacted.schema, op_col, evolve_schema, self.key_cols
+            and strategy.rebases(a, ptr)
         )
 
-        manifest = {int(b): v for b, v in ptr["buckets"].items()}
-        base_manifest = dict(manifest)  # pre-overlay snapshot for rebase
+    def _stage(
+        self, strategy, compacted: DataFrame, ptr: dict, schema,
+        batch_id: int | None,
+    ) -> _Attempt:
+        """Plan one merge attempt against ``ptr`` and write its files.
+
+        Files land under this attempt's writer-unique ``pv`` dir — a
+        racing writer (committed or in flight) can never touch them,
+        and this write can never touch the winner's, which is what
+        makes both the rebase and the full replan sound in a true
+        race."""
+        from pyspark.sql import Observation
+
+        a = _Attempt(ptr, schema, self.n_buckets, batch_id)
         # committed key types govern hash routing — see _align_key_types
-        aligned = _align_key_types(compacted, table_schema, self.key_cols)
-        # persist once: the batch plan (parse + compact shuffle) feeds
-        # three consumers (touched-bucket probe, anti-join broadcast,
-        # upsert union) — without this it would re-execute per consumer
-        source = aligned.withColumn("bucket", self._bucket_col()).persist()
+        source = _align_key_types(
+            compacted, schema, self.key_cols
+        ).withColumn("bucket", self._bucket_col())
+        if strategy.probes:
+            # persist once: the batch plan (parse + compact shuffle)
+            # feeds the probe and the write's consumers (anti-join
+            # broadcast, upsert union) — without this it would
+            # re-execute per consumer
+            source = source.persist()
         try:
-            # bounded driver metadata: the touched-bucket set and the
-            # batch size that decides the anti-join strategy below,
-            # OBSERVED during the cache-materializing noop write
-            # instead of a separate groupBy + collect — the old probe
-            # added an aggregation exchange and a collect round, which
-            # under AQE ran as two extra jobs per micro-batch (r19
-            # event-log attribution: 5 probe jobs -> 3, and 1 with
-            # static planning). collect_set is ≤ n_buckets values.
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            with self._static_merge_planning():
-                (
-                    source.observe(
-                        obs,
-                        F.collect_set("bucket").alias("b"),
-                        F.count(F.lit(1)).alias("n"),
+            if strategy.probes:
+                # bounded driver metadata: the touched-bucket set and
+                # the batch size that decides the anti-join strategy,
+                # OBSERVED during the cache-materializing noop write
+                # instead of a separate groupBy + collect — the old
+                # probe added an aggregation exchange and a collect
+                # round, which under AQE ran as two extra jobs per
+                # micro-batch (r19 event-log attribution: 5 probe jobs
+                # -> 3, and 1 with static planning). collect_set is
+                # ≤ n_buckets values.
+                obs = Observation()
+                with self._static_merge_planning():
+                    (
+                        source.observe(
+                            obs,
+                            F.collect_set("bucket").alias("b"),
+                            F.count(F.lit(1)).alias("n"),
+                        )
+                        .write.format("noop")
+                        .mode("overwrite")
+                        .save()
                     )
-                    .write.format("noop")
-                    .mode("overwrite")
-                    .save()
-                )
-            touched = sorted(obs.get["b"])
-            batch_rows = int(obs.get["n"])
-            upserts = source.filter(F.col(op_col) != delete_op).drop(op_col)
-            version = base + 1
-            pv = self._new_data_version()
-
-            live_touched = [b for b in touched if b in manifest]
-            if live_touched:
-                current_paths = [
-                    f"{self.path}/v={manifest[b]}/bucket={b}" for b in live_touched
-                ]
-                # recover the physical bucket id from the file path (the
-                # partition column is stripped from the data files)
-                current = (
-                    self.spark.read.schema(table_schema)
-                    .parquet(*current_paths)
-                    .withColumn("bucket", self._bucket_col())
-                )
-                batch_keys = source.select(*self.key_cols)
-                use_broadcast = batch_rows <= self.broadcast_key_limit
-                if use_broadcast:
-                    batch_keys = F.broadcast(batch_keys)
-                thr = self.bucket_local_merge_bytes
-                bucket_local = use_broadcast and thr is not None
-                if bucket_local:
-                    # short-circuit the driver-side scandir sum at the
-                    # threshold: a shard-scale table crosses it after
-                    # one or two bucket dirs instead of paying an
-                    # O(touched buckets) listing per merge (ADVICE r18)
-                    seen = 0
-                    for b in live_touched:
-                        seen += self._bucket_dir_bytes(manifest[b], [b])
-                        if seen >= thr:
-                            break
-                    bucket_local = seen >= thr
-                kept = current.join(batch_keys, self.key_cols, "left_anti")
-                # two-sided null backfill: batch may add columns the
-                # table lacks and omit columns the table has
-                if bucket_local:
-                    # the kept side is ALREADY bucket-local (every scan
-                    # split holds whole files out of bucket dirs, and
-                    # the broadcast anti-join adds no exchange), so the
-                    # table's rows stream straight from their old files
-                    # to their new bucket dir — only the BATCH shuffles
-                    # into bucket layout. The old repartition here moved
-                    # every kept row through an exchange: O(touched
-                    # bucket bytes) of shuffle per merge that is now
-                    # O(batch bytes). Cost: ~one extra (batch-sized)
-                    # file per touched bucket per merge, which the
-                    # file-count compaction tier already bounds.
-                    new_data = kept.unionByName(
-                        upserts.repartition(self.n_buckets, "bucket"),
-                        allowMissingColumns=True,
-                    )
-                else:
-                    # hash-join path: the anti-join itself re-keys the
-                    # kept side, so bucket locality is gone — keep the
-                    # explicit bucket shuffle before the write
-                    new_data = kept.unionByName(
-                        upserts, allowMissingColumns=True
-                    )
-            else:
-                new_data = upserts
-                bucket_local = False
-
-            # files land under this attempt's unique pv dir — a racing
-            # writer (committed or in flight) can never touch them, and
-            # this write can never touch the winner's (what makes both
-            # the disjoint-bucket rebase AND the full replan sound in a
-            # true race). Manifest adoption restricted to THIS batch's
-            # touched buckets out of discipline — the fresh dir can
-            # only contain them anyway.
-            touched_set = set(touched)
-            with self._static_merge_planning():
-                written = [
-                    b
-                    for b in self._write_buckets(
-                        new_data, pv, dynamic=True, expected_base=base,
-                        repartition=not bucket_local,
-                    )
-                    if b in touched_set
-                ]
+                a.touched = sorted(obs.get["b"])
+                a.batch_rows = int(obs.get["n"])
+            a.pv = self._new_data_version()
+            with (
+                self._static_merge_planning()
+                if strategy.static_write
+                else nullcontext()
+            ):
+                strategy.write(self, source, a)
         except ConcurrentWriteError:
             raise
         except Exception as exc:
             # a racing winner's post-commit vacuum may delete the base
             # files this plan was reading mid-job (the documented
             # pinned-reader caveat). If the pointer moved since
-            # planning, the failure IS a write conflict — surface it
-            # as one so the caller's retry loop replans against the
-            # winner's state instead of dying on a raw read error. A
-            # failure with the pointer unmoved is a genuine error.
-            if self.version != base:
+            # planning, the failure IS a write conflict — surface it as
+            # one so the retry loop replans against the winner's state
+            # instead of dying on a raw read error. A failure with the
+            # pointer unmoved is a genuine error.
+            if self.version != a.base:
                 raise ConcurrentWriteError(
                     f"concurrent writer detected on {self.path}: the "
                     f"merge job failed and the pointer moved from "
-                    f"{base} to {self.version} while it ran — the "
+                    f"{a.base} to {self.version} while it ran — the "
                     f"winner's vacuum likely removed this plan's input "
                     f"files; re-read and retry the batch"
                 ) from exc
             raise
         finally:
-            source.unpersist()
-        for b in touched:
-            manifest.pop(b, None)  # bucket emptied by deletes unless rewritten
-        for b in written:
-            manifest[b] = pv
-
-        merged_schema = StructType(evolved_fields)
-        schema_json = json.dumps(merged_schema.jsonValue())
-        try:
-            self._commit(
-                version,
-                batch_id,
-                manifest,
-                schema_json,
-                expected_base=base,
-                fresh_stats=self.stats_on_merge,
-                data_version=pv,
-            )
-        except ConcurrentWriteError:
-            if not (
-                try_rebase
-                and self._rebase_commit(
-                    base_manifest, touched, written, pv, batch_id,
-                    schema_json,
-                )
-            ):
-                # overlapping buckets / schema drift / clobbered files /
-                # third writer: the caller's retry loop replans from
-                # the winner's committed state
-                raise
-        self._vacuum()
-
-    def _rebase_commit(
-        self,
-        base_manifest: dict[int, int],
-        touched: list[int],
-        written: list[int],
-        version_written: int,
-        batch_id: int | None,
-        schema_json: str,
-    ) -> bool:
-        """Attempt the cheap optimistic-concurrency rebase after a lost
-        commit race: re-point the already-written bucket files at the
-        winner's pointer, WITHOUT re-running any Spark job.
-
-        Sound iff the winner(s) provably did not change anything this
-        merge read or wrote: every bucket this merge TOUCHED must have
-        the same manifest entry now as at planning time (disjoint
-        write sets — the Delta conflict rule), the schema and bucket
-        count must be unchanged (layout drift invalidates routing and
-        column alignment), and this writer's orphaned files must still
-        exist (a winner whose commit left ``v=version_written``
-        unreferenced lets vacuum collect them). Returns False on any
-        doubt — the caller replans from scratch, which is always
-        correct. Carried zone-map stats for the rebased buckets are
-        dropped via ``stale_stats_buckets`` (they would otherwise
-        describe the winner's view of content this writer replaced).
-        """
-        ptr = self._read_pointer()
-        if ptr is None:
-            return False
-        if ptr.get("runs"):
-            # winner switched to merge-on-read: an overlay commit would
-            # drop or misorder its runs — replan (which raises on runs)
-            return False
-        cur = int(ptr["version"])
-        if int(ptr.get("n_buckets") or self.n_buckets) != self.n_buckets:
-            return False
-        if json.loads(ptr["schema"]) != json.loads(schema_json):
-            return False
-        cur_manifest = {int(b): v for b, v in ptr["buckets"].items()}
-        for b in touched:
-            if cur_manifest.get(b) != base_manifest.get(b):
-                return False
-        for b in written:
-            if not os.path.isdir(f"{self.path}/v={version_written}/bucket={b}"):
-                return False
-        new_manifest = dict(cur_manifest)
-        for b in touched:
-            new_manifest.pop(b, None)
-        for b in written:
-            new_manifest[b] = version_written
-        try:
-            self._commit(
-                cur + 1,
-                batch_id,
-                new_manifest,
-                schema_json,
-                expected_base=cur,
-                fresh_stats=self.stats_on_merge,
-                stale_stats_buckets=set(touched) | set(written),
-                data_version=version_written,
-            )
-        except ConcurrentWriteError:
-            return False
-        return True
-
-    def _merge_mor(
-        self,
-        compacted: DataFrame,
-        op_col: str,
-        delete_op: str,
-        batch_id: int | None,
-        evolve_schema: bool,
-        retry_conflicts: int,
-    ) -> None:
-        """Merge-on-read apply: write the batch once as a delta run,
-        commit it onto the runs list. The write never reads table
-        state, so a lost commit race needs NO job re-run — the retry
-        loop re-reads the winner's pointer, recomputes the evolved
-        schema against it, and re-commits with this run appended
-        (append-only merges commute; run ORDER still serializes
-        last-writer-wins per key). Only layout drift (bucket count —
-        this run's files were routed with the planning-time modulus)
-        or a guard appearing forces the loud failure.
-
-        Write amplification is the point: a high-churn batch touching
-        every bucket rewrites the WHOLE table under copy-on-write but
-        appends only ~batch-size bytes here — the SURVEY §7.5
-        merge-on-read case for 100 TB CDC tables, paid for at read
-        time by one extra latest-per-key hash aggregate until
-        :meth:`compact` folds the runs.
-        """
-        from pyspark.sql.types import StructType
-
-        if not self.exists():
-            self.overwrite(
-                compacted.filter(F.col(op_col) != delete_op).drop(op_col),
-                batch_id,
-            )
-            return
-        # ONE retry budget shared by both phases (the documented
-        # retry_conflicts bound): the write phase consumes it when the
-        # pre-write economy check trips (a winner landed between the
-        # pointer read and the write — replanning is just re-reading
-        # the pointer, but key alignment and schema evolution must
-        # track the winner's committed schema, so both re-derive per
-        # attempt), and the commit phase consumes the remainder on
-        # lost CAS races.
-        budget = retry_conflicts
-        while True:
-            ptr = self._read_pointer()
-            self._adopt_committed_layout(ptr)
-            base = int(ptr["version"])
-            table_schema = StructType.fromJson(json.loads(ptr["schema"]))
-            aligned = _align_key_types(compacted, table_schema, self.key_cols)
-            run_df = (
-                aligned.withColumn(
-                    "_mor_del", F.col(op_col) == F.lit(delete_op)
-                )
-                .drop(op_col)
-                .withColumn("bucket", self._bucket_col())
-            )
-            # the run's LOGICAL schema (no op/_mor_del/bucket) drives
-            # the committed-schema evolution, exactly like the cow path
-            batch_fields = StructType(
-                [
-                    f
-                    for f in run_df.schema.fields
-                    if f.name not in ("_mor_del", "bucket")
-                ]
-            )
-            pv = self._new_data_version()
-            try:
-                # delta-run appends are batch-sized by construction at
-                # every scale: static planning (see _merge_once)
-                with self._static_merge_planning():
-                    written = self._write_buckets(
-                        run_df, pv, expected_base=base
-                    )
-            except ConcurrentWriteError:
-                if budget == 0:
-                    raise
-                budget -= 1
-                if (
-                    batch_id is not None
-                    and batch_id == self.last_batch_id()
-                ):
-                    return  # the racing winner WAS this batch's replay
-                continue
-            # empty micro-batch (idle stream tick): no bytes landed, so
-            # appending a run entry would be pure pointer noise — it
-            # would count toward the pipeline's compact_every cadence
-            # and bloat every future read's run list. Record nothing
-            # unless the (empty) batch still evolves the schema.
-            # per-file row counts ride the run entry (driver-side
-            # footer reads, no job): they keep estimate_rows_where —
-            # and the index-routing hot-value gate on it — live while
-            # runs are pending, and price MoR read amplification in
-            # every scan report (run_files/run_rows)
-            run_entry = (
-                {
-                    "v": pv,
-                    "batch_id": batch_id,
-                    "buckets": sorted(written),
-                    "fstats": self._footer_fstats(pv, written),
-                }
-                if written
-                else None
-            )
-            break
-        while True:
-            ptr = self._read_pointer()
-            cur = int(ptr["version"])
-            if int(ptr.get("n_buckets") or self.n_buckets) != self.n_buckets:
-                raise ConcurrentWriteError(
-                    f"concurrent rebucket detected on {self.path}: this "
-                    f"run's files are routed with n_buckets="
-                    f"{self.n_buckets}; re-apply the batch"
-                )
-            if ptr.get("guard"):
-                raise ConcurrentWriteError(
-                    f"table {self.path} became order-guarded while this "
-                    f"merge-on-read apply ran; re-apply via cow"
-                )
-            table_schema = StructType.fromJson(json.loads(ptr["schema"]))
-            evolved = _evolved_fields(
-                table_schema, batch_fields, op_col, evolve_schema,
-                self.key_cols,
-            )
-            evolved_json = json.dumps(StructType(evolved).jsonValue())
-            if run_entry is None and json.loads(evolved_json) == json.loads(
-                ptr["schema"]
-            ):
-                return  # empty batch, schema unchanged: nothing to commit
-            try:
-                self._commit(
-                    cur + 1,
-                    batch_id,
-                    {int(b): v for b, v in ptr["buckets"].items()},
-                    evolved_json,
-                    expected_base=cur,
-                    fresh_stats=False,
-                    data_version=pv,
-                    runs=(ptr.get("runs") or [])
-                    + ([run_entry] if run_entry else []),
-                )
-                self._vacuum()
-                return
-            except ConcurrentWriteError:
-                if budget == 0:
-                    raise
-                budget -= 1
-                # idempotence across the race: if the winner WAS this
-                # batch's replay, stop instead of double-appending
-                if (
-                    batch_id is not None
-                    and batch_id == self.last_batch_id()
-                ):
-                    return
-
-    def _merge_ordered(
-        self,
-        compacted: DataFrame,
-        guard_cols: list[str],
-        op_col: str,
-        delete_op: str,
-        batch_id: int | None,
-        evolve_schema: bool,
-    ) -> None:
-        """Order-guarded merge: an incoming row wins only if its
-        ``guard_cols`` tuple exceeds the incumbent's.
-
-        Fixes SURVEY §7.6.2 (the reference applies batches
-        independently, so an earlier-timestamp event arriving a batch
-        late overwrites newer state — accepted there, opt-out here).
-        Deletes are retained as *tombstones* carrying their guard
-        tuple, so a late, older upsert cannot resurrect a newer
-        delete; :meth:`read` hides them from the logical view.
-
-        Physically: union the touched buckets' current rows with the
-        batch and take the per-key ``max_by(guard)`` winner — merge
-        IS the compaction operator, so any sequence of guarded merges
-        over any batch split of a log equals one global compaction
-        (the invariant tests/test_property_cdc.py proves). Cost stays
-        proportional to touched buckets + batch, same as the default
-        mode. Tombstones persist until :meth:`gc_tombstones` compacts
-        the ones older than the source's replay horizon.
-        """
-        from pyspark.sql.types import StructType
-
-        from changedatacapture_spark.operators.cdc import compact_latest
-
-        guard_meta = {
-            "op_col": op_col,
-            "delete_op": delete_op,
-            "guard_cols": guard_cols,
-        }
-        if not self.exists():
-            # writer-unique staging + pre-write check, same as every
-            # other path: two concurrent creations must not share a
-            # physical directory (the loser's static overwrite would
-            # wipe the winner's committed v=0 files; the commit CAS
-            # alone cannot undo bytes already clobbered)
-            winners = compact_latest(compacted, self.key_cols, guard_cols)
-            pv = self._new_data_version()
-            written = self._write_buckets(
-                winners.withColumn("bucket", self._bucket_col()), pv,
-                expected_base=-1,
-            )
-            self._commit(
-                0,
-                batch_id,
-                {b: pv for b in written},
-                json.dumps(winners.schema.jsonValue()),
-                guard_meta,
-                expected_base=-1,
-                data_version=pv,
-            )
-            self._vacuum()
-            return
-
-        ptr = self._read_pointer()
-        self._adopt_committed_layout(ptr)
-        base = int(ptr["version"])
-        table_schema = StructType.fromJson(json.loads(ptr["schema"]))
-        evolved_fields = _evolved_fields(
-            table_schema, compacted.schema, op_col, evolve_schema, self.key_cols
-        )
-
-        manifest = {int(b): v for b, v in ptr["buckets"].items()}
-        aligned = _align_key_types(compacted, table_schema, self.key_cols)
-        source = aligned.withColumn("bucket", self._bucket_col()).persist()
-        try:
-            # same observed cache-materializing probe as _merge_once
-            # (one static job instead of distinct + collect under AQE);
-            # the guarded WRITE below keeps adaptive planning — it
-            # compacts whole touched buckets, not just the batch
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            with self._static_merge_planning():
-                (
-                    source.observe(
-                        obs, F.collect_set("bucket").alias("b")
-                    )
-                    .write.format("noop")
-                    .mode("overwrite")
-                    .save()
-                )
-            touched = sorted(obs.get["b"])
-            version = base + 1
-            pv = self._new_data_version()
-            live_touched = [b for b in touched if b in manifest]
-            if live_touched:
-                current_paths = [
-                    f"{self.path}/v={manifest[b]}/bucket={b}"
-                    for b in live_touched
-                ]
-                current = self.spark.read.schema(table_schema).parquet(
-                    *current_paths
-                )
-                merged_in = current.unionByName(
-                    source.drop("bucket"), allowMissingColumns=True
-                )
-            else:
-                merged_in = source.drop("bucket")
-            winners = compact_latest(merged_in, self.key_cols, guard_cols)
-            written = self._write_buckets(
-                winners.withColumn("bucket", self._bucket_col()), pv,
-                expected_base=base,
-            )
-        finally:
-            source.unpersist()
-        for b in touched:
-            manifest.pop(b, None)
-        for b in written:
-            manifest[b] = pv
-
-        merged_schema = StructType(evolved_fields)
-        self._commit(
-            version,
-            batch_id,
-            manifest,
-            json.dumps(merged_schema.jsonValue()),
-            guard_meta,
-            expected_base=base,
-            fresh_stats=self.stats_on_merge,
-            data_version=pv,
-        )
-        self._vacuum()
+            if strategy.probes:
+                source.unpersist()
+        return a
 
     def compact(self, target_file_bytes: int | None = None) -> int:
         """Physically compact the table: rewrite every live bucket at
@@ -3442,16 +3308,23 @@ class SnapshotTable:
         # whose committed layout ALREADY meets the target is a
         # metadata no-op — rewriting it would re-read and re-write the
         # whole table to reproduce what is on disk. "Meets the target":
-        # no pending MoR runs (they must fold), no oversized file
-        # (> 2x target: needs splitting), and at most one sub-half-
-        # target file per writer-task slice per bucket (the remainder
-        # file every row-capped write leaves at each slice boundary —
-        # with fewer candidates than that, bin-packing cannot reduce
-        # the file count meaningfully). The check is driver-side
-        # scandir of the live bucket dirs, the same bounded-metadata
-        # class as the manifest; at 100 TB it replaces a full-table
-        # rewrite per maintenance tick with a listing.
-        if target_file_bytes is not None and not (ptr.get("runs") or []):
+        # no pending MoR runs (they must fold), every bucket at ONE
+        # data version (a merge-fragmented manifest pins many version
+        # dirs and holds bucket-local merge files the rewrite
+        # re-clusters), no oversized file (> 2x target: needs
+        # splitting), and at most one sub-half-target file per
+        # writer-task slice per bucket (the remainder file every
+        # row-capped write leaves at each slice boundary — with fewer
+        # candidates than that, bin-packing cannot reduce the file
+        # count meaningfully). The check is driver-side scandir of the
+        # live bucket dirs, the same bounded-metadata class as the
+        # manifest; at 100 TB it replaces a full-table rewrite per
+        # maintenance tick with a listing.
+        if (
+            target_file_bytes is not None
+            and not (ptr.get("runs") or [])
+            and len(set(ptr["buckets"].values())) == 1
+        ):
             width = max(
                 self.n_buckets,
                 self.spark.sparkContext.defaultParallelism,
@@ -3481,9 +3354,7 @@ class SnapshotTable:
                     break
             if meets:
                 return n_files_now
-        full = self.read(include_tombstones=True).withColumn(
-            "bucket", self._bucket_col()
-        )
+        full = self.read(include_tombstones=True)
         rpf = None
         if target_file_bytes is not None:
             on_disk = self.base_bytes() + self.pending_run_bytes()
@@ -3494,18 +3365,10 @@ class SnapshotTable:
                 rpf = max(
                     1, int(n_rows * target_file_bytes / on_disk)
                 )
-        base = int(ptr["version"])
-        version = base + 1
-        pv = self._new_data_version()
-        written = self._write_buckets(
-            full, pv, expected_base=base, records_per_file=rpf,
-            range_cluster=True,
+        pv = self._replace(
+            full, ptr.get("batch_id"), int(ptr["version"]),
+            schema_json=ptr["schema"], records_per_file=rpf,
         )
-        self._commit(
-            version, ptr.get("batch_id"), {b: pv for b in written},
-            ptr["schema"], expected_base=base, data_version=pv,
-        )
-        self._vacuum()
         root = f"{self.path}/v={pv}"
         return sum(
             1
@@ -3673,6 +3536,7 @@ class SnapshotTable:
         minor_ratio: float | None = None,
         major_ratio: float | None = None,
         max_files_per_bucket: int | None = None,
+        compact_every: int | None = None,
     ) -> str:
         """Size-based compaction policy — one evaluation of the
         byte-budget rule production MoR tables run instead of a
@@ -3705,12 +3569,30 @@ class SnapshotTable:
         repacks on its next policy evaluation, no operator action.
         Evaluated on pure-CoW tables too (runs aren't a precondition
         for fragmentation).
+
+        ``compact_every`` adds the RUN-COUNT tier, checked first: a
+        minor fold once that many runs (and at least two) are pending
+        — the cadence that bounds read amplification at base +
+        ``compact_every`` runs without a full-table rewrite per
+        trigger. This method is the one place the maintenance tier is
+        picked (``CdcPipeline`` and ``SecondaryIndex`` evaluate their
+        policy through it after every batch or sync); with every tier
+        disabled it returns ``"none"`` without reading the pointer. A
+        crash after the caller's commit but before a fold only defers
+        the fold to the next evaluation: folds are physical rewrites
+        that carry the batch id through.
         """
+        tiers = (minor_ratio, major_ratio, max_files_per_bucket, compact_every)
+        if all(x is None for x in tiers):
+            return "none"
         ptr = self._read_pointer()
         if ptr is None:
             return "none"
         runs = ptr.get("runs") or []
         if runs:
+            if compact_every is not None and len(runs) >= max(2, compact_every):
+                self.compact_runs()
+                return "minor"
             pending = self.pending_run_bytes()
             base = max(self.base_bytes(), 1)
             if major_ratio is not None and pending >= major_ratio * base:
@@ -4114,7 +3996,7 @@ class SnapshotTable:
 
         A tombstone's only job is to fend off a LATE upsert with a
         smaller guard tuple than the delete's (see
-        :meth:`_merge_ordered`). Once the source can no longer replay
+        :class:`_OrderGuarded`). Once the source can no longer replay
         events older than ``horizon`` (e.g. the Kafka retention bound
         or the stream's watermark), tombstones whose *first* guard
         value is ``< horizon`` are dead weight — without GC they
@@ -4173,14 +4055,11 @@ class SnapshotTable:
             kept.withColumn("bucket", self._bucket_col()), pv,
             expected_base=base,
         )
-        for b in touched:
-            manifest.pop(b, None)  # bucket may hold only expired tombstones
-        for b in written:
-            manifest[b] = pv
         # batch_id and guard carry forward: GC is a physical rewrite,
         # not a logical batch — replay idempotence must survive it
         self._commit(
-            version, ptr.get("batch_id"), manifest, ptr["schema"],
+            version, ptr.get("batch_id"),
+            self._overlay(manifest, touched, written, pv), ptr["schema"],
             expected_base=base, data_version=pv,
         )
         self._vacuum()

@@ -4,7 +4,9 @@
   already meeting the byte target resolves as a metadata no-op (no
   rewrite, no new version); a fragmented layout still rewrites.
 - The static-merge-planning window restores the session's adaptive
-  conf exactly once under concurrent merges (depth-counted).
+  conf exactly once under concurrent merges (depth-counted), and a
+  merge whose write raises leaves conf, cache and pointer as they
+  were, in every merge mode.
 - The observed merge probe yields the same touched-bucket set and
   batch size the old groupBy probe did (pinned indirectly: merges with
   deletes, empty batches, and evolution all hash-exact in the core
@@ -65,6 +67,39 @@ class TestCompactFastPath:
         assert t.version == before_version
         assert _files_of(t) == before_files
 
+    def test_partial_merge_then_compact_leaves_one_data_version(
+        self, spark, tmp_path
+    ):
+        """A merge that rewrites a subset of buckets leaves the manifest
+        on two data versions; a size-targeted compact must consolidate
+        them even when every file already meets the target."""
+        t = SnapshotTable(
+            spark, str(tmp_path / "tp"), ["k"], n_buckets=4,
+            cluster_cols=["v"],
+        )
+        t.overwrite(
+            spark.createDataFrame(
+                [(k, k % 97, "x" * 32) for k in range(4000)],
+                "k long, v long, p string",
+            ),
+            batch_id=0,
+        )
+        t.merge(
+            spark.createDataFrame(
+                [(0, 1, "y" * 32, "u")], "k long, v long, p string, op string"
+            ),
+            batch_id=1,
+        )
+        ptr = t._read_pointer()
+        assert len(set(ptr["buckets"].values())) == 2  # fixture sanity
+        before = sorted(tuple(r) for r in t.read().collect())
+        sizes = [os.path.getsize(f) for f in _files_of(t)]
+        target = max(sizes)
+        assert min(sizes) * 2 >= target  # every file meets the target
+        t.compact(target_file_bytes=target)
+        assert len(set(t._read_pointer()["buckets"].values())) == 1
+        assert sorted(tuple(r) for r in t.read().collect()) == before
+
     def test_fragmented_layout_still_rewrites(self, spark, tmp_path):
         t = SnapshotTable(
             spark, str(tmp_path / "t2"), ["k"], n_buckets=4,
@@ -109,6 +144,60 @@ class TestCompactFastPath:
 
 
 class TestStaticMergePlanning:
+    @pytest.mark.parametrize("mode", ["cow", "guarded", "mor"])
+    def test_failed_write_restores_conf_cache_and_pointer(
+        self, spark, tmp_path, monkeypatch, mode
+    ):
+        """A merge whose write job raises leaves the session exactly
+        as the caller had it: adaptive execution at the caller's value,
+        the batch unpersisted, the pointer unmoved."""
+        kw = {"guard_cols": ["ts"]} if mode == "guarded" else {"mode": mode}
+        t = SnapshotTable(spark, str(tmp_path / mode), ["k"], n_buckets=2)
+        t.merge(
+            spark.createDataFrame(
+                [(k, "c", 1, k) for k in range(10)],
+                "k long, op string, ts long, v long",
+            ),
+            batch_id=0,
+            **kw,
+        )
+        version = t.version
+
+        persisted = []
+        frame_cls = type(spark.range(1))
+        orig_persist = frame_cls.persist
+
+        def persist(self, *a, **k):
+            persisted.append(self)
+            return orig_persist(self, *a, **k)
+
+        def failing_write(self, *a, **k):
+            raise RuntimeError("injected write failure")
+
+        monkeypatch.setattr(frame_cls, "persist", persist)
+        monkeypatch.setattr(SnapshotTable, "_do_write_buckets", failing_write)
+        key = "spark.sql.adaptive.enabled"
+        prior = spark.conf.get(key)
+        spark.conf.set(key, "true")
+        try:
+            with pytest.raises(RuntimeError, match="injected write failure"):
+                t.merge(
+                    spark.createDataFrame(
+                        [(1, "u", 2, 100)], "k long, op string, ts long, v long"
+                    ),
+                    batch_id=1,
+                    **kw,
+                )
+            assert spark.conf.get(key) == "true"
+        finally:
+            spark.conf.set(key, prior)
+        # merge-on-read reads no table state: nothing to persist
+        assert bool(persisted) == (mode != "mor")
+        for df in persisted:
+            level = df.storageLevel
+            assert not (level.useMemory or level.useDisk)
+        assert t.version == version
+
     def test_concurrent_windows_restore_conf_once(self, spark, tmp_path):
         t1 = SnapshotTable(spark, str(tmp_path / "a"), ["k"], n_buckets=2)
         t2 = SnapshotTable(spark, str(tmp_path / "b"), ["k"], n_buckets=2)

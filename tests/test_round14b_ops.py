@@ -144,6 +144,32 @@ class TestSecondaryIndex:
             [1] + [x for x in range(20) if x % 3 == 2]
         )
 
+    def test_sync_reports_the_tier_that_ran(self, spark, tmp_path):
+        """The incremental sync's ``maintenance`` field names the tier
+        that ran: ``none`` when a policy is set but nothing is due,
+        ``minor`` once the run-count tier folds the posting runs."""
+        t = _mk_table(spark, tmp_path)
+        idx = SecondaryIndex(
+            spark, t, "band", postings_mode="mor", compact_every=2,
+            compact_max_files_per_bucket=1000,
+        )
+        idx.sync()
+        reports = []
+        for i, band in enumerate((2, 0), start=1):
+            t.merge(
+                spark.createDataFrame(
+                    [(1, band, "p1", "u")],
+                    "k long, band long, payload string, op string",
+                ),
+                batch_id=i,
+            )
+            reports.append(idx.sync()["maintenance"])
+        assert reports == ["none", "minor"]
+        assert len(idx.postings._read_pointer()["runs"]) == 1
+        assert sorted(r.k for r in idx.lookup_keys(0).collect()) == sorted(
+            [1] + [x for x in range(20) if x % 3 == 0]
+        )
+
     def test_update_to_null_retracts_posting(self, spark, tmp_path):
         # the indexed column transitioning non-null → NULL must emit a
         # NULL post-image in the CDF (not the coalesce'd OLD value —

@@ -332,17 +332,19 @@ def _bucket_of(spark, t, k):
     )
 
 
-def _race(spark, tmp_path, monkeypatch, k1, k2, retry):
+def _race(spark, tmp_path, monkeypatch, k1, k2, retry, mode="cow"):
     """Seed a table, then have t2 commit k2 while t1's merge of k1 is
-    mid-write. Returns (t1, write_calls_by_t1)."""
+    mid-write. ``mode="guarded"`` runs every merge order-guarded on a
+    ``ts`` column that rises with each event. Returns (t1,
+    write_calls_by_t1)."""
+    guard = {"guard_cols": ["ts"]} if mode == "guarded" else {}
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k long, op string, ts long, v long")
+
     path = str(tmp_path / "t")
     seed = SnapshotTable(spark, path, ["k"], n_buckets=2)
-    seed.merge(
-        spark.createDataFrame(
-            [(k1, "c", 10), (k2, "c", 20)], "k long, op string, v long"
-        ),
-        batch_id=0,
-    )
+    seed.merge(batch([(k1, "c", 1, 10), (k2, "c", 1, 20)]), batch_id=0, **guard)
     t1 = SnapshotTable(spark, path, ["k"], n_buckets=2)
     t2 = SnapshotTable(spark, path, ["k"], n_buckets=2)
 
@@ -359,29 +361,25 @@ def _race(spark, tmp_path, monkeypatch, k1, k2, retry):
             # the winner lands AFTER the loser's files are on disk but
             # BEFORE its commit — the commit-time race the rebase covers
             fired.append(True)
-            t2.merge(
-                spark.createDataFrame(
-                    [(k2, "u", 99)], "k long, op string, v long"
-                ),
-                batch_id=100,
-            )
+            t2.merge(batch([(k2, "u", 2, 99)]), batch_id=100, **guard)
         return out
 
     monkeypatch.setattr(SnapshotTable, "_write_buckets", hook)
     t1.merge(
-        spark.createDataFrame([(k1, "u", 11)], "k long, op string, v long"),
-        batch_id=1,
-        retry_conflicts=retry,
+        batch([(k1, "u", 3, 11)]), batch_id=1, retry_conflicts=retry,
+        **guard,
     )
     return t1, t1_writes
 
 
+@pytest.mark.parametrize("mode", ["cow", "guarded"])
 def test_retry_disjoint_buckets_rebases_without_recompute(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, mode
 ):
     """Racing merges to DISJOINT buckets must both commit; the loser
     rebases its already-written files (manifest overlay, no second
-    Spark write job) and the history records both versions."""
+    Spark write job) and the history records both versions. The final
+    state equals the fold of every event."""
     probe = SnapshotTable(spark, str(tmp_path / "probe"), ["k"], n_buckets=2)
     k1 = 0
     k2 = next(
@@ -389,19 +387,22 @@ def test_retry_disjoint_buckets_rebases_without_recompute(
         if _bucket_of(spark, probe, k) != _bucket_of(spark, probe, k1)
     )
 
-    t1, writes = _race(spark, tmp_path, monkeypatch, k1, k2, retry=1)
+    t1, writes = _race(spark, tmp_path, monkeypatch, k1, k2, retry=1, mode=mode)
     assert _rows(t1) == [(k1, 11), (k2, 99)]
     assert len(writes) == 1, "disjoint rebase must not re-run the write job"
     hist = t1.history()
     assert [e["version"] for e in hist] == [0, 1, 2]
     assert [e["batch_id"] for e in hist] == [0, 100, 1]
+    assert bool(hist[-1]["guard"]) == (mode == "guarded")
 
 
+@pytest.mark.parametrize("mode", ["cow", "guarded"])
 def test_retry_overlapping_buckets_replans_and_succeeds(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, mode
 ):
     """Racing merges to the SAME bucket: the loser replans against the
-    winner's committed state and succeeds; both commits appear."""
+    winner's committed state and succeeds; both commits appear and the
+    final state equals the fold of every event."""
     probe = SnapshotTable(spark, str(tmp_path / "probe"), ["k"], n_buckets=2)
     # two keys in the SAME bucket
     k1 = 0
@@ -409,14 +410,16 @@ def test_retry_overlapping_buckets_replans_and_succeeds(
         k for k in range(1, 50)
         if _bucket_of(spark, probe, k) == _bucket_of(spark, probe, k1)
     )
-    t1, writes = _race(spark, tmp_path, monkeypatch, k1, k2, retry=1)
-    # loser replanned: its anti-join ran against the winner's v, so the
-    # winner's update to k2 survives alongside the loser's to k1
+    t1, writes = _race(spark, tmp_path, monkeypatch, k1, k2, retry=1, mode=mode)
+    # loser replanned: its anti-join (or guarded compaction) ran against
+    # the winner's v, so the winner's update to k2 survives alongside
+    # the loser's to k1
     assert _rows(t1) == [(k1, 11), (k2, 99)]
     assert len(writes) == 2, "overlap must force a full replan write"
     hist = t1.history()
     assert [e["version"] for e in hist] == [0, 1, 2]
     assert [e["batch_id"] for e in hist] == [0, 100, 1]
+    assert bool(hist[-1]["guard"]) == (mode == "guarded")
 
 
 def test_retry_winner_commits_during_losers_write(

@@ -273,8 +273,9 @@ def test_fan_out_spreads_narrow_many_file_scan(spark, tmp_path):
     target = spark.sparkContext.defaultParallelism
     floor = max(2, target // 4)
     assert len(raw.inputFiles()) >= floor
-    # the cliff case: many files, narrow scan
-    narrow = raw.coalesce(2)
+    # the cliff case: many files, narrow scan (one partition is below
+    # floor = max(2, …) on any core count)
+    narrow = raw.coalesce(1)
     assert len(narrow.inputFiles()) >= floor
     assert narrow.rdd.getNumPartitions() < floor
     spread = fan_out(narrow, spark)
@@ -283,6 +284,84 @@ def test_fan_out_spreads_narrow_many_file_scan(spark, tmp_path):
     # the healthy case: scan already wide → returned untouched
     if raw.rdd.getNumPartitions() >= floor:
         assert fan_out(raw, spark) is raw
+
+
+def _raw(spark, src):
+    return spark.read.schema(T.StructType.fromDDL("value string, seq long")).json(
+        src
+    )
+
+
+def test_cow_pipeline_file_tier_repacks_fragmented_table(spark, tmp_path):
+    """The file-count tier runs on copy-on-write pipelines too: a table
+    fragmented past ``compact_max_files_per_bucket`` repacks after the
+    next batch, contents unchanged."""
+    table = SnapshotTable(
+        spark, str(tmp_path / "table"), key_cols=["customerId"],
+        n_buckets=2, max_records_per_file=2,
+    )
+    table.overwrite(
+        spark.createDataFrame(
+            [(k, f"n{k}", "x") for k in range(40)],
+            "customerId long, name string, city string",
+        ),
+        batch_id=-1,
+    )
+    assert table._max_files_per_bucket(table._read_pointer()) > 3
+    table.max_records_per_file = None  # hand sizing back to the rewrite
+    pipe = CdcPipeline(
+        spark, RECORD, table, key_col="customerId",
+        compact_max_files_per_bucket=3,
+    )
+    src = str(tmp_path / "env")
+    write_envelope_jsonl(src, [("u", None, _row(1, "ada", "cambridge"), 1000)])
+    pipe.process_batch(_raw(spark, src), batch_id=0)
+    assert table._max_files_per_bucket(table._read_pointer()) <= 3
+    got = {r.customerId: r.city for r in table.read().collect()}
+    assert len(got) == 40 and got[1] == "cambridge"
+    assert table.last_batch_id() == 0
+
+
+def test_pipeline_without_policy_adds_no_maintenance_work(
+    spark, tmp_path, monkeypatch
+):
+    """With no maintenance policy set (the default copy-on-write
+    configuration), the post-batch policy evaluation reads no pointer
+    and runs no Spark job."""
+    table = SnapshotTable(
+        spark, str(tmp_path / "table"), key_cols=["customerId"], n_buckets=4
+    )
+    pipe = CdcPipeline(spark, RECORD, table, key_col="customerId")
+    reads = []
+    read_pointer = table._read_pointer
+    monkeypatch.setattr(
+        table, "_read_pointer", lambda: reads.append(1) or read_pointer()
+    )
+    sc = spark.sparkContext
+    evaluations = []
+    policy = table.compact_by_size
+
+    def traced_policy(*a, **kw):
+        n = len(reads)
+        sc.setJobGroup("maintenance-policy", "policy evaluation")
+        try:
+            out = policy(*a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        evaluations.append((len(reads) - n, out))
+        return out
+
+    monkeypatch.setattr(table, "compact_by_size", traced_policy)
+    src = str(tmp_path / "env")
+    for i, city in enumerate(("london", "cambridge")):
+        write_envelope_jsonl(
+            src, [("u", None, _row(1, "ada", city), 1000 + i)],
+            file_name=f"b{i}.jsonl",
+        )
+        pipe.process_batch(_raw(spark, f"{src}/b{i}.jsonl"), batch_id=i)
+    assert evaluations == [(0, "none"), (0, "none")]
+    assert list(sc.statusTracker().getJobIdsForGroup("maintenance-policy")) == []
+    assert table.read().first().city == "cambridge"
 
 
 def test_stream_dedup_drops_cross_batch_duplicates(spark, tmp_path):
