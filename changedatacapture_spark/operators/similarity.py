@@ -1065,37 +1065,39 @@ def pq_fit_codebook(
     # times (ADVICE r18). Released before returning: the loop fully
     # materializes each pass, nothing lazy escapes.
     emb = fan_out_scan(emb).persist()
-    for _ in range(n_iter):
-        xs = F.expr(_pq_scaled_vec(vec_col, dim))
-        dists = F.expr(_pq_dists_expr("xs", m, ks, dsub, book))
-        assigned = (
-            emb.select(xs.alias("xs"))
-            .select("xs", dists.alias("dl"))
-            .select(
-                "xs",
-                F.posexplode(
-                    F.expr(
-                        "transform(dl, sub -> CAST(array_position(sub,"
-                        " array_min(sub)) - 1 AS INT))"
-                    )
-                ).alias("sub", "code"),
+    try:
+        for _ in range(n_iter):
+            xs = F.expr(_pq_scaled_vec(vec_col, dim))
+            dists = F.expr(_pq_dists_expr("xs", m, ks, dsub, book))
+            assigned = (
+                emb.select(xs.alias("xs"))
+                .select("xs", dists.alias("dl"))
+                .select(
+                    "xs",
+                    F.posexplode(
+                        F.expr(
+                            "transform(dl, sub -> CAST(array_position(sub,"
+                            " array_min(sub)) - 1 AS INT))"
+                        )
+                    ).alias("sub", "code"),
+                )
+                .select(
+                    "sub",
+                    "code",
+                    F.posexplode(
+                        F.expr(f"slice(xs, sub * {dsub} + 1, {dsub})")
+                    ).alias("dd", "x"),
+                )
             )
-            .select(
-                "sub",
-                "code",
-                F.posexplode(
-                    F.expr(f"slice(xs, sub * {dsub} + 1, {dsub})")
-                ).alias("dd", "x"),
+            means = (
+                assigned.groupBy("sub", "code", "dd")
+                .agg(F.expr("sum(x) DIV count(1)").alias("mean_x"))
+                .collect()
             )
-        )
-        means = (
-            assigned.groupBy("sub", "code", "dd")
-            .agg(F.expr("sum(x) DIV count(1)").alias("mean_x"))
-            .collect()
-        )
-        for r in means:  # empty cells keep their previous centroid
-            book[r["sub"]][r["code"]][r["dd"]] = r["mean_x"]
-    emb.unpersist()
+            for r in means:  # empty cells keep their previous centroid
+                book[r["sub"]][r["code"]][r["dd"]] = r["mean_x"]
+    finally:
+        emb.unpersist()
     return book
 
 
@@ -1239,36 +1241,38 @@ def semdedup_stats(
     # frame re-runs the scan + fan exchange per action (ADVICE r18);
     # released right after the checkpoint barrier materializes
     emb = fan_out_scan(emb).persist()
-    fit = kmeans_fit(emb, n_iter=n_iter, n_cells=n_cells, dim=dim,
-                     vec_col=vec_col, scale=scale)
-    by_cell: dict[int, list[int]] = {}
-    for r in fit.collect():
-        by_cell.setdefault(r["cell"], [0] * dim)[r["d"]] = r["mean_scaled"]
-    cents = sorted(by_cell.items())
-    ids_sql = ", ".join(str(c) for c, _ in cents)
-    xv = F.expr(
-        f"transform({vec_col}, x -> "
-        f"CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
-    )
-    base = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), xv.alias("_v")
-    ).withColumn("_cs", _int_cell_scores("_v", [w for _, w in cents]))
-    assigned = base.select(
-        "vid",
-        "vec",
-        F.expr(
-            f"element_at(array({ids_sql}), "
-            f"CAST(array_position(_cs, array_max(_cs)) AS INT))"
-        ).alias("cell"),
-        F.array_max("_cs").alias("affinity"),
-    )
-    # same eager-checkpoint barrier as embedding_neardup_pairs_chained:
-    # one materialization of the rank window, no self-join rebind
-    ranked = assigned.withColumn(
-        "lr",
-        F.row_number().over(W.partitionBy("cell").orderBy("affinity", "vid")),
-    ).localCheckpoint(eager=True)
-    emb.unpersist()  # checkpoint barrier holds the rows from here on
+    try:
+        fit = kmeans_fit(emb, n_iter=n_iter, n_cells=n_cells, dim=dim,
+                         vec_col=vec_col, scale=scale)
+        by_cell: dict[int, list[int]] = {}
+        for r in fit.collect():
+            by_cell.setdefault(r["cell"], [0] * dim)[r["d"]] = r["mean_scaled"]
+        cents = sorted(by_cell.items())
+        ids_sql = ", ".join(str(c) for c, _ in cents)
+        xv = F.expr(
+            f"transform({vec_col}, x -> "
+            f"CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
+        )
+        base = emb.select(
+            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), xv.alias("_v")
+        ).withColumn("_cs", _int_cell_scores("_v", [w for _, w in cents]))
+        assigned = base.select(
+            "vid",
+            "vec",
+            F.expr(
+                f"element_at(array({ids_sql}), "
+                f"CAST(array_position(_cs, array_max(_cs)) AS INT))"
+            ).alias("cell"),
+            F.array_max("_cs").alias("affinity"),
+        )
+        # same eager-checkpoint barrier as embedding_neardup_pairs_chained:
+        # one materialization of the rank window, no self-join rebind
+        ranked = assigned.withColumn(
+            "lr",
+            F.row_number().over(W.partitionBy("cell").orderBy("affinity", "vid")),
+        ).localCheckpoint(eager=True)
+    finally:
+        emb.unpersist()  # checkpoint barrier holds the rows from here on
     r = ranked.alias("r")
     s = ranked.alias("s")
     probe = r.select(

@@ -4735,7 +4735,9 @@ def _replay_state_partitions(spark: SparkSession, n_keys: int):
     a cluster-sized config is honored whenever keys are plentiful — the
     knob only ever shrinks below it for small key spaces, never widens.
     Results are partitioning-independent (state shards by key hash);
-    the differential oracle pins that.
+    the differential oracle pins that. A non-numeric configured value
+    (e.g. ``auto`` on some runtimes) has no cap to size under, so the
+    conf is left untouched.
     """
     import contextlib
 
@@ -4743,6 +4745,9 @@ def _replay_state_partitions(spark: SparkSession, n_keys: int):
     def cm():
         key = "spark.sql.shuffle.partitions"
         prior = spark.conf.get(key)
+        if not str(prior).strip().isdigit():
+            yield
+            return
         target = max(2, min(int(prior), (n_keys + 191) // 192))
         spark.conf.set(key, str(target))
         try:

@@ -412,6 +412,27 @@ class _Attempt:
         return int(self.ptr["version"])
 
 
+@dataclass
+class _ScanPlan:
+    """What one read schedules, decided against ONE pointer (see
+    :meth:`SnapshotTable._plan`)."""
+
+    ptr: dict
+    schema: object
+    #: base bucket ids that survived the restriction and the zone tests
+    buckets: list
+    #: parquet paths handed to Spark: bucket directories, or files
+    paths: list
+    #: pending merge-on-read runs, restricted to the same bucket ids
+    runs: list
+    report: dict
+
+
+def _plus(total: int | None, n: int | None) -> int | None:
+    """Row-count sum where ``None`` (unknown) is absorbing."""
+    return None if total is None or n is None else total + n
+
+
 class _CopyOnWrite:
     """Copy-on-write merge: each touched bucket is rewritten as its
     committed rows minus the batch's keys, plus the batch's upserts
@@ -990,9 +1011,9 @@ class SnapshotTable:
 
         The returned dict is the SHARED cached object — committed
         state, treat as immutable. Callers that derive modified
-        pointers copy first (``read_buckets``); a caller that wrote a
-        doctored pointer to disk invalidates by identity like any
-        commit.
+        entries copy first (``_plan``'s pruned runs); a caller that
+        wrote a doctored pointer to disk invalidates by identity like
+        any commit.
         """
         p = self._pointer_path()
         try:
@@ -1258,13 +1279,19 @@ class SnapshotTable:
 
     # -- read -------------------------------------------------------------
 
-    def schema(self):
-        from pyspark.sql.types import StructType
-
+    def _current_pointer(self) -> dict:
+        """:meth:`_read_pointer` of a table that must exist."""
         ptr = self._read_pointer()
         if ptr is None:
             raise FileNotFoundError(f"no snapshot at {self.path}")
-        return StructType.fromJson(json.loads(ptr["schema"]))
+        return ptr
+
+    def schema(self):
+        from pyspark.sql.types import StructType
+
+        return StructType.fromJson(
+            json.loads(self._current_pointer()["schema"])
+        )
 
     def history(self) -> list[dict]:
         """Commit log, oldest first — the ``DESCRIBE HISTORY`` analogue.
@@ -1285,7 +1312,7 @@ class SnapshotTable:
         current = self.version
         return [entries[v] for v in sorted(entries) if v <= current]
 
-    def _load_runs(self, ptr: dict, schema) -> list[DataFrame]:
+    def _load_runs(self, runs: list[dict], schema) -> list[DataFrame]:
         """One DataFrame per pending merge-on-read run (committed
         logical schema + the ``_mor_del`` mask), each tagged with its
         1-based ``_mor_seq`` commit order — the shared loader behind
@@ -1298,7 +1325,7 @@ class SnapshotTable:
             list(schema.fields) + [StructField("_mor_del", BooleanType())]
         )
         out = []
-        for i, run in enumerate(ptr.get("runs") or [], start=1):
+        for i, run in enumerate(runs, start=1):
             rdf = self.spark.read.schema(run_schema).parquet(
                 *[
                     f"{self.path}/v={run['v']}/bucket={b}"
@@ -1308,7 +1335,9 @@ class SnapshotTable:
             out.append(rdf.withColumn("_mor_seq", F.lit(i)))
         return out
 
-    def _mor_resolve(self, base: DataFrame, ptr: dict, schema) -> DataFrame:
+    def _mor_resolve(
+        self, base: DataFrame, runs: list[dict], schema
+    ) -> DataFrame:
         """Merge-on-read resolution: fold the pointer's delta runs
         (``merge(mode="mor")`` appends — see that docstring) over the
         copy-on-write base. Each run holds <= 1 row per key plus a
@@ -1319,7 +1348,7 @@ class SnapshotTable:
         no window. Delete winners drop from the logical view. Run
         file paths come from the commit entry's recorded bucket list,
         never a directory LIST."""
-        if not (ptr.get("runs") or []):
+        if not runs:
             return base
         from changedatacapture_spark.operators.cdc import compact_latest
 
@@ -1327,7 +1356,7 @@ class SnapshotTable:
             base.withColumn("_mor_del", F.lit(False)).withColumn(
                 "_mor_seq", F.lit(0)
             )
-        ] + self._load_runs(ptr, schema)
+        ] + self._load_runs(runs, schema)
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
@@ -1335,14 +1364,6 @@ class SnapshotTable:
         return winners.filter(~F.col("_mor_del")).drop(
             "_mor_seq", "_mor_del"
         )
-
-    @staticmethod
-    def _run_paths(path: str, ptr: dict) -> list[str]:
-        return [
-            f"{path}/v={run['v']}/bucket={b}"
-            for run in ptr.get("runs") or []
-            for b in run["buckets"]
-        ]
 
     def _footer_fstats(self, version: int, buckets) -> dict[str, dict]:
         """Per-file ``{"__rows": n}`` stats for the just-written run
@@ -1379,14 +1400,23 @@ class SnapshotTable:
         return out
 
     @staticmethod
-    def _run_volume(ptr: dict) -> tuple[int | None, int | None]:
-        """(files, rows) across the pointer's pending runs — the scan
-        volume MoR resolution adds to every read. Rows are ``None``
-        when any run predates run-file row stats (unknown, not
-        zero); files fall back to one opaque unit per run bucket."""
+    def _file_rows(fmap: dict | None) -> int | None:
+        """Committed rows of one bucket from its per-file stats —
+        ``None`` (unknown, not zero) when the bucket has no file stats
+        or any file predates row counts."""
+        if not fmap or any("__rows" not in z for z in fmap.values()):
+            return None
+        return sum(z["__rows"] for z in fmap.values())
+
+    @staticmethod
+    def _run_volume(runs: list[dict]) -> tuple[int, int | None]:
+        """(files, rows) across pending runs — the scan volume MoR
+        resolution adds to a read. Rows are ``None`` when any run
+        predates run-file row stats (unknown, not zero); files fall
+        back to one opaque unit per run bucket."""
         files = 0
         rows: int | None = 0
-        for run in ptr.get("runs") or []:
+        for run in runs:
             rf = run.get("fstats")
             if rf is None:
                 files += len(run.get("buckets") or [])
@@ -1394,11 +1424,202 @@ class SnapshotTable:
                 continue
             for fmap in rf.values():
                 files += len(fmap)
-                if rows is not None:
-                    for z in fmap.values():
-                        n = z.get("__rows")
-                        rows = None if n is None else rows + n
+                for z in fmap.values():
+                    rows = _plus(rows, z.get("__rows"))
         return files, rows
+
+    def _plan(
+        self,
+        ptr: dict,
+        bucket_ids: Sequence[int] | None = None,
+        predicates: list[tuple] | None = None,
+        bisect: Sequence[tuple[str, list]] = (),
+    ) -> _ScanPlan:
+        """The one bucket → file pruning pass under every read, made
+        against an already-read pointer so that pruning, manifest,
+        schema, runs and guard all come from the SAME snapshot — a
+        commit landing between two pointer reads must never mix old
+        stats with a new manifest.
+
+        - ``bucket_ids`` restricts the base buckets and the MoR runs
+          (both are routed by the same hash, so a run prunes by the
+          same ids); ``None`` keeps every bucket.
+        - ``predicates`` (conjunctive ``read_where`` tuples) are tested
+          per value against each zone's range and bloom
+          (:meth:`_zone_may_match`).
+        - each ``(col, values)`` in ``bisect`` is tested by one sorted
+          bisect per zone bound (:meth:`_zone_range_any`) — the
+          large-value-set test, O(log |values|) per zone.
+
+        A zone survives unless some test PROVABLY excludes it; absent
+        stats (older commits, dropped bounds, stats disabled) always
+        survive — pruning is an optimization, never a correctness
+        gate. ``predicates=None`` plans at bucket granularity (every
+        kept bucket reads as its directory); a list, even an empty
+        one, plans at file granularity: the per-file zones
+        (``fstats``) prune again inside each kept bucket, and a bucket
+        committed without file stats falls back to its directory. The
+        file list comes from the pointer, never a directory listing —
+        the commit log IS the authoritative file inventory.
+
+        The report is the same shape for every read: ``buckets_*``
+        over the base manifest, ``files_*`` counted from file stats
+        (one opaque unit for a bucket without them), ``rows_*`` summed
+        from per-file row counts (``None`` when any contributing file
+        predates them) and the kept runs' ``run_files``/``run_rows``.
+        Pending runs are scanned in FULL by the resolve (delta-sized,
+        no zone maps), so they are reported separately: base pruning
+        and run amplification never blur into one number."""
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(ptr["schema"]))
+        kinds = dict(self._stats_cols(schema))
+        preds = predicates or []
+        sorted_vals: list[tuple[str, list | None]] = []
+        for col, vals in bisect:
+            svals = None
+            if col in kinds:
+                try:
+                    svals = sorted(
+                        self._stat_value(v, kinds[col])
+                        for v in vals
+                        if v is not None
+                    )
+                except TypeError:
+                    pass  # mixed-type probe list: never prune on it
+            sorted_vals.append((col, svals))
+
+        def may_match(zone: dict) -> bool:
+            return self._zone_may_match(zone, preds, kinds) and all(
+                self._zone_range_any(zone, c, sv) for c, sv in sorted_vals
+            )
+
+        wanted = None if bucket_ids is None else {int(b) for b in bucket_ids}
+        stats = ptr.get("stats") or {}
+        fstats = ptr.get("fstats") or {}
+        kept: list[int] = []
+        paths: list[str] = []
+        files_total = files_kept = 0
+        rows_total: int | None = 0
+        rows_kept: int | None = 0
+        for b, v in sorted((int(b), v) for b, v in ptr["buckets"].items()):
+            fmap = fstats.get(str(b))
+            # a bucket without file stats is one opaque scan unit
+            n_files, n_rows = len(fmap or {}) or 1, self._file_rows(fmap)
+            files_total += n_files
+            rows_total = _plus(rows_total, n_rows)
+            zone = stats.get(str(b))
+            if (wanted is not None and b not in wanted) or (
+                zone is not None and not may_match(zone)
+            ):
+                continue
+            kept.append(b)
+            d = f"{self.path}/v={v}/bucket={b}"
+            if predicates is None or not fmap:
+                paths.append(d)
+                files_kept += n_files
+                rows_kept = _plus(rows_kept, n_rows)
+                continue
+            for fname, fzone in sorted(fmap.items()):
+                if may_match(fzone):
+                    paths.append(f"{d}/{fname}")
+                    files_kept += 1
+                    rows_kept = _plus(rows_kept, fzone.get("__rows"))
+        runs = []
+        for run in ptr.get("runs") or []:
+            if wanted is not None:
+                run = {
+                    **run,
+                    "buckets": [b for b in run["buckets"] if b in wanted],
+                }
+                if not run["buckets"]:
+                    continue
+                if run.get("fstats") is not None:
+                    run["fstats"] = {
+                        b: m for b, m in run["fstats"].items()
+                        if int(b) in wanted
+                    }
+            runs.append(run)
+        run_files, run_rows = self._run_volume(runs)
+        report = {
+            "buckets_total": len(ptr["buckets"]),
+            "buckets_kept": len(kept),
+            "files_total": files_total,
+            "files_kept": files_kept,
+            "rows_total": rows_total,
+            "rows_kept": rows_kept,
+            "run_files": run_files,
+            "run_rows": run_rows,
+        }
+        return _ScanPlan(ptr, schema, kept, paths, runs, report)
+
+    def _scan(
+        self,
+        plan: _ScanPlan,
+        predicates: Sequence[tuple] = (),
+        include_tombstones: bool = False,
+        semi: tuple[DataFrame, object] | None = None,
+    ) -> DataFrame:
+        """The DataFrame of a :meth:`_plan`: its paths read under the
+        committed schema (an empty frame when nothing survived), the
+        kept MoR runs resolved over them, ``predicates`` re-applied as
+        real filters (so results are exact whatever was pruned), an
+        optional broadcast left-semi join ``(frame, on)``, and the
+        guard-tombstone filter of an order-guarded table.
+
+        Pruning the BASE before the resolve is sound: a pruned base row
+        either loses resolution to a run row (never emitted anyway) or
+        wins but cannot match the predicate (zone maps are
+        conservative) — either way the pruned result equals the
+        unpruned one."""
+        if plan.paths:
+            df = self.spark.read.schema(plan.schema).parquet(*plan.paths)
+        else:  # every row deleted, all pruned, or MoR runs carry all
+            df = self.spark.createDataFrame([], plan.schema)
+        df = self._mor_resolve(df, plan.runs, plan.schema)
+        for p in predicates:
+            df = self._apply_predicate(df, p)
+        if semi is not None:
+            df = df.join(F.broadcast(semi[0]), semi[1], "leftsemi")
+        guard = plan.ptr.get("guard")
+        if guard and not include_tombstones:
+            df = df.filter(F.col(guard["op_col"]) != guard["delete_op"])
+        return df
+
+    def _local_frame(self, rows: list[tuple], schema) -> DataFrame:
+        """Driver-side probe rows (keys or values) as a DataFrame under
+        the committed column types. Big scalar lists go through Arrow:
+        the index route ships up to ``_INDEX_ROUTE_MAX_KEYS`` keys and
+        the semi-join read past ``SEMI_JOIN_IN_THRESHOLD`` values as
+        one Arrow batch instead of pickled rows (~10× driver time);
+        exotic types fall back to the row path. A row that cannot
+        round-trip to the column types can never MATCH them either —
+        the literal predicate it replaces would silently not match
+        it — so it is dropped (driver-side type verifier, no job)
+        instead of raising."""
+        if all(isinstance(x, (int, float, str)) for r in rows for x in r):
+            try:
+                import pandas as pd
+
+                return self.spark.createDataFrame(
+                    pd.DataFrame(rows, columns=schema.fieldNames()), schema
+                )
+            except Exception:  # noqa: BLE001 - fall back to row path
+                pass
+        try:
+            return self.spark.createDataFrame(rows, schema)
+        except Exception:  # noqa: BLE001 - keep the matchable rows
+            from pyspark.sql.types import _make_type_verifier
+
+            verify = _make_type_verifier(schema, nullable=False)
+            ok = []
+            for r in rows:
+                try:
+                    verify(r)
+                    ok.append(r)
+                except Exception:  # noqa: BLE001 - unmatchable row
+                    pass
+            return self.spark.createDataFrame(ok, schema)
 
     def read(
         self, include_tombstones: bool = False, at_version: int | None = None
@@ -1419,12 +1640,8 @@ class SnapshotTable:
         have their files on disk; older requests raise with the
         retention bound in the message.
         """
-        from pyspark.sql.types import StructType
-
         if at_version is None:
-            ptr = self._read_pointer()
-            if ptr is None:
-                raise FileNotFoundError(f"no snapshot at {self.path}")
+            ptr = self._current_pointer()
         else:
             by_version = {e["version"]: e for e in self.history()}
             if at_version not in by_version:
@@ -1433,14 +1650,14 @@ class SnapshotTable:
                     f"(have {sorted(by_version)})"
                 )
             ptr = by_version[at_version]
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
-        manifest = {int(b): v for b, v in ptr["buckets"].items()}
-        paths = [
-            f"{self.path}/v={v}/bucket={b}" for b, v in sorted(manifest.items())
-        ]
+        plan = self._plan(ptr)
         missing = [
             p
-            for p in paths + self._run_paths(self.path, ptr)
+            for p in plan.paths + [
+                f"{self.path}/v={run['v']}/bucket={b}"
+                for run in plan.runs
+                for b in run["buckets"]
+            ]
             if not os.path.isdir(p)
         ]
         if missing:
@@ -1456,15 +1673,7 @@ class SnapshotTable:
                 f"version {at_version} is beyond retain_history="
                 f"{self.retain_history}; its files were vacuumed: {missing[:3]}"
             )
-        if not paths:  # every row deleted (or MoR runs carry everything)
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*paths)
-        df = self._mor_resolve(df, ptr, schema)
-        guard = ptr.get("guard")
-        if guard and not include_tombstones:
-            df = df.filter(F.col(guard["op_col"]) != guard["delete_op"])
-        return df
+        return self._scan(plan, include_tombstones=include_tombstones)
 
     def read_keys(
         self, values: list, include_tombstones: bool = False
@@ -1483,71 +1692,54 @@ class SnapshotTable:
         composite key. Returns the matching rows (possibly fewer than
         ``values`` — absent keys simply don't match).
         """
+        return self._read_keys(
+            self._current_pointer(), values, include_tombstones
+        )
+
+    def _read_keys(
+        self, ptr: dict, values: list, include_tombstones: bool
+    ) -> DataFrame:
+        """:meth:`read_keys` against an already-read pointer: keys are
+        routed under THAT pointer's bucket modulus and read from THAT
+        pointer's manifest. A long-lived reader straddling a rebucket
+        would otherwise probe buckets the keys no longer live in
+        (silently missing rows, the read-path twin of the stale-writer
+        hazard), and routing under one pointer while reading another
+        pairs old-modulus ids with the new manifest."""
         from pyspark.sql.types import StructType
 
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        # key→bucket routing must follow the COMMITTED modulus: a
-        # long-lived reader that straddled a rebucket would otherwise
-        # probe buckets the keys no longer live in — silently missing
-        # rows, the read-path twin of the stale-writer hazard
         self._adopt_committed_layout(ptr)
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
+        n_buckets = int(ptr.get("n_buckets") or self.n_buckets)
         # key_cols order, NOT table-schema order: callers pass composite
         # keys as tuples following key_cols, so a schema-ordered struct
         # would bind values to the wrong columns whenever the two orders
         # differ — wrong bucket routing and a silently empty semi-join
-        by_name = {f.name: f for f in schema.fields}
-        key_schema = StructType([by_name[k] for k in self.key_cols])
-        if not values:
-            # an empty probe is still a completed scan: record zeroed
-            # evidence so callers on the instance-report contract (and
-            # the index route resolving to an empty posting set) never
-            # read a stale previous scan as this one's
-            every = sorted(
-                {int(b) for b in ptr["buckets"]}
-                | {b for r in ptr.get("runs") or [] for b in r["buckets"]}
-            )
-            self._record_scan(
-                {
-                    "buckets_total": len(every), "buckets_kept": 0,
-                    "files_total": 0, "files_kept": 0,
-                }
-            )
-            return self.spark.createDataFrame([], schema)
+        schema = StructType.fromJson(json.loads(ptr["schema"]))
+        key_schema = StructType([schema[k] for k in self.key_cols])
         rows = [v if isinstance(v, tuple) else (v,) for v in values]
-        # Arrow path for big key lists: the index route ships up to
-        # _INDEX_ROUTE_MAX_KEYS (100k) keys — one Arrow batch instead
-        # of 100k pickled rows (~10× driver time, same win as
-        # read_in_values); exotic key types fall back to the row path
         keydf = None
-        if all(
-            isinstance(x, (int, float, str)) for r in rows for x in r
-        ):
-            try:
-                import pandas as pd
-
-                keydf = self.spark.createDataFrame(
-                    pd.DataFrame(rows, columns=list(self.key_cols)),
-                    key_schema,
+        wanted: list[int] = []
+        if rows:
+            keydf = self._local_frame(rows, key_schema)
+            wanted = [
+                r.bucket
+                for r in keydf.select(
+                    self._bucket_col(n_buckets).alias("bucket")
                 )
-            except Exception:  # noqa: BLE001 - fall back to row path
-                keydf = None
-        if keydf is None:
-            keydf = self.spark.createDataFrame(rows, key_schema)
-        wanted = {
-            r.bucket
-            for r in keydf.select(self._bucket_col().alias("bucket"))
-            .distinct()
-            .collect()
-        }
-        df = self.read_buckets(sorted(wanted), include_tombstones=True)
-        df = df.join(F.broadcast(keydf), self.key_cols, "leftsemi")
-        guard = ptr.get("guard")
-        if guard and not include_tombstones:
-            df = df.filter(F.col(guard["op_col"]) != guard["delete_op"])
-        return df
+                .distinct()
+                .collect()
+            ]
+        # an empty probe is still a completed scan: its zeroed report
+        # keeps callers on the instance-report contract (and the index
+        # route resolving to an empty posting set) from reading a stale
+        # previous scan as this one's
+        plan = self._plan(ptr, bucket_ids=wanted)
+        self._record_scan(plan.report)
+        return self._scan(
+            plan,
+            include_tombstones=include_tombstones,
+            semi=None if keydf is None else (keydf, self.key_cols),
+        )
 
     def read_buckets(
         self, bucket_ids: Sequence[int], include_tombstones: bool = False
@@ -1555,9 +1747,9 @@ class SnapshotTable:
         """Bucket-subset read: current rows of ONLY the listed hash
         buckets (base files plus MoR runs pruned to the same ids).
 
-        This is the primitive under :meth:`read_keys` point lookups
-        and :class:`~..streaming.pipeline.JoinView`'s delta-bounded
-        recompute: a caller that derived the touched bucket ids from
+        This is the primitive under :class:`~..streaming.pipeline.
+        JoinView`'s delta-bounded recompute and the index's
+        ``lookup_df``: a caller that derived the touched bucket ids from
         bounded driver metadata (the distinct ``_bucket_col`` values
         of a delta's keys — at most ``n_buckets`` longs) scans
         O(|bucket_ids|) directories regardless of table size. Bucket
@@ -1566,51 +1758,9 @@ class SnapshotTable:
         pin ``buckets_kept < buckets_total`` for a delta touching few
         buckets.
         """
-        from pyspark.sql.types import StructType
-
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
-        wanted = {int(b) for b in bucket_ids}
-        manifest = {int(b): v for b, v in ptr["buckets"].items()}
-        paths = [
-            f"{self.path}/v={v}/bucket={b}"
-            for b, v in sorted(manifest.items())
-            if b in wanted
-        ]
-        # MoR delta runs are bucket-partitioned with the same routing,
-        # so the subset read prunes them by the same bucket ids —
-        # cost stays O(touched buckets x runs), never the table
-        pruned_ptr = dict(ptr)
-        pruned_ptr["runs"] = [
-            {**run, "buckets": [b for b in run["buckets"] if b in wanted]}
-            for run in (ptr.get("runs") or [])
-        ]
-        pruned_ptr["runs"] = [r for r in pruned_ptr["runs"] if r["buckets"]]
-        run_buckets = {
-            b for run in (ptr.get("runs") or []) for b in run["buckets"]
-        }
-        live = set(manifest) | run_buckets
-        self._record_scan(
-            {
-                "buckets_total": len(live),
-                "buckets_kept": len(live & wanted),
-                "files_total": len(live),
-                "files_kept": len(live & wanted),
-            }
-        )
-        if not paths and not pruned_ptr["runs"]:
-            return self.spark.createDataFrame([], schema)
-        if paths:
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            df = self.spark.createDataFrame([], schema)
-        df = self._mor_resolve(df, pruned_ptr, schema)
-        guard = ptr.get("guard")
-        if guard and not include_tombstones:
-            df = df.filter(F.col(guard["op_col"]) != guard["delete_op"])
-        return df
+        plan = self._plan(self._current_pointer(), bucket_ids=bucket_ids)
+        self._record_scan(plan.report)
+        return self._scan(plan, include_tombstones=include_tombstones)
 
     # -- write ------------------------------------------------------------
 
@@ -1870,77 +2020,18 @@ class SnapshotTable:
             )
         return out, fstats
 
-    def _prune_buckets(
-        self, predicates: list[tuple]
-    ) -> tuple[list[int], list[int], dict]:
-        """(surviving, all, pointer) for the given predicates.
-
-        A bucket survives unless some predicate PROVABLY excludes its
-        entire [min, max] zone; absent stats (older commits, dropped
-        bounds, stats disabled) always survive — pruning is an
-        optimization, never a correctness gate. The pointer that the
-        pruning decision was made against is returned so the caller
-        reads manifest/schema/guard from the SAME snapshot — a commit
-        landing between two pointer reads must not mix old stats with
-        a new manifest."""
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
-        kinds = dict(self._stats_cols(schema))
-        stats = ptr.get("stats") or {}
-        every = sorted(int(b) for b in ptr["buckets"])
-        kept = []
-        for b in every:
-            zone = stats.get(str(b))
-            if zone is None or self._zone_may_match(zone, predicates, kinds):
-                kept.append(b)
-        return kept, every, ptr
-
     def _zone_may_match(
         self, zone: dict, predicates: list[tuple], kinds: dict[str, str]
     ) -> bool:
         for p in predicates:
             col, op = p[0], p[1]
-            # bloom membership runs independently of the range bounds
-            # (a zone may carry a bloom while its [min, max] was
-            # dropped, e.g. over-long string maxima): an unset hash
-            # position means the value provably never entered this
-            # zone's rows — no false negatives; a false positive
-            # just scans
-            if op == "=" and kinds.get(col) in ("int", "str"):
-                bw = zone.get(f"bloom__{col}")
-                if bw is not None and not _bloom_contains(
-                    bw, p[2], kinds[col]
-                ):
-                    return False
-            if op == "in":
+            if op in ("=", "in"):
                 # IN-list: the zone survives if ANY listed value could
-                # be present (per-value range + bloom tests); an empty
-                # list matches nothing anywhere
-                vals = list(p[2])
-                if not vals:
-                    return False
-
-                def _value_possible(v) -> bool:
-                    if kinds.get(col) in ("int", "str"):
-                        bw = zone.get(f"bloom__{col}")
-                        if bw is not None and not _bloom_contains(
-                            bw, v, kinds[col]
-                        ):
-                            return False
-                    if col in zone and col in kinds:
-                        mn, mx = zone[col]
-                        sv = self._stat_value(v, kinds[col])
-                        if (mn is not None and mn > sv) or (
-                            mx is not None and mx < sv
-                        ):
-                            return False
-                    return True
-
-                if not any(_value_possible(v) for v in vals):
+                # be present; an empty list matches nothing anywhere
+                if not any(
+                    self._value_may_match(zone, col, v, kinds)
+                    for v in ([p[2]] if op == "=" else p[2])
+                ):
                     return False
                 continue
             if col not in zone or col not in kinds:
@@ -1953,10 +2044,6 @@ class SnapshotTable:
                     return False
                 continue
             v = self._stat_value(p[2], kinds[col])
-            if op == "=" and (
-                (mn is not None and mn > v) or (mx is not None and mx < v)
-            ):
-                return False
             if op == "<" and mn is not None and mn >= v:
                 return False
             if op == "<=" and mn is not None and mn > v:
@@ -1967,14 +2054,36 @@ class SnapshotTable:
                 return False
         return True
 
+    def _value_may_match(
+        self, zone: dict, col: str, v, kinds: dict[str, str]
+    ) -> bool:
+        """Equality test of one literal against a zone. Bloom
+        membership runs independently of the range bounds (a zone may
+        carry a bloom while its [min, max] was dropped, e.g. over-long
+        string maxima): an unset hash position means the value
+        provably never entered this zone's rows — no false negatives;
+        a false positive just scans."""
+        kind = kinds.get(col)
+        bw = zone.get(f"bloom__{col}")
+        if kind in ("int", "str") and bw is not None:
+            if not _bloom_contains(bw, v, kind):
+                return False
+        if col not in zone or kind is None:
+            return True  # no stat for this column — cannot exclude
+        mn, mx = zone[col]
+        sv = self._stat_value(v, kind)
+        return not (
+            (mn is not None and mn > sv) or (mx is not None and mx < sv)
+        )
+
     def estimate_rows_where(self, predicates: list[tuple]) -> int | None:
         """Driver-only UPPER BOUND on the rows a
         :meth:`read_where` scan for ``predicates`` would schedule:
-        run the same bucket- and file-level zone/bloom pruning
-        against the pointer's committed per-file row counts and sum
-        the survivors. No Spark job runs — one pointer read plus
-        pure-Python stat tests — so planners can reject a route
-        before paying for it (the index-routing gate below). Returns
+        the ``rows_kept + run_rows`` of the very :meth:`_plan` that
+        read would make, so the estimate and the scan cannot disagree.
+        No Spark job runs — one pointer read plus pure-Python stat
+        tests — so planners can reject a route before paying for it
+        (the index-routing gate below). Returns
         ``None`` when any surviving file predates row stats (older
         commits, stats-dropping merges): unknown, not zero.
 
@@ -2001,53 +2110,10 @@ class SnapshotTable:
                 bisected.append((p[0], list(p[2])))
             else:
                 small.append(p)
-        kept, every, ptr = self._prune_buckets(small)
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
-        kinds = dict(self._stats_cols(schema))
-        svals_by_col: dict[str, list | None] = {}
-        for col, vals in bisected:
-            if col in kinds:
-                try:
-                    svals_by_col[col] = sorted(
-                        self._stat_value(v, kinds[col])
-                        for v in vals
-                        if v is not None
-                    )
-                except TypeError:
-                    svals_by_col[col] = None
-            else:
-                svals_by_col[col] = None
-        stats_all = ptr.get("stats") or {}
-        kept = [
-            b
-            for b in kept
-            if stats_all.get(str(b)) is None
-            or all(
-                self._zone_range_any(stats_all[str(b)], c, sv)
-                for c, sv in svals_by_col.items()
-            )
-        ]
-        fstats_all = ptr.get("fstats") or {}
-        total = 0
-        for b in kept:
-            fmap = fstats_all.get(str(b))
-            if not fmap:
-                return None
-            for zone in fmap.values():
-                if self._zone_may_match(zone, small, kinds) and all(
-                    self._zone_range_any(zone, c, sv)
-                    for c, sv in svals_by_col.items()
-                ):
-                    n = zone.get("__rows")
-                    if n is None:
-                        return None
-                    total += n
-        _, run_rows = self._run_volume(ptr)
-        if ptr.get("runs") and run_rows is None:
-            return None  # pre-run-stats run: unknown, not zero
-        return total + (run_rows or 0)
+        rep = self._plan(
+            self._current_pointer(), predicates=small, bisect=bisected
+        ).report
+        return _plus(rep["rows_kept"], rep["run_rows"])
 
     #: IN-list size past which :meth:`estimate_rows_where` switches
     #: from per-value zone/bloom tests to the sorted-bisect range test
@@ -2099,16 +2165,20 @@ class SnapshotTable:
         self._indexes[index.col] = index
 
     def _read_via_index(
-        self, predicates: list[tuple], include_tombstones: bool
+        self, ptr: dict, predicates: list[tuple], include_tombstones: bool
     ) -> DataFrame | None:
         """Index-routed plan for :meth:`read_where`, or ``None`` when
         no attached index applies: first equality/IN predicate on an
-        indexed column whose index is at the CURRENT table version
-        (behind-version postings may miss fresh rows — correctness
-        forbids routing) resolves to posting keys (bloom-pruned
-        posting scan, driver-bounded by ``_INDEX_ROUTE_MAX_KEYS``),
-        then ``read_keys`` reads only those keys' buckets and ALL
-        predicates re-apply — bit-identical to the stats path.
+        indexed column whose index is at the version of ``ptr`` — the
+        pointer the whole read plans from (behind-version postings may
+        miss fresh rows — correctness forbids routing) resolves to
+        posting keys (bloom-pruned posting scan, driver-bounded by
+        ``_INDEX_ROUTE_MAX_KEYS``), then the keys' buckets are read
+        from that same pointer and ALL predicates re-apply —
+        bit-identical to the stats path. A commit landing during the
+        posting collect therefore never mixes into the result: reading
+        the new version for only the old version's posting keys would
+        return a state no commit ever held.
 
         HOT values bail BEFORE any job runs: the posting table's own
         manifest (per-file row counts + zone/bloom stats) upper-bounds
@@ -2128,12 +2198,11 @@ class SnapshotTable:
             idx = self._indexes.get(col)
             if idx is None or op not in ("=", "in"):
                 continue
-            if idx.indexed_version != self.version:
+            if idx.indexed_version != int(ptr["version"]):
                 continue
-            values = (
-                [p[2]] if op == "=" else [v for v in p[2] if v is not None]
-            )
-            values = [v for v in values if v is not None]
+            values = [
+                v for v in ([p[2]] if op == "=" else p[2]) if v is not None
+            ]
             if not values:
                 continue
             cap = self._INDEX_ROUTE_MAX_KEYS
@@ -2152,7 +2221,7 @@ class SnapshotTable:
             ]
             if len(keys) > cap:
                 return None  # too hot: stats path
-            df = self.read_keys(keys)
+            df = self._read_keys(ptr, keys, include_tombstones=False)
             for q in predicates:
                 df = self._apply_predicate(df, q)
             return df
@@ -2190,20 +2259,15 @@ class SnapshotTable:
         ``cluster_cols`` write-time sort already feeds). The same
         predicates are re-applied as real filters on the surviving
         buckets, so results are exact regardless of pruning. One
-        pointer read governs pruning, manifest, schema, and guard —
+        pointer read governs the whole call — pruning, manifest,
+        schema, guard, the index route and the large-IN hand-off —
         never a second read that a concurrent commit could split.
 
         Within each surviving bucket, per-file zone maps (``fstats``)
-        prune again at file granularity — buckets committed without
-        file stats (older pointers, ``stats_on_merge=False`` merges)
-        fall back to the whole bucket directory. The file list comes
-        from the pointer, never a directory listing: the commit log IS
-        the authoritative file inventory (every non-empty file appears
-        in the commit-time read-back), so no object-store LIST on the
-        read path. Each call records ``self.last_scan_report``
-        (buckets/files/rows kept vs total, plus the pending-run volume
-        MoR resolution adds) — the pruning ratio IS the result at
-        100 TB.
+        prune again at file granularity (see :meth:`_plan`). Each call
+        records ``self.last_scan_report`` (buckets/files/rows kept vs
+        total, plus the pending-run volume MoR resolution adds) — the
+        pruning ratio IS the result at 100 TB.
 
         With an :meth:`attach_index`-registered secondary index on an
         equality/IN predicate column, the read routes through the
@@ -2218,6 +2282,7 @@ class SnapshotTable:
         (measured 84 s at 100k values; tools/perf_round17.py). The
         largest such predicate becomes the join; any remaining
         predicates ride along as ``extra_preds``."""
+        ptr = self._current_pointer()
         big = [
             (len(p[2]), i)
             for i, p in enumerate(predicates)
@@ -2226,90 +2291,19 @@ class SnapshotTable:
         if big:
             _, i = max(big)
             p = predicates[i]
-            return self.read_in_values(
+            return self._read_in_values(
+                ptr,
                 p[0],
                 list(p[2]),
-                extra_preds=[q for j, q in enumerate(predicates) if j != i],
-                include_tombstones=include_tombstones,
+                [q for j, q in enumerate(predicates) if j != i],
+                include_tombstones,
             )
-        routed = self._read_via_index(predicates, include_tombstones)
+        routed = self._read_via_index(ptr, predicates, include_tombstones)
         if routed is not None:
             return routed
-        kept, every, ptr = self._prune_buckets(predicates)
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
-        kinds = dict(self._stats_cols(schema))
-        manifest = {int(b): v for b, v in ptr["buckets"].items()}
-        fstats_all = ptr.get("fstats") or {}
-        # buckets without file stats count as one opaque scan unit
-        files_total = sum(
-            len(fstats_all.get(str(b)) or {}) or 1 for b in every
-        )
-        # rows_total/rows_kept: summed per-file counts where committed
-        # (None when any contributing file predates row stats or a
-        # bucket scans opaque) — file-packing health reads straight
-        # off the report instead of being inferred from file counts
-        rows_total: int | None = 0
-        for b in every:
-            fmap = fstats_all.get(str(b))
-            if not fmap or any("__rows" not in z for z in fmap.values()):
-                rows_total = None
-                break
-            rows_total += sum(z["__rows"] for z in fmap.values())
-        paths: list[str] = []
-        files_kept = 0
-        rows_kept: int | None = 0
-        for b in kept:
-            fmap = fstats_all.get(str(b))
-            if not fmap:
-                paths.append(f"{self.path}/v={manifest[b]}/bucket={b}")
-                files_kept += 1
-                rows_kept = None
-                continue
-            for fname, zone in sorted(fmap.items()):
-                if self._zone_may_match(zone, predicates, kinds):
-                    paths.append(
-                        f"{self.path}/v={manifest[b]}/bucket={b}/{fname}"
-                    )
-                    files_kept += 1
-                    if rows_kept is not None:
-                        n = zone.get("__rows")
-                        rows_kept = None if n is None else rows_kept + n
-        run_files, run_rows = self._run_volume(ptr)
-        self._record_scan(
-            {
-                "buckets_total": len(every),
-                "buckets_kept": len(kept),
-                "files_total": files_total,
-                "files_kept": files_kept,
-                "rows_total": rows_total,
-                "rows_kept": rows_kept,
-                # pending MoR runs are scanned in FULL by the resolve
-                # below (delta-sized, no zone maps) — reported
-                # separately so base pruning and run amplification
-                # never blur into one number
-                "run_files": run_files,
-                "run_rows": run_rows,
-            }
-        )
-        if not paths:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*paths)
-        # MoR runs are delta-sized and carry no zone maps: scan them in
-        # full and resolve BEFORE the predicates. Pruning the BASE
-        # first is sound: a pruned base row either loses resolution to
-        # a run row (never emitted anyway) or wins but cannot match
-        # the predicate (zone maps are conservative) — either way the
-        # pruned result equals the unpruned one.
-        df = self._mor_resolve(df, ptr, schema)
-        for p in predicates:
-            df = self._apply_predicate(df, p)
-        guard = ptr.get("guard")
-        if guard and not include_tombstones:
-            df = df.filter(F.col(guard["op_col"]) != guard["delete_op"])
-        return df
+        plan = self._plan(ptr, predicates=predicates)
+        self._record_scan(plan.report)
+        return self._scan(plan, predicates, include_tombstones)
 
     @staticmethod
     def _zone_range_any(zone: dict, col: str, svals: list | None) -> bool:
@@ -2353,142 +2347,46 @@ class SnapshotTable:
         once regardless), NULLs never match on either side, and
         ``extra_preds`` re-apply as real filters. Reports to
         ``self.last_scan_report`` with ``semi_join: True``."""
+        return self._read_in_values(
+            self._current_pointer(), col, values, extra_preds,
+            include_tombstones,
+        )
+
+    def _read_in_values(
+        self,
+        ptr: dict,
+        col: str,
+        values: list,
+        extra_preds: list | None,
+        include_tombstones: bool,
+    ) -> DataFrame:
+        """:meth:`read_in_values` against an already-read pointer."""
         from pyspark.sql.types import StructType
 
         vals = [v for v in dict.fromkeys(values) if v is not None]
         extra = list(extra_preds or [])
-        kept, every, ptr = self._prune_buckets(extra)
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
-        kinds = dict(self._stats_cols(schema))
-        if not vals:
-            self._record_scan(
-                {
-                    "buckets_total": len(every), "buckets_kept": 0,
-                    "files_total": 0, "files_kept": 0,
-                    "rows_total": 0, "rows_kept": 0,
-                    "run_files": 0, "run_rows": 0, "semi_join": True,
-                }
-            )
-            return self.spark.createDataFrame([], schema)
-        svals: list | None = None
-        if col in kinds:
-            try:
-                svals = sorted(
-                    self._stat_value(v, kinds[col]) for v in vals
-                )
-            except TypeError:
-                svals = None  # mixed-type probe list: never prune on it
-        manifest = {int(b): v for b, v in ptr["buckets"].items()}
-        fstats_all = ptr.get("fstats") or {}
-        stats_all = ptr.get("stats") or {}
-        files_total = sum(
-            len(fstats_all.get(str(b)) or {}) or 1 for b in every
+        # an empty value set matches nothing: plan zero buckets
+        plan = self._plan(
+            ptr,
+            bucket_ids=None if vals else [],
+            predicates=extra,
+            bisect=[(col, vals)],
         )
-        rows_total: int | None = 0
-        for b in every:
-            fmap = fstats_all.get(str(b))
-            if not fmap or any("__rows" not in z for z in fmap.values()):
-                rows_total = None
-                break
-            rows_total += sum(z["__rows"] for z in fmap.values())
-        kept = [
-            b
-            for b in kept
-            if stats_all.get(str(b)) is None
-            or self._zone_range_any(stats_all[str(b)], col, svals)
-        ]
-        paths: list[str] = []
-        files_kept = 0
-        rows_kept: int | None = 0
-        for b in kept:
-            fmap = fstats_all.get(str(b))
-            if not fmap:
-                paths.append(f"{self.path}/v={manifest[b]}/bucket={b}")
-                files_kept += 1
-                rows_kept = None
-                continue
-            for fname, fzone in sorted(fmap.items()):
-                if self._zone_may_match(
-                    fzone, extra, kinds
-                ) and self._zone_range_any(fzone, col, svals):
-                    paths.append(
-                        f"{self.path}/v={manifest[b]}/bucket={b}/{fname}"
-                    )
-                    files_kept += 1
-                    if rows_kept is not None:
-                        n = fzone.get("__rows")
-                        rows_kept = None if n is None else rows_kept + n
-        run_files, run_rows = self._run_volume(ptr)
-        self._record_scan(
-            {
-                "buckets_total": len(every),
-                "buckets_kept": len(kept),
-                "files_total": files_total,
-                "files_kept": files_kept,
-                "rows_total": rows_total,
-                "rows_kept": rows_kept,
-                "run_files": run_files,
-                "run_rows": run_rows,
-                "semi_join": True,
-            }
+        self._record_scan({**plan.report, "semi_join": True})
+        vschema = StructType([plan.schema[col]])
+        return self._scan(
+            plan,
+            extra,
+            include_tombstones,
+            semi=(self._local_frame([(v,) for v in vals], vschema), col)
+            if vals
+            else None,
         )
-        if not paths:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*paths)
-        df = self._mor_resolve(df, ptr, schema)
-        for p in extra:
-            df = self._apply_predicate(df, p)
-        by_name = {f.name: f for f in schema.fields}
-        vschema = StructType([by_name[col]])
-        # Arrow path for big scalar lists: a 100k-value probe ships as
-        # one Arrow batch instead of 100k pickled rows (~10× driver
-        # time); exotic value types fall back to the row path
-        vdf = None
-        if all(isinstance(v, (int, float, str)) for v in vals):
-            try:
-                import pandas as pd
 
-                vdf = self.spark.createDataFrame(
-                    pd.DataFrame({col: vals}), vschema
-                )
-            except Exception:  # noqa: BLE001 - fall back to row path
-                vdf = None
-        if vdf is None:
-            try:
-                vdf = self.spark.createDataFrame(
-                    [(v,) for v in vals], vschema
-                )
-            except Exception:  # noqa: BLE001
-                # a probe value that can't round-trip to the column's
-                # Spark type can never MATCH that type either — the
-                # literal IN this path replaces would silently not
-                # match it. Keep only the values the type verifier
-                # accepts (driver-side, no job) instead of raising.
-                from pyspark.sql.types import _make_type_verifier
-
-                verify = _make_type_verifier(
-                    vschema.fields[0].dataType, nullable=False
-                )
-                ok = []
-                for v in vals:
-                    try:
-                        verify(v)
-                        ok.append(v)
-                    except Exception:  # noqa: BLE001 - unmatchable value
-                        pass
-                vdf = self.spark.createDataFrame(
-                    [(v,) for v in ok], vschema
-                )
-        df = df.join(F.broadcast(vdf), col, "leftsemi")
-        guard = ptr.get("guard")
-        if guard and not include_tombstones:
-            df = df.filter(F.col(guard["op_col"]) != guard["delete_op"])
-        return df
-
-    def _bucket_col(self):
+    def _bucket_col(self, n_buckets: int | None = None):
         return F.pmod(
-            F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets)
+            F.hash(*[F.col(c) for c in self.key_cols]),
+            F.lit(n_buckets or self.n_buckets),
         )
 
     def _written_buckets(self, version: int) -> list[int]:
@@ -2525,27 +2423,16 @@ class SnapshotTable:
         count. The public surface for "how big is this table"
         (registered queries and harnesses previously read the raw
         pointer for this)."""
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
+        ptr = self._current_pointer()
         fstats_all = ptr.get("fstats") or {}
-        buckets: dict[int, int | None] = {}
-        total: int | None = 0
-        for b in ptr["buckets"]:
-            fmap = fstats_all.get(str(b))
-            if not fmap or any("__rows" not in z for z in fmap.values()):
-                buckets[int(b)] = None
-                total = None
-                continue
-            n = sum(z["__rows"] for z in fmap.values())
-            buckets[int(b)] = n
-            if total is not None:
-                total += n
-        _, run_rows = self._run_volume(ptr)
-        if ptr.get("runs") and run_rows is None:
-            total = None
-        elif total is not None:
-            total += run_rows or 0
+        buckets = {
+            int(b): self._file_rows(fstats_all.get(str(b)))
+            for b in ptr["buckets"]
+        }
+        _, run_rows = self._run_volume(ptr.get("runs") or [])
+        total: int | None = run_rows
+        for n in buckets.values():
+            total = _plus(total, n)
         return {"total": total, "buckets": buckets, "run_rows": run_rows}
 
     def _new_data_version(self) -> int:
@@ -3408,7 +3295,7 @@ class SnapshotTable:
             return len(runs)
         base = int(ptr["version"])
         schema = StructType.fromJson(json.loads(ptr["schema"]))
-        parts = self._load_runs(ptr, schema)
+        parts = self._load_runs(runs, schema)
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)

@@ -45,6 +45,12 @@ def _build_correlated(spark, tmp_path, n_buckets=4):
     return t, rows
 
 
+def _kept_buckets(t, predicates):
+    """(kept, every) base bucket ids of the read planner's bucket pass."""
+    plan = t._plan(t._read_pointer(), predicates=predicates)
+    return plan.buckets, sorted(int(b) for b in plan.ptr["buckets"])
+
+
 @pytest.fixture(scope="module")
 def correlated(spark, tmp_path_factory):
     """Shared READ-ONLY correlated table — tests that mutate must build
@@ -66,7 +72,7 @@ def test_stats_written_and_bounded(correlated):
 
 def test_read_where_prunes_and_stays_exact(correlated):
     t, rows = correlated
-    kept, every, _ptr = t._prune_buckets([("val", "<=", 10)])
+    kept, every = _kept_buckets(t, [("val", "<=", 10)])
     assert kept == [0] and len(every) == 4
 
     got = sorted(r.k for r in t.read_where([("val", "<=", 10)]).collect())
@@ -81,7 +87,7 @@ def test_read_where_prunes_and_stays_exact(correlated):
 def test_read_where_all_pruned_is_empty_not_error(correlated):
     t, _rows = correlated
     df = t.read_where([("val", ">", 10_000)])
-    kept, _, _ = t._prune_buckets([("val", ">", 10_000)])
+    kept, _ = _kept_buckets(t, [("val", ">", 10_000)])
     assert kept == []
     assert df.count() == 0
     assert df.schema == t.read().schema
@@ -190,7 +196,7 @@ def test_timestamp_zone_pruning(spark, tmp_path):
     want = sorted(k for k, ts in rows if ts < cut)
     assert got == want
     # out-of-range timestamp prunes everything
-    kept, _, _ = t._prune_buckets([("ts", ">", datetime.datetime(2030, 1, 1))])
+    kept, _ = _kept_buckets(t, [("ts", ">", datetime.datetime(2030, 1, 1))])
     assert kept == []
 
 
@@ -255,7 +261,7 @@ def test_read_where_prunes_files_within_surviving_buckets(spark, tmp_path):
 
     t = _build_clustered(spark, tmp_path)
     pred = [("val", "between", 1000, 1200)]
-    kept_b, every_b, _ = t._prune_buckets(pred)
+    kept_b, every_b = _kept_buckets(t, pred)
     assert kept_b == every_b  # bucket level cannot help here
     df = t.read_where(pred)
     rep = t.last_scan_report
@@ -321,7 +327,7 @@ def test_stats_disabled_keeps_everything_and_read_where_still_exact(
     t = SnapshotTable(spark, path, ["k"], n_buckets=4, collect_stats=False)
     t.overwrite(df, batch_id=0)
     assert t._read_pointer()["stats"] == {}
-    kept, every, _ = t._prune_buckets([("val", "<", 50)])
+    kept, every = _kept_buckets(t, [("val", "<", 50)])
     assert kept == every  # no stats → never prune
     got = sorted(r.k for r in t.read_where([("val", "<", 50)]).collect())
     assert got == [0, 1, 2, 3, 4]
