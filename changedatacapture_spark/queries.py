@@ -13656,6 +13656,10 @@ def _rrf_served_build(spark: SparkSession, sf_dir: str):
     # numbers, not "latest") and retain_history=2 keeps batch 0's
     # files readable across batch 1's vacuum. Batch 1's sync still
     # waits for batch 0's (same index/cell table, ordered appends).
+    # Helpers get their own pool: a chain blocks on its helper's
+    # result, so a helper queued behind the chains in a shared pool
+    # would wait forever once the pool had fewer workers than chains
+    # plus helpers.
     def _doc_chain(pool: ThreadPoolExecutor) -> None:
         dstore.merge(
             docs.filter(F.col("doc_id") % 2 == 0).withColumn(
@@ -13714,12 +13718,10 @@ def _rrf_served_build(spark: SparkSession, sf_dir: str):
             batch_id=1,
         )
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            pool.submit(_doc_chain, pool),
-            pool.submit(_vec_chain, pool),
-        ]
-        for f in futs:
+    chains = (_doc_chain, _vec_chain)
+    with ThreadPoolExecutor(max_workers=len(chains)) as helpers, \
+            ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        for f in [pool.submit(chain, helpers) for chain in chains]:
             f.result()
     return idx, cells
 

@@ -160,7 +160,8 @@ def run_mor_policy(
     - ``bytes_written``: every ``_do_write_buckets`` output (merge
       runs + fold rewrites) — the WRITE amplification a tighter
       threshold pays;
-    - ``n_minor`` / ``n_major``: folds the policy fired;
+    - ``n_minor`` / ``n_major``: folds the policy fired, from the
+      tier each commit records in ``history()``;
     - ``final_runs`` + ``resolve_wall_sec``: pending runs at the end
       and the cost of one resolving read — the READ amplification a
       looser threshold pays.
@@ -200,9 +201,8 @@ def run_mor_policy(
                 merge_mode="mor",
                 compact_minor_ratio=minor_r, compact_major_ratio=major_r,
             )
-            counters = {"bytes": 0, "minor": 0, "major": 0}
+            counters = {"bytes": 0}
             orig_write = table._do_write_buckets
-            orig_minor, orig_major = table.compact_runs, table.compact
 
             def write_hook(
                 df, version, dynamic=False, records_per_file=None, **kw
@@ -215,17 +215,7 @@ def run_mor_policy(
                 )
                 return written
 
-            def minor_hook():
-                counters["minor"] += 1
-                return orig_minor()
-
-            def major_hook():
-                counters["major"] += 1
-                return orig_major()
-
             table._do_write_buckets = write_hook
-            table.compact_runs = minor_hook
-            table.compact = major_hook
             t0 = time.time()
             for i, fs in enumerate(batches):
                 raw = (
@@ -237,10 +227,13 @@ def run_mor_policy(
             n_rows = table.read().count()
             resolve_wall = time.time() - t1
             ptr = table._read_pointer() or {}
+            # folds ride their batch's commit: count them from the
+            # tier each commit records
+            tiers = [e.get("maintenance") for e in table.history()]
             out[f"minor={minor_r},major={major_r}"] = {
                 "bytes_written": counters["bytes"],
-                "n_minor": counters["minor"],
-                "n_major": counters["major"],
+                "n_minor": tiers.count("minor"),
+                "n_major": tiers.count("major") + tiers.count("files"),
                 "final_runs": len(ptr.get("runs") or []),
                 "final_rows": n_rows,
                 "apply_wall_sec": round(apply_wall, 2),

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sink import SnapshotTable
+from .sink import MaintenancePolicy, SnapshotTable
 
 
 class SecondaryIndex:
@@ -83,9 +83,9 @@ class SecondaryIndex:
         self.spark = spark
         self.table = table
         self.col = col
-        #: posting-store maintenance policy, evaluated automatically
-        #: after every :meth:`sync` (the same knobs ``CdcPipeline``
-        #: applies to the base table after every batch — an index that
+        #: posting-store maintenance policy, carried by every
+        #: :meth:`sync`'s posting merge (the same knobs ``CdcPipeline``
+        #: applies to the base table on every batch — an index that
         #: needed a separate operator runbook to stay healthy would
         #: rot on exactly the high-churn tables it exists for). In
         #: ``postings_mode="mor"`` with no explicit policy, runs fold
@@ -214,12 +214,19 @@ class SecondaryIndex:
                 .join(adds.select(*cols), cols, "left_anti")
                 .withColumn("op", F.lit("d"))
             )
-            self.postings.merge(
+            # the posting-store policy rides the merge: a due fold
+            # commits with the postings (see SnapshotTable.merge)
+            did = self.postings.merge(
                 adds.unionByName(dels),
                 batch_id=v_now,
                 mode=self.postings_mode,
+                maintain=MaintenancePolicy(
+                    self.compact_minor_ratio,
+                    self.compact_major_ratio,
+                    self.compact_max_files_per_bucket,
+                    self.compact_every,
+                ),
             )
-            did = self._maintain()
             return {
                 "mode": "incremental", "from": v_from, "to": v_now,
                 "maintenance": did,
@@ -233,19 +240,6 @@ class SecondaryIndex:
         )
         self.postings.overwrite(full, batch_id=v_now)
         return {"mode": "full", "from": v_from, "to": v_now}
-
-    def _maintain(self) -> str:
-        """Evaluate the posting-store maintenance policy (driver
-        metadata only when nothing trips). Same crash-deferral
-        argument as the pipeline's post-batch hook: the sync's merge
-        already committed, so a crash here only defers the fold to
-        the next sync."""
-        return self.postings.compact_by_size(
-            self.compact_minor_ratio,
-            self.compact_major_ratio,
-            self.compact_max_files_per_bucket,
-            self.compact_every,
-        )
 
     # -- lookup -----------------------------------------------------------
 

@@ -25,7 +25,7 @@ from pyspark.sql.types import StructType
 
 from changedatacapture_spark.operators.cdc import compact_latest
 from changedatacapture_spark.schema.envelope import debezium_envelope_schema
-from changedatacapture_spark.streaming.sink import SnapshotTable
+from changedatacapture_spark.streaming.sink import MaintenancePolicy, SnapshotTable
 
 
 def fan_out(raw: DataFrame, spark: SparkSession) -> DataFrame:
@@ -163,8 +163,13 @@ class CdcPipeline:
         #: copy-on-write amplification would rewrite the table per
         #: micro-batch (see SnapshotTable.merge mode="mor")
         self.merge_mode = merge_mode
-        #: maintenance policy, evaluated after every batch by one
-        #: SnapshotTable.compact_by_size call (None disables a tier).
+        #: maintenance policy, carried by every batch's one
+        #: SnapshotTable.merge call (None disables a tier): a MoR batch
+        #: that finds a fold due rides it (one write, one commit; see
+        #: merge's ``maintain``), a copy-on-write batch evaluates the
+        #: policy after its commit. Byte-tier folds weigh the runs
+        #: committed before the batch, so one fires one batch later
+        #: than a check after the append would.
         #: Run-count tier, for MoR: MINOR-compact (compact_runs — fold
         #: all pending delta runs into one at DELTA cost, base
         #: untouched) once this many runs are pending: the cadence
@@ -387,8 +392,17 @@ class CdcPipeline:
         try:
             for view in self._agg_views:
                 view.apply(compacted, batch_id=batch_id)
+            # the maintenance policy rides the merge, in either mode:
+            # the file-count tier heals churny clustered copy-on-write
+            # merges too
             self.table.merge(
-                compacted, batch_id=batch_id, mode=self.merge_mode
+                compacted, batch_id=batch_id, mode=self.merge_mode,
+                maintain=MaintenancePolicy(
+                    self.compact_minor_ratio,
+                    self.compact_major_ratio,
+                    self.compact_max_files_per_bucket,
+                    self.compact_every,
+                ),
             )
             # join views read POST-merge state: the batch's touched
             # fact keys re-join against the just-committed snapshot
@@ -401,14 +415,6 @@ class CdcPipeline:
         finally:
             if multi_consumer:
                 compacted.unpersist()
-        # the maintenance policy, in either merge mode: the file-count
-        # tier heals churny clustered copy-on-write merges too
-        self.table.compact_by_size(
-            self.compact_minor_ratio,
-            self.compact_major_ratio,
-            self.compact_max_files_per_bucket,
-            self.compact_every,
-        )
 
     def bootstrap(self, raw: DataFrame, batch_id: int = -1) -> None:
         """Kappa-style historical bootstrap: apply an arbitrarily large

@@ -37,7 +37,8 @@ import threading
 import time
 from collections.abc import Sequence
 from contextlib import contextmanager, nullcontext
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -387,6 +388,17 @@ _MOR_GUARDED = (
 )
 
 
+class MaintenancePolicy(NamedTuple):
+    """The maintenance tiers a merge carries (``merge(maintain=...)``)
+    and :meth:`SnapshotTable.compact_by_size` evaluates; None disables
+    a tier. See :meth:`SnapshotTable._due_tier` for the rule."""
+
+    minor_ratio: float | None = None
+    major_ratio: float | None = None
+    max_files_per_bucket: int | None = None
+    compact_every: int | None = None
+
+
 @dataclass
 class _Attempt:
     """One merge attempt: the pointer it planned against and what it
@@ -398,6 +410,12 @@ class _Attempt:
     #: bucket modulus the staged files were routed with
     n_buckets: int
     batch_id: int | None
+    #: schema the commit records (the batch's evolution applied): a
+    #: fold reads every input under it
+    evolved: object = None
+    #: the fold this attempt rides (``minor``/``major``/``files``),
+    #: decided against ``ptr`` before any job; None = a plain write
+    maintenance: str | None = None
     pv: int | None = None
     #: base buckets the commit replaces (found by the probe)
     touched: list = field(default_factory=list)
@@ -452,10 +470,17 @@ class _CopyOnWrite:
     commits_empty = True
     #: guard metadata the commit records; None carries the pointer's
     guard: dict | None = None
+    #: whether the maintenance tier rides the write (else the policy
+    #: is evaluated on the committed state after the merge)
+    fuses = False
 
     def __init__(self, op_col: str, delete_op: str) -> None:
         self.op_col = op_col
         self.delete_op = delete_op
+
+    def tier(self, t, ptr: dict) -> str | None:
+        """The fold this attempt rides, decided against ``ptr``."""
+        return None
 
     def initial(self, t, compacted: DataFrame) -> DataFrame:
         """The table's rows when this batch creates it."""
@@ -621,7 +646,10 @@ class _MergeOnRead(_CopyOnWrite):
     touching every bucket rewrites the WHOLE table under copy-on-write
     but appends only ~batch-size bytes here (SURVEY §7.5), paid for at
     read time by one latest-per-key aggregate until a compaction folds
-    the runs."""
+    the runs. With a maintenance ``policy``, a batch that finds a fold
+    due rides it (fold on write, see :meth:`SnapshotTable.merge`): the
+    attempt writes one folded run or one new base instead of a run
+    that a second write would fold right after."""
 
     probes = False
     #: an idle stream tick that lands no bytes and evolves no schema
@@ -629,17 +657,58 @@ class _MergeOnRead(_CopyOnWrite):
     #: toward the run-count compaction tier and bloat every read's run
     #: list
     commits_empty = False
+    #: the maintenance tier is decided before the write and rides it
+    fuses = True
+
+    def __init__(
+        self, op_col: str, delete_op: str,
+        policy: MaintenancePolicy | None = None,
+    ) -> None:
+        super().__init__(op_col, delete_op)
+        self.policy = policy
 
     def check(self, ptr: dict) -> None:
         if ptr.get("guard"):
             raise ValueError(_MOR_GUARDED)
 
+    def tier(self, t, ptr: dict) -> str | None:
+        return t._due_tier(ptr, self.policy, incoming=True)
+
     def rebases(self, a: _Attempt, ptr: dict) -> bool:
         # appends commute: a lost commit re-commits onto the winner's
-        # run list (run ORDER still serializes last-writer-wins per key)
-        return True
+        # run list (run ORDER still serializes last-writer-wins per key).
+        # A fold replaced the runs (and base) it read, which the winner
+        # may have changed: it replans
+        return a.maintenance is None
+
+    def _as_run(self, source: DataFrame, schema) -> DataFrame:
+        """The batch in run shape under ``schema``: every column cast
+        to its committed type (null where the batch lacks it) plus the
+        ``_mor_del`` mask."""
+        have = set(source.columns)
+        return source.select(
+            *[
+                (F.col(f.name) if f.name in have else F.lit(None))
+                .cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ],
+            (F.col(self.op_col) == F.lit(self.delete_op)).alias("_mor_del"),
+        )
 
     def write(self, t, source: DataFrame, a: _Attempt) -> None:
+        if a.maintenance == "minor":
+            a.runs = t._fold_runs(
+                a.ptr, a.evolved, a.pv, a.batch_id,
+                self._as_run(source, a.evolved),
+            )
+            return
+        if a.maintenance is not None:
+            a.touched = sorted(int(b) for b in a.ptr["buckets"])
+            a.written = t._fold_base(
+                a.ptr, a.evolved, a.pv, self._as_run(source, a.evolved),
+                t.target_file_bytes if a.maintenance == "files" else None,
+            )
+            return
         run = source.withColumn(
             "_mor_del", F.col(self.op_col) == F.lit(self.delete_op)
         ).drop(self.op_col)
@@ -1064,7 +1133,10 @@ class SnapshotTable:
         stale_stats_buckets: set[int] | None = None,
         data_version: int | None = None,
         runs: list[dict] | None = None,
+        maintenance: str | None = None,
     ) -> None:
+        # maintenance: the fold this commit ran (minor/major/files, or
+        # None), recorded in the entry history() returns.
         # data_version: the writer-unique PHYSICAL directory id this
         # commit's fresh files were written under (see
         # _new_data_version). Logical pointer versions stay sequential;
@@ -1203,6 +1275,7 @@ class SnapshotTable:
             "stats_ref": stats_ref,
             "fstats_ref": fstats_ref,
             "runs": runs or [],
+            "maintenance": maintenance,
         }
         os.makedirs(self.path, exist_ok=True)
         if side_stats or side_fstats:
@@ -1297,8 +1370,10 @@ class SnapshotTable:
         """Commit log, oldest first — the ``DESCRIBE HISTORY`` analogue.
 
         One entry per committed version (version, batch_id, schema,
-        bucket manifest, guard). A version written twice because of a
-        crash between log append and pointer flip keeps its LAST line.
+        bucket manifest, guard, and ``maintenance``: the fold the
+        commit ran — ``minor``, ``major``, ``files`` — or None). A
+        version written twice because of a crash between log append
+        and pointer flip keeps its LAST line.
         """
         entries: dict[int, dict] = {}
         try:
@@ -1312,13 +1387,16 @@ class SnapshotTable:
         current = self.version
         return [entries[v] for v in sorted(entries) if v <= current]
 
-    def _load_runs(self, runs: list[dict], schema) -> list[DataFrame]:
+    def _load_runs(
+        self, runs: list[dict], schema, batch: DataFrame | None = None
+    ) -> list[DataFrame]:
         """One DataFrame per pending merge-on-read run (committed
         logical schema + the ``_mor_del`` mask), each tagged with its
         1-based ``_mor_seq`` commit order — the shared loader behind
-        :meth:`_mor_resolve` and :meth:`compact_runs`. Paths come from
-        the commit entry's recorded bucket list, never a directory
-        LIST."""
+        :meth:`_mor_resolve` and :meth:`_fold_runs`. An incoming
+        ``batch`` already in run shape rides as the newest run. Paths
+        come from the commit entry's recorded bucket list, never a
+        directory LIST."""
         from pyspark.sql.types import BooleanType, StructField, StructType
 
         run_schema = StructType(
@@ -1333,10 +1411,13 @@ class SnapshotTable:
                 ]
             )
             out.append(rdf.withColumn("_mor_seq", F.lit(i)))
+        if batch is not None:
+            out.append(batch.withColumn("_mor_seq", F.lit(len(runs) + 1)))
         return out
 
     def _mor_resolve(
-        self, base: DataFrame, runs: list[dict], schema
+        self, base: DataFrame, runs: list[dict], schema,
+        batch: DataFrame | None = None,
     ) -> DataFrame:
         """Merge-on-read resolution: fold the pointer's delta runs
         (``merge(mode="mor")`` appends — see that docstring) over the
@@ -1347,8 +1428,9 @@ class SnapshotTable:
         ``compact_latest`` the CDC core uses — one hash aggregate,
         no window. Delete winners drop from the logical view. Run
         file paths come from the commit entry's recorded bucket list,
-        never a directory LIST."""
-        if not runs:
+        never a directory LIST. ``batch`` rides as the newest run (see
+        :meth:`_fold_base`)."""
+        if not runs and batch is None:
             return base
         from changedatacapture_spark.operators.cdc import compact_latest
 
@@ -1356,7 +1438,7 @@ class SnapshotTable:
             base.withColumn("_mor_del", F.lit(False)).withColumn(
                 "_mor_seq", F.lit(0)
             )
-        ] + self._load_runs(runs, schema)
+        ] + self._load_runs(runs, schema, batch)
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
@@ -1559,10 +1641,12 @@ class SnapshotTable:
         predicates: Sequence[tuple] = (),
         include_tombstones: bool = False,
         semi: tuple[DataFrame, object] | None = None,
+        batch: DataFrame | None = None,
     ) -> DataFrame:
         """The DataFrame of a :meth:`_plan`: its paths read under the
         committed schema (an empty frame when nothing survived), the
-        kept MoR runs resolved over them, ``predicates`` re-applied as
+        kept MoR runs (and an incoming run-shaped ``batch``, for a
+        fold) resolved over them, ``predicates`` re-applied as
         real filters (so results are exact whatever was pruned), an
         optional broadcast left-semi join ``(frame, on)``, and the
         guard-tombstone filter of an order-guarded table.
@@ -1576,7 +1660,7 @@ class SnapshotTable:
             df = self.spark.read.schema(plan.schema).parquet(*plan.paths)
         else:  # every row deleted, all pruned, or MoR runs carry all
             df = self.spark.createDataFrame([], plan.schema)
-        df = self._mor_resolve(df, plan.runs, plan.schema)
+        df = self._mor_resolve(df, plan.runs, plan.schema, batch)
         for p in predicates:
             df = self._apply_predicate(df, p)
         if semi is not None:
@@ -2884,7 +2968,8 @@ class SnapshotTable:
         guard_cols: list[str] | None = None,
         retry_conflicts: int = 0,
         mode: str = "cow",
-    ) -> None:
+        maintain: MaintenancePolicy | None = None,
+    ) -> str:
         """Apply a compacted micro-batch (≤1 row per key) as one merge.
 
         Only buckets whose hash range contains a touched key are
@@ -2939,6 +3024,24 @@ class SnapshotTable:
         Either way both writers' batches end up applied, one commit
         per writer in the history, until the retry budget is
         exhausted — then the original loud failure.
+
+        ``maintain`` carries the table's maintenance policy, so a batch
+        and its upkeep are one call; the return value is the tier that
+        ran (``"none"``, ``"minor"``, ``"major"`` or ``"files"``, as
+        :meth:`compact_by_size` reports). A merge-on-read merge onto an
+        existing table picks the tier BEFORE its write
+        (:meth:`_due_tier`, the batch counting as one more run) and a
+        due fold rides the batch: one write, one commit, whose history
+        entry records the fold. Byte tiers weigh the COMMITTED runs, so
+        a byte-tier fold fires one batch later than a check after the
+        append would: a reader may see one more pending run for one
+        batch interval. An attempt that folds replans instead of
+        rebasing after a lost race; an empty batch that finds a fold
+        due commits the fold under its batch id (so its replay is a
+        no-op like any other). Every other path — copy-on-write and
+        guarded merges, the batch that creates the table, a replayed
+        batch — evaluates the policy on the committed state after the
+        merge, as :meth:`compact_by_size` does.
         """
         from pyspark.sql.types import StructType
 
@@ -2947,7 +3050,7 @@ class SnapshotTable:
         if mode == "mor":
             if guard_cols is not None:
                 raise ValueError(_MOR_GUARDED)
-            strategy = _MergeOnRead(op_col, delete_op)
+            strategy = _MergeOnRead(op_col, delete_op, maintain)
         elif guard_cols is not None:
             strategy = _OrderGuarded(op_col, delete_op, list(guard_cols))
         else:
@@ -2957,7 +3060,7 @@ class SnapshotTable:
             # per attempt: after a lost race the winner may have been
             # this batch's own replay
             if batch_id is not None and batch_id == self.last_batch_id():
-                return
+                break
             try:
                 ptr = self._read_pointer()
                 if ptr is None:
@@ -2965,7 +3068,7 @@ class SnapshotTable:
                         strategy.initial(self, compacted), batch_id, -1,
                         strategy.guard,
                     )
-                    return
+                    break
                 strategy.check(ptr)
                 self._adopt_committed_layout(ptr)
                 schema = StructType.fromJson(json.loads(ptr["schema"]))
@@ -2974,20 +3077,30 @@ class SnapshotTable:
                     schema, compacted.schema, op_col, evolve_schema,
                     self.key_cols,
                 ))
-                if staged is not None and not self._rebases(
-                    strategy, staged, ptr
+                tier = strategy.tier(self, ptr)
+                if staged is not None and (
+                    staged.maintenance != tier
+                    or not self._rebases(strategy, staged, ptr)
                 ):
                     staged = None
                 if staged is None:
-                    staged = self._stage(strategy, compacted, ptr, schema, batch_id)
+                    staged = self._stage(
+                        strategy, compacted, ptr, schema, batch_id,
+                        evolved, tier,
+                    )
                 if (
                     not strategy.commits_empty
                     and not staged.runs
+                    and staged.maintenance is None
                     and evolved == schema
                 ):
-                    return
+                    return "none"
                 version = int(ptr["version"])
                 rebased = version != staged.base
+                # a fold replaces the runs it read; an append adds one
+                runs = staged.runs if staged.maintenance else (
+                    (ptr.get("runs") or []) + staged.runs
+                )
                 self._commit(
                     version + 1,
                     batch_id,
@@ -2998,7 +3111,9 @@ class SnapshotTable:
                     json.dumps(evolved.jsonValue()),
                     strategy.guard,
                     expected_base=version,
-                    fresh_stats=self.stats_on_merge,
+                    # a base fold is a full rewrite: fresh zone maps
+                    fresh_stats=self.stats_on_merge
+                    or staged.maintenance in ("major", "files"),
                     # a rebased commit points buckets at files planned
                     # against an earlier version: carried stats would
                     # describe the winner's view of content this
@@ -3008,13 +3123,17 @@ class SnapshotTable:
                         if rebased else None
                     ),
                     data_version=staged.pv,
-                    runs=(ptr.get("runs") or []) + staged.runs,
+                    runs=runs,
+                    maintenance=staged.maintenance,
                 )
                 self._vacuum()
-                return
+                if strategy.fuses:
+                    return staged.maintenance or "none"
+                break
             except ConcurrentWriteError:
                 if attempt == retry_conflicts:
                     raise
+        return "none" if maintain is None else self.compact_by_size(*maintain)
 
     @contextmanager
     def _static_merge_planning(self):
@@ -3070,7 +3189,7 @@ class SnapshotTable:
 
     def _stage(
         self, strategy, compacted: DataFrame, ptr: dict, schema,
-        batch_id: int | None,
+        batch_id: int | None, evolved, tier: str | None,
     ) -> _Attempt:
         """Plan one merge attempt against ``ptr`` and write its files.
 
@@ -3081,30 +3200,32 @@ class SnapshotTable:
         race."""
         from pyspark.sql import Observation
 
-        a = _Attempt(ptr, schema, self.n_buckets, batch_id)
+        a = _Attempt(
+            ptr, schema, self.n_buckets, batch_id, evolved, tier
+        )
         # committed key types govern hash routing — see _align_key_types
         source = _align_key_types(
             compacted, schema, self.key_cols
         ).withColumn("bucket", self._bucket_col())
-        if strategy.probes:
-            # persist once: the batch plan (parse + compact shuffle)
-            # feeds the probe and the write's consumers (anti-join
-            # broadcast, upsert union) — without this it would
-            # re-execute per consumer
-            source = source.persist()
         try:
             if strategy.probes:
-                # bounded driver metadata: the touched-bucket set and
-                # the batch size that decides the anti-join strategy,
-                # OBSERVED during the cache-materializing noop write
-                # instead of a separate groupBy + collect — the old
-                # probe added an aggregation exchange and a collect
-                # round, which under AQE ran as two extra jobs per
-                # micro-batch (r19 event-log attribution: 5 probe jobs
-                # -> 3, and 1 with static planning). collect_set is
-                # ≤ n_buckets values.
+                # persist once: the batch plan (parse + compact shuffle)
+                # feeds the probe and the write's consumers (anti-join
+                # broadcast, upsert union) — without this it would
+                # re-execute per consumer. The cached plan is fixed at
+                # persist(), so it must be planned inside the static
+                # window too: an adaptive cached plan runs each of its
+                # exchanges as its own job.
+                # The probe's bounded driver metadata — the
+                # touched-bucket set and the batch size that decides
+                # the anti-join strategy — is OBSERVED during the
+                # cache-materializing noop write instead of a separate
+                # groupBy + collect (r19 event-log attribution: 5 probe
+                # jobs -> 3, and 1 with static planning). collect_set
+                # is ≤ n_buckets values.
                 obs = Observation()
                 with self._static_merge_planning():
+                    source = source.persist()
                     (
                         source.observe(
                             obs,
@@ -3182,9 +3303,16 @@ class SnapshotTable:
         metadata, and the replay batch id are all carried through
         bit-identically: compaction is a physical rewrite, not a batch.
         Cost is one full-table scan + write — schedule it off the hot
-        path (e.g. per N merges), like OPTIMIZE. Returns the number of
+        path (e.g. per N merges), like OPTIMIZE. The rewrite is the
+        major-fold body (:meth:`_fold_base`); its commit records the
+        tier ``"major"`` in :meth:`history`. Returns the number of
         data files the new version holds.
         """
+        return self._compact(target_file_bytes, "major")
+
+    def _compact(self, target_file_bytes: int | None, maintenance: str) -> int:
+        """:meth:`compact`, committed as the tier ``maintenance`` (the
+        file-count tier's repack records ``"files"``)."""
         ptr = self._read_pointer()
         if ptr is None:
             raise FileNotFoundError(f"no snapshot at {self.path}")
@@ -3241,27 +3369,58 @@ class SnapshotTable:
                     break
             if meets:
                 return n_files_now
-        full = self.read(include_tombstones=True)
-        rpf = None
-        if target_file_bytes is not None:
-            on_disk = self.base_bytes() + self.pending_run_bytes()
-            # count the SAME plan the rewrite reads (not a second
-            # definition); footer-only on pure CoW — see docstring
-            n_rows = full.count()
-            if n_rows > 0 and on_disk > 0:
-                rpf = max(
-                    1, int(n_rows * target_file_bytes / on_disk)
-                )
-        pv = self._replace(
-            full, ptr.get("batch_id"), int(ptr["version"]),
-            schema_json=ptr["schema"], records_per_file=rpf,
+        from pyspark.sql.types import StructType
+
+        base = int(ptr["version"])
+        pv = self._new_data_version()
+        written = self._fold_base(
+            ptr, StructType.fromJson(json.loads(ptr["schema"])), pv,
+            target_file_bytes=target_file_bytes,
         )
+        self._commit(
+            base + 1, ptr.get("batch_id"), {b: pv for b in written},
+            ptr["schema"], expected_base=base, data_version=pv,
+            maintenance=maintenance,
+        )
+        self._vacuum()
         root = f"{self.path}/v={pv}"
         return sum(
             1
             for _, _, files in os.walk(root)
             for fn in files
             if fn.endswith(".parquet")
+        )
+
+    def _fold_base(
+        self, ptr: dict, schema, pv: int, batch: DataFrame | None = None,
+        target_file_bytes: int | None = None,
+    ) -> list[int]:
+        """The MAJOR fold body, shared by :meth:`compact` and a
+        merge-on-read merge that rides a major fold: write ``ptr``'s
+        base ∪ pending runs (∪ an incoming run-shaped ``batch``, the
+        newest run), resolved to the latest row per key and read under
+        ``schema``, as a whole new base under ``pv`` — range-clustered
+        like any full rewrite; the commit takes fresh zone maps.
+        Guard tombstones are kept (a compaction is physical). With
+        ``target_file_bytes``, rows-per-file comes from the rewrite's
+        own row count over the table's on-disk bytes (see
+        :meth:`compact`). Returns the buckets written."""
+        full = self._scan(
+            replace(self._plan(ptr), schema=schema),
+            include_tombstones=True, batch=batch,
+        )
+        rpf = None
+        if target_file_bytes is not None:
+            on_disk = self._base_bytes(ptr) + self._run_bytes(ptr)
+            # count the SAME plan the rewrite reads (not a second
+            # definition); footer-only on pure CoW — see compact()
+            n_rows = full.count()
+            if n_rows > 0 and on_disk > 0:
+                rpf = max(1, int(n_rows * target_file_bytes / on_disk))
+        return self._write_buckets(
+            full.withColumn("bucket", self._bucket_col()), pv,
+            expected_base=int(ptr["version"]), records_per_file=rpf,
+            range_cluster=True,
         )
 
     def compact_runs(self) -> int:
@@ -3277,12 +3436,12 @@ class SnapshotTable:
         drops from base + N runs to base + 1 run, and point lookups
         probe one run directory per bucket instead of N. Delete
         markers MUST survive the fold (unlike major compaction) — a
-        folded delete still has base rows to mask. Returns the number
-        of pending runs folded (0/1 = nothing to do).
+        folded delete still has base rows to mask. The fold is
+        :meth:`_fold_runs`, the same body a merge-on-read merge rides.
+        Returns the number of pending runs folded (0/1 = nothing to
+        do).
         """
         from pyspark.sql.types import StructType
-
-        from changedatacapture_spark.operators.cdc import compact_latest
 
         ptr = self._read_pointer()
         if ptr is None:
@@ -3294,18 +3453,10 @@ class SnapshotTable:
         if len(runs) <= 1:
             return len(runs)
         base = int(ptr["version"])
-        schema = StructType.fromJson(json.loads(ptr["schema"]))
-        parts = self._load_runs(runs, schema)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        payload = [f.name for f in schema.fields
-                   if f.name not in self.key_cols] + ["_mor_del"]
-        folded = compact_latest(u, self.key_cols, ["_mor_seq"], payload)
         pv = self._new_data_version()
-        written = self._write_buckets(
-            folded.withColumn("bucket", self._bucket_col()), pv,
-            expected_base=base,
+        folded = self._fold_runs(
+            ptr, StructType.fromJson(json.loads(ptr["schema"])), pv,
+            runs[-1].get("batch_id"),
         )
         self._commit(
             base + 1,
@@ -3315,17 +3466,44 @@ class SnapshotTable:
             expected_base=base,
             fresh_stats=False,
             data_version=pv,
-            runs=[
-                {
-                    "v": pv,
-                    "batch_id": runs[-1].get("batch_id"),
-                    "buckets": sorted(written),
-                    "fstats": self._footer_fstats(pv, written),
-                }
-            ],
+            runs=folded,
+            maintenance="minor",
         )
         self._vacuum()
         return len(runs)
+
+    def _fold_runs(
+        self, ptr: dict, schema, pv: int, batch_id: int | None,
+        batch: DataFrame | None = None,
+    ) -> list[dict]:
+        """The MINOR fold body, shared by :meth:`compact_runs` and a
+        merge-on-read merge that rides a minor fold: ``ptr``'s pending
+        runs (∪ an incoming run-shaped ``batch``, the newest run) read
+        under ``schema`` and folded to the latest row per key, delete
+        masks kept, written under ``pv``. Returns the run list that
+        replaces the pending runs: one run entry tagged ``batch_id``
+        (empty if nothing was written)."""
+        from changedatacapture_spark.operators.cdc import compact_latest
+
+        parts = self._load_runs(ptr.get("runs") or [], schema, batch)
+        u = parts[0]
+        for p in parts[1:]:
+            u = u.unionByName(p)
+        payload = [f.name for f in schema.fields
+                   if f.name not in self.key_cols] + ["_mor_del"]
+        folded = compact_latest(u, self.key_cols, ["_mor_seq"], payload)
+        written = self._write_buckets(
+            folded.withColumn("bucket", self._bucket_col()), pv,
+            expected_base=int(ptr["version"]),
+        )
+        if not written:
+            return []
+        return [{
+            "v": pv,
+            "batch_id": batch_id,
+            "buckets": sorted(written),
+            "fstats": self._footer_fstats(pv, written),
+        }]
 
     def _derived_records_per_file(self) -> int | None:
         """Rows-per-file cap that lands files near
@@ -3379,8 +3557,9 @@ class SnapshotTable:
     def base_bytes(self) -> int:
         """Parquet bytes of the copy-on-write base (manifest buckets)."""
         ptr = self._read_pointer()
-        if ptr is None:
-            return 0
+        return 0 if ptr is None else self._base_bytes(ptr)
+
+    def _base_bytes(self, ptr: dict) -> int:
         by_version: dict[int, list[int]] = {}
         for b, v in ptr["buckets"].items():
             by_version.setdefault(int(v), []).append(int(b))
@@ -3391,8 +3570,9 @@ class SnapshotTable:
     def pending_run_bytes(self) -> int:
         """Parquet bytes of all pending merge-on-read delta runs."""
         ptr = self._read_pointer()
-        if ptr is None:
-            return 0
+        return 0 if ptr is None else self._run_bytes(ptr)
+
+    def _run_bytes(self, ptr: dict) -> int:
         return sum(
             self._bucket_dir_bytes(int(r["v"]), r.get("buckets") or [])
             for r in ptr.get("runs") or []
@@ -3461,44 +3641,67 @@ class SnapshotTable:
         minor fold once that many runs (and at least two) are pending
         — the cadence that bounds read amplification at base +
         ``compact_every`` runs without a full-table rewrite per
-        trigger. This method is the one place the maintenance tier is
-        picked (``CdcPipeline`` and ``SecondaryIndex`` evaluate their
-        policy through it after every batch or sync); with every tier
-        disabled it returns ``"none"`` without reading the pointer. A
-        crash after the caller's commit but before a fold only defers
-        the fold to the next evaluation: folds are physical rewrites
-        that carry the batch id through.
+        trigger. The tier comes from :meth:`_due_tier`, the one rule
+        a merge carrying the same policy (``merge(maintain=...)``,
+        how ``CdcPipeline`` and ``SecondaryIndex`` apply theirs) also
+        decides by; with every tier disabled this returns ``"none"``
+        without reading the pointer. A crash after a merge's commit
+        but before a post-merge fold only defers the fold to the next
+        evaluation: folds are physical rewrites that carry the batch
+        id through.
         """
-        tiers = (minor_ratio, major_ratio, max_files_per_bucket, compact_every)
-        if all(x is None for x in tiers):
+        policy = MaintenancePolicy(
+            minor_ratio, major_ratio, max_files_per_bucket, compact_every
+        )
+        if all(x is None for x in policy):
             return "none"
         ptr = self._read_pointer()
         if ptr is None:
             return "none"
+        tier = self._due_tier(ptr, policy, incoming=False)
+        if tier == "minor":
+            self.compact_runs()
+        elif tier == "major":
+            self.compact()
+        elif tier == "files":
+            self._compact(self.target_file_bytes, "files")
+        return tier or "none"
+
+    def _due_tier(
+        self, ptr: dict, policy: MaintenancePolicy | None, incoming: bool
+    ) -> str | None:
+        """The one maintenance-tier rule (the tiers of
+        :meth:`compact_by_size`, in its order): ``"minor"``,
+        ``"major"``, ``"files"`` or None, decided on the driver from
+        ``ptr`` alone (pointer metadata and directory stats, no Spark
+        job). ``incoming`` counts a batch about to be written as one
+        more run, for a merge-on-read merge asking before its write;
+        byte tiers always weigh the COMMITTED runs."""
+        if policy is None:
+            return None
+        minor_ratio, major_ratio, max_files, every = policy
         runs = ptr.get("runs") or []
-        if runs:
-            if compact_every is not None and len(runs) >= max(2, compact_every):
-                self.compact_runs()
+        n = len(runs) + int(incoming)
+        if n:
+            if every is not None and n >= max(2, every):
                 return "minor"
-            pending = self.pending_run_bytes()
-            base = max(self.base_bytes(), 1)
-            if major_ratio is not None and pending >= major_ratio * base:
-                self.compact()
-                return "major"
-            if (
-                minor_ratio is not None
-                and len(runs) >= 2
-                and pending >= minor_ratio * base
-            ):
-                self.compact_runs()
-                return "minor"
+            if minor_ratio is not None or major_ratio is not None:
+                pending = self._run_bytes(ptr)
+                base = max(self._base_bytes(ptr), 1)
+                if major_ratio is not None and pending >= major_ratio * base:
+                    return "major"
+                if (
+                    minor_ratio is not None
+                    and n >= 2
+                    and pending >= minor_ratio * base
+                ):
+                    return "minor"
         if (
-            max_files_per_bucket is not None
-            and self._max_files_per_bucket(ptr) > max_files_per_bucket
+            max_files is not None
+            and self._max_files_per_bucket(ptr) > max_files
         ):
-            self.compact(target_file_bytes=self.target_file_bytes)
             return "files"
-        return "none"
+        return None
 
     def fsck(self, deep: bool = False) -> dict:
         """Filesystem consistency check — the operational audit a

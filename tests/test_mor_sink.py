@@ -308,3 +308,197 @@ def test_minor_compaction_folds_runs_preserving_deletes(spark, tmp_path):
     t.compact()
     assert t._read_pointer()["runs"] == []
     assert (9, 999) in set(_rows(t))
+
+
+# -- fold on write: a merge carrying a maintenance policy rides its due
+# fold, so each batch costs one write and one commit
+
+
+def _policy(**kw):
+    from changedatacapture_spark.streaming.sink import MaintenancePolicy
+
+    return MaintenancePolicy(**kw)
+
+
+def _seeded(spark, tmp_path, n=12):
+    t = SnapshotTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4)
+    t.merge(_batch(spark, [(k, "c", k * 10) for k in range(n)]), batch_id=0)
+    return t
+
+
+def test_fused_folds_record_tier_and_batch_in_history(spark, tmp_path):
+    """A minor fold and a major fold each ride their batch: one commit
+    per batch, whose history entry names the fold and the batch."""
+    t = _seeded(spark, tmp_path)
+    every2 = _policy(compact_every=2)
+    assert t.merge(
+        _batch(spark, [(1, "u", 11)]), batch_id=1, mode="mor", maintain=every2
+    ) == "none"
+    assert t.merge(
+        _batch(spark, [(2, "u", 22)]), batch_id=2, mode="mor", maintain=every2
+    ) == "minor"
+    hist = t.history()
+    assert len(hist) == 3
+    assert hist[-1]["maintenance"] == "minor" and hist[-1]["batch_id"] == 2
+    assert [r["batch_id"] for r in hist[-1]["runs"]] == [2]
+    assert t.merge(
+        _batch(spark, [(3, "d", 0)]), batch_id=3, mode="mor",
+        maintain=_policy(major_ratio=0.0),
+    ) == "major"
+    hist = t.history()
+    assert len(hist) == 4
+    assert hist[-1]["maintenance"] == "major" and hist[-1]["batch_id"] == 3
+    assert hist[-1]["runs"] == []
+    assert [e["maintenance"] for e in hist[:2]] == [None, None]
+    assert _rows(t) == sorted(
+        [(k, k * 10) for k in range(12) if k not in (1, 2, 3)]
+        + [(1, 11), (2, 22)]
+    )
+    # the major fold wrote fresh zone maps for the new base
+    assert t._read_pointer()["stats"]
+
+
+def test_fused_fold_replay_is_a_noop(spark, tmp_path):
+    t = _seeded(spark, tmp_path)
+    every2 = _policy(compact_every=2)
+    t.merge(_batch(spark, [(1, "u", 11)]), batch_id=1, mode="mor",
+            maintain=every2)
+    t.merge(_batch(spark, [(2, "u", 22)]), batch_id=2, mode="mor",
+            maintain=every2)
+    version, rows = t.version, _rows(t)
+    # re-delivered after its fused commit landed: nothing runs
+    assert t.merge(
+        _batch(spark, [(2, "u", 999)]), batch_id=2, mode="mor",
+        maintain=every2,
+    ) == "none"
+    assert t.version == version and _rows(t) == rows
+
+
+@pytest.mark.parametrize("retries", [0, 1])
+def test_fused_fold_race_raises_or_replans(
+    spark, tmp_path, monkeypatch, retries
+):
+    """A second writer commits between the fused merge's plan and its
+    commit. Without retries the merge fails loudly; with one it
+    replans (a fold never rebases: the runs it replaced moved) and
+    both batches land."""
+    t = _seeded(spark, tmp_path)
+    t.merge(_batch(spark, [(1, "u", 11)]), batch_id=1, mode="mor")
+    t1 = SnapshotTable(spark, t.path, ["k"], n_buckets=4)
+    t2 = SnapshotTable(spark, t.path, ["k"], n_buckets=4)
+    orig = SnapshotTable._do_write_buckets
+    writes = []
+
+    def hook(self, df, version, dynamic=False, records_per_file=None, **kw):
+        out = orig(self, df, version, dynamic, records_per_file, **kw)
+        if self is t1:
+            writes.append(version)
+            if len(writes) == 1:  # the winner lands before t1 commits
+                t2.merge(_batch(spark, [(5, "u", 55)]), batch_id=50,
+                         mode="mor")
+        return out
+
+    monkeypatch.setattr(SnapshotTable, "_do_write_buckets", hook)
+    fused = dict(batch_id=2, mode="mor", maintain=_policy(compact_every=2),
+                 retry_conflicts=retries)
+    if retries == 0:
+        with pytest.raises(ConcurrentWriteError):
+            t1.merge(_batch(spark, [(2, "u", 22)]), **fused)
+        assert t1.last_batch_id() == 50
+        return
+    assert t1.merge(_batch(spark, [(2, "u", 22)]), **fused) == "minor"
+    assert len(writes) == 2, "a lost fold must replan, not rebase"
+    hist = t1.history()
+    assert [e["batch_id"] for e in hist] == [0, 1, 50, 2]
+    assert hist[-1]["maintenance"] == "minor"
+    assert len(hist[-1]["runs"]) == 1
+    got = dict(_rows(t1))
+    assert (got[1], got[2], got[5]) == (11, 22, 55)
+
+
+@pytest.mark.parametrize("tier", ["minor", "major"])
+def test_fused_fold_carries_a_new_column(spark, tmp_path, tier):
+    """A batch that adds a column rides a fold: the folded output has
+    the column, and rows from the base and from older runs read it as
+    null."""
+    t = _seeded(spark, tmp_path, n=4)
+    t.merge(_batch(spark, [(1, "u", 11)]), batch_id=1, mode="mor")
+    wide = spark.createDataFrame(
+        [(2, "u", 22, "x")], "k long, op string, v long, tag string"
+    )
+    policy = (
+        _policy(compact_every=2) if tier == "minor"
+        else _policy(major_ratio=0.0)
+    )
+    assert t.merge(wide, batch_id=2, mode="mor", maintain=policy) == tier
+    assert t.history()[-1]["maintenance"] == tier
+    got = sorted((r.k, r.v, r.tag) for r in t.read().collect())
+    assert got == [(0, 0, None), (1, 11, None), (2, 22, "x"), (3, 30, None)]
+
+
+def test_fused_minor_fold_keeps_a_base_only_delete_mask(spark, tmp_path):
+    """A delete of a key that lives only in the base rides a minor
+    fold: the folded run keeps its mask, which still hides the base
+    row."""
+    t = _seeded(spark, tmp_path)
+    t.merge(_batch(spark, [(5, "u", 55)]), batch_id=1, mode="mor")
+    assert t.merge(
+        _batch(spark, [(3, "d", 0)]), batch_id=2, mode="mor",
+        maintain=_policy(compact_every=2),
+    ) == "minor"
+    ptr = t._read_pointer()
+    assert len(ptr["runs"]) == 1
+    assert ptr["buckets"] == t.history()[0]["buckets"]  # base untouched
+    got = dict(_rows(t))
+    assert 3 not in got and got[5] == 55 and len(got) == 11
+    assert t.read_keys([3]).count() == 0
+
+
+def test_empty_batch_commits_its_due_fold(spark, tmp_path):
+    """An empty batch that finds a fold due commits the fold under its
+    own batch id (the batch is applied: it changed nothing), so its
+    replay is a no-op like any other; with no fold due it commits
+    nothing."""
+    t = _seeded(spark, tmp_path)
+    every2 = _policy(compact_every=2)
+    empty = _batch(spark, [])
+    assert t.merge(empty, batch_id=1, mode="mor", maintain=every2) == "none"
+    assert t.version == 0
+    t.merge(_batch(spark, [(1, "u", 11)]), batch_id=2, mode="mor")
+    rows = _rows(t)
+    assert t.merge(empty, batch_id=3, mode="mor", maintain=every2) == "minor"
+    hist = t.history()
+    assert hist[-1]["batch_id"] == 3 and hist[-1]["maintenance"] == "minor"
+    assert _rows(t) == rows
+    version = t.version
+    assert t.merge(empty, batch_id=3, mode="mor", maintain=every2) == "none"
+    assert t.version == version
+
+
+def test_compact_every_bounds_runs_any_reader_sees(spark, tmp_path):
+    """With ``compact_every = k`` no committed state — the only states
+    a reader can see — holds more than k pending runs, and every
+    batch costs one commit."""
+    k = 3
+    t = _seeded(spark, tmp_path)
+    for i in range(1, 8):
+        t.merge(
+            _batch(spark, [(i, "u", 100 + i)]), batch_id=i, mode="mor",
+            maintain=_policy(compact_every=k),
+        )
+    hist = t.history()
+    assert len(hist) == 8
+    assert max(len(e["runs"]) for e in hist) <= k
+    assert [e["maintenance"] for e in hist].count("minor") >= 2
+    assert dict(_rows(t))[7] == 107
+
+
+def test_direct_folds_record_their_tier(spark, tmp_path):
+    t = _seeded(spark, tmp_path)
+    for i in (1, 2):
+        t.merge(_batch(spark, [(i, "u", 100 + i)]), batch_id=i, mode="mor")
+    assert t.compact_runs() == 2
+    assert t.history()[-1]["maintenance"] == "minor"
+    t.compact()
+    assert t.history()[-1]["maintenance"] == "major"
+    assert t.history()[-1]["batch_id"] == 2

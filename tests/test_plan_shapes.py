@@ -642,3 +642,47 @@ def test_decayed_score_broadcasts_reference_day(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "partial" in plan.lower(), plan[:1500]
     assert "PythonUDF" not in plan, plan[:1500]
+
+
+def test_cow_merge_caches_the_batch_with_static_planning(
+    spark, tmp_path, monkeypatch
+):
+    """The copy-on-write merge caches its batch inside the static
+    planning window: a cached plan is fixed at ``persist()``, and an
+    adaptive one would run each of the batch's exchanges (here a
+    repartition and the compact shuffle) as its own job. A warm merge
+    is then three jobs: the cache-filling probe, the batch-key
+    broadcast and the bucket write."""
+    from changedatacapture_spark.operators.cdc import compact_latest
+    from changedatacapture_spark.streaming import sink
+
+    t = sink.SnapshotTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4)
+    plans = []
+    write = sink._CopyOnWrite.write
+
+    def spy(self, table, source, a):
+        plans.append(source._jdf.queryExecution().executedPlan().toString())
+        return write(self, table, source, a)
+
+    monkeypatch.setattr(sink._CopyOnWrite, "write", spy)
+
+    def batch(i):
+        df = spark.range(0, 2000).select(
+            (F.col("id") * 7 + i).alias("k"), F.lit("u").alias("op"),
+            F.lit(i).alias("ts"), F.col("id").alias("seq"),
+            (F.col("id") + i).alias("v"),
+        )
+        return compact_latest(df.repartition(5), ["k"], ["ts", "seq"])
+
+    sc = spark.sparkContext
+    jobs = []
+    for i in range(3):
+        sc.setJobGroup(f"cow-merge-{i}", "copy-on-write merge")
+        try:
+            t.merge(batch(i), batch_id=i)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"cow-merge-{i}")))
+    assert "InMemoryRelation" in plans[-1]
+    assert "AdaptiveSparkPlan" not in plans[-1], plans[-1]
+    assert jobs[1:] == [3, 3]

@@ -161,6 +161,73 @@ def test_mor_any_size_policy_schedule_equals_global_compaction(
     assert got == _expected(events)
 
 
+# whole policies per batch for the one-call path: every tier alone at
+# an always-fires setting, the production-shaped byte pair, never-fires
+_POLICY_PLAN = st.lists(
+    st.sampled_from(
+        [
+            None,
+            {"compact_every": 2},
+            {"minor_ratio": 0.0},
+            {"major_ratio": 0.0},
+            {"minor_ratio": 0.25, "major_ratio": 1.0},
+            {"max_files_per_bucket": 0},
+            {"minor_ratio": 1e9, "major_ratio": 1e9},
+        ]
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+@given(_EVENTS, _POLICY_PLAN, st.integers(min_value=0, max_value=2**31 - 1))
+@_SETTINGS
+def test_mor_fold_on_write_any_policy_equals_global_compaction(
+    spark, tmp_path_factory, events, policy_plan, cut_seed
+):
+    """The one-call path (``merge(maintain=...)``: each batch rides
+    whatever fold its policy finds due) under ANY batch split and ANY
+    per-batch policy leaves the logical result equal to one global
+    compaction of the log, and costs at most one commit per batch."""
+    import random
+
+    from changedatacapture_spark.operators.cdc import compact_latest
+    from changedatacapture_spark.streaming.sink import (
+        MaintenancePolicy,
+        SnapshotTable,
+    )
+
+    rows = sorted(
+        (ts, seq, key, op, value)
+        for seq, (key, ts, op, value) in enumerate(events)
+    )
+    n_batches = len(policy_plan)
+    rng = random.Random(cut_seed)
+    cuts = sorted(rng.randint(0, len(rows)) for _ in range(n_batches - 1))
+    bounds = [0] + cuts + [len(rows)]
+
+    path = str(tmp_path_factory.mktemp("mor_fused_prop") / "t")
+    t = SnapshotTable(spark, path, ["key_id"], n_buckets=4)
+    for i, policy in enumerate(policy_plan):
+        chunk = rows[bounds[i]:bounds[i + 1]]
+        df = spark.createDataFrame(
+            [(k, ts, seq, op, v) for ts, seq, k, op, v in chunk],
+            "key_id long, ts long, seq long, op string, value long",
+        )
+        compacted = compact_latest(df, ["key_id"], ["ts", "seq"])
+        before = t.version
+        t.merge(
+            compacted, batch_id=i, mode="mor",
+            maintain=None if policy is None else MaintenancePolicy(**policy),
+        )
+        assert t.version - before <= 1 or before == -1
+
+    # the first batch creates the table, even an empty one
+    assert t.exists()
+    got = sorted((r.key_id, r.value) for r in t.read().collect())
+    assert got == _expected(events)
+
+
 @given(_EVENTS, _PLAN, st.integers(min_value=0, max_value=2**31 - 1))
 @_SETTINGS
 def test_join_view_invariant_under_mor_splits_and_folds(

@@ -1,131 +1,124 @@
-"""Cross-revision paired A/B: streaming-apply throughput, r13 vs HEAD.
+"""Paired cross-revision A/B of the cdcbench end-to-end metrics.
 
-The committed stream number declined three driver rounds straight
-(7,397 → 6,648 → 6,274 ev/s, r13→r15) while the single-core
-calibration got FASTER each round — either a code mover landed
-somewhere in r14/r15, or the driver hosts got quicker at arithmetic
-and slower at this workload. The r15 marker A/B exonerated one
-hypothesis on one revision; this harness tests the only thing that
-can settle it: THE TWO REVISIONS, same box, same session window,
-interleaved.
+Runs ``cdcbench/run.py`` (untraced) on two arms: a base revision,
+extracted with ``git archive`` into a temporary directory (the
+committed files only, as the benchmark itself checks a revision out,
+and no worktree left registered), and the working checkout. Each
+seed runs both arms back to back; the arm that goes first alternates
+from seed to seed, so a slow stretch of the host lands on both arms.
 
-Arms are git worktrees (default: r13 HEAD ``ba971a2`` vs the current
-checkout). Each (trial, arm) cell runs in a FRESH subprocess — two
-revisions of the same package cannot share one interpreter — with an
-identical protocol: single-core calibration probe, a warm-up apply
-(JVM + codegen, excluded), the measured 100k-event apply
-(``streaming/bench.py:run``), calibration again. Arms alternate
-A/B/A/B inside each trial so host drift lands on both equally; the
-fresh-JVM cost is symmetric by construction. Paired per-trial deltas
-are the output — read them against the calib columns before believing
-either direction.
+For each end-to-end metric of ``BENCHMARK.json`` it prints every
+pair's delta (change - base), both arms' medians and quartiles, and
+the sign count: the pairs in which the change is better. Each run's
+CPU steal share (from cdcbench's ``# host`` line) is printed beside
+its pair; read the deltas against it before believing either
+direction.
 
-Usage: python tools/ab_cross_revision.py [trials] [n_events] [old_rev]
-Writes /tmp/ab_cross_revision.json and prints a summary table.
+Usage, from the repository root::
+
+    python tools/ab_cross_revision.py --base HEAD~1 --workload serve_mor \\
+        --seeds 1-10 [--seconds 10] [--out ab.json]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
+import statistics
 import subprocess
 import sys
-import time
+import tempfile
 
-HEAD_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-_CHILD = r"""
-import json, os, sys, time
-root = sys.argv[1]
-n_events = int(sys.argv[2])
-warm_events = int(sys.argv[3])
-sys.path.insert(0, root)
-
-def calib():
-    t0 = time.time()
-    s = 0
-    for i in range(10_000_000):
-        s += i * i
-    return round(time.time() - t0, 3)
-
-from changedatacapture_spark.session import get_spark
-from changedatacapture_spark.streaming.bench import run
-
-spark = get_spark(app_name="ab-cross-revision")
-run(spark, warm_events, 10_000, 32)  # JIT/codegen warm-up, excluded
-c0 = calib()
-r = run(spark, n_events, 10_000, 32)
-c1 = calib()
-print(json.dumps({
-    "events_per_sec": r["events_per_sec"],
-    "wall_sec": r.get("wall_sec"),
-    "calib_before": c0,
-    "calib_after": c1,
-}))
-"""
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run_arm(root: str, n_events: int, warm: int) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, root, str(n_events), str(warm)],
-        capture_output=True, text=True, timeout=1800,
-    )
-    if out.returncode != 0:
-        raise RuntimeError(
-            f"arm {root} failed:\n{out.stderr[-2000:]}"
-        )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def seeds(spec: str) -> list[int]:
+    lo, _, hi = spec.partition("-")
+    return list(range(int(lo), int(hi or lo) + 1))
+
+
+def extract(rev: str, into: str) -> None:
+    archive = subprocess.run(
+        ["git", "archive", rev], cwd=ROOT, check=True, capture_output=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", into], input=archive, check=True)
+
+
+def run_arm(root: str, workload: str, seed: int, seconds: float) -> dict:
+    cmd = [sys.executable, "cdcbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    out = subprocess.run(cmd, cwd=root, capture_output=True, text=True,
+                         timeout=1800)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(f"{root}: exit {out.returncode}\n{out.stderr[-2000:]}")
+    res = json.loads(lines[-1])
+    host = next((json.loads(x[len("# host "):]) for x in lines
+                 if x.startswith("# host ")), {})
+    return {
+        "correct": res["correct"], "failed": res["failed"],
+        "metrics": {k: v["value"] for k, v in res["metrics"].items()},
+        "steal_share": host.get("steal_share"),
+    }
+
+
+def spread(values: list[float]) -> str:
+    if len(values) < 2:
+        return f"{values[0]:.3f}"
+    q1, q2, q3 = statistics.quantiles(values, n=4, method="inclusive")
+    return f"{q2:.3f} [{q1:.3f}, {q3:.3f}]"
 
 
 def main() -> None:
-    trials = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    n_events = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
-    old_rev = sys.argv[3] if len(sys.argv) > 3 else "ba971a2"
-    warm = 20_000
+    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("--base", required=True, help="git revision of the base arm")
+    p.add_argument("--workload", required=True)
+    p.add_argument("--seeds", default="1-10", help="e.g. 1-10")
+    p.add_argument("--seconds", type=float, default=10)
+    p.add_argument("--out", default=None, help="write every run as JSON here")
+    args = p.parse_args()
 
-    old_root = f"/tmp/ab_arm_{old_rev}"
-    if not os.path.isdir(old_root):
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", old_root, old_rev],
-            cwd=HEAD_ROOT, check=True,
-        )
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        e2e = json.load(f)["end_to_end"]
+    base_root = tempfile.mkdtemp(prefix="ab_base_")
+    pairs = []
+    try:
+        extract(args.base, base_root)
+        for i, seed in enumerate(seeds(args.seeds)):
+            arms = [("base", base_root), ("change", ROOT)]
+            pair = {"seed": seed}
+            for arm, root in arms if i % 2 == 0 else arms[::-1]:
+                pair[arm] = run_arm(root, args.workload, seed, args.seconds)
+                print(f"# seed {seed} {arm}: {json.dumps(pair[arm])}",
+                      file=sys.stderr, flush=True)
+            pairs.append(pair)
+    finally:
+        shutil.rmtree(base_root, ignore_errors=True)
 
-    rows = []
-    for trial in range(trials):
-        for arm, root in (("r13", old_root), ("head", HEAD_ROOT)):
-            t0 = time.time()
-            r = _run_arm(root, n_events, warm)
-            r.update(trial=trial, arm=arm,
-                     subprocess_wall=round(time.time() - t0, 1))
-            rows.append(r)
-            print(
-                f"# trial {trial} {arm}: {r['events_per_sec']} ev/s "
-                f"calib {r['calib_before']}/{r['calib_after']}",
-                file=sys.stderr, flush=True,
-            )
-
-    paired = []
-    for t in range(trials):
-        a = next(r for r in rows if r["trial"] == t and r["arm"] == "r13")
-        b = next(r for r in rows if r["trial"] == t and r["arm"] == "head")
-        paired.append({
-            "trial": t,
-            "r13_ev_s": a["events_per_sec"],
-            "head_ev_s": b["events_per_sec"],
-            "head_minus_r13_ev_s": round(
-                b["events_per_sec"] - a["events_per_sec"], 1
-            ),
-            "head_over_r13": round(
-                b["events_per_sec"] / a["events_per_sec"], 4
-            ),
-            "r13_calib": (a["calib_before"], a["calib_after"]),
-            "head_calib": (b["calib_before"], b["calib_after"]),
-        })
-    result = {"n_events": n_events, "old_rev": old_rev,
-              "rows": rows, "paired": paired}
-    with open("/tmp/ab_cross_revision.json", "w") as f:
-        json.dump(result, f, indent=1)
-    print(json.dumps(paired, indent=1))
+    print(f"{args.workload}: base {args.base} vs working checkout, "
+          f"{len(pairs)} pairs")
+    for m in e2e:
+        name, lower = m["name"], m["better"] == "lower"
+        got = [(q["base"]["metrics"][name], q["change"]["metrics"][name])
+               for q in pairs]
+        deltas = [c - b for b, c in got]
+        better = sum((d < 0) if lower else (d > 0) for d in deltas)
+        print(f"{name} ({m['unit']}, median [quartiles]): base "
+              f"{spread([b for b, _ in got])} change "
+              f"{spread([c for _, c in got])}; change better in "
+              f"{better}/{len(got)}")
+        print("  deltas: " + " ".join(f"{d:+.3f}" for d in deltas))
+    for q in pairs:
+        print(f"seed {q['seed']}: steal base {q['base']['steal_share']} "
+              f"change {q['change']['steal_share']}; correct "
+              f"{q['base']['correct']}/{q['change']['correct']}, failed "
+              f"{q['base']['failed']}/{q['change']['failed']}")
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump({"base": args.base, "workload": args.workload,
+                       "pairs": pairs}, f, indent=1)
 
 
 if __name__ == "__main__":
