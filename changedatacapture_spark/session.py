@@ -14,6 +14,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_memory() -> str:
+    """Default driver heap: a quarter of physical memory, clamped to
+    1–4 GiB (the rule cdcbench applies to its own runs). In local mode
+    the driver JVM runs every task, and a heap sized past the host lets
+    it grow until the host runs out of memory."""
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(4096, mem_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "changedatacapture_spark",
     cpus: int | None = None,
@@ -43,7 +52,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Some producers (pandas/arrow) write TIMESTAMP(NANOS) parquet,

@@ -391,7 +391,32 @@ _MOR_GUARDED = (
 class MaintenancePolicy(NamedTuple):
     """The maintenance tiers a merge carries (``merge(maintain=...)``)
     and :meth:`SnapshotTable.compact_by_size` evaluates; None disables
-    a tier. See :meth:`SnapshotTable._due_tier` for the rule."""
+    a tier. The one rule (:meth:`SnapshotTable._due_tier`) checks them
+    in this order, with ``n`` pending runs of ``pending`` bytes over a
+    ``base`` of manifest-bucket bytes:
+
+    - ``compact_every``: MINOR once ``n >= max(2, compact_every)`` —
+      read amplification stays at base + that many runs with no
+      full-table rewrite per trigger;
+    - ``major_ratio``: MAJOR (a full rewrite absorbing the runs) when
+      ``pending >= major_ratio * base``;
+    - ``minor_ratio``: MINOR (runs collapse into one at delta cost) when
+      ``pending >= minor_ratio * base`` and ``n >= 2``. A minor fold
+      that leaves bytes above the threshold (disjoint keys) re-arms
+      and folds the next run in until the major threshold takes over —
+      the LSM behaviour. Bytes track what folds cost and reads pay; a
+      run count fires the same for 1 KB ticks and 10 GB backfills;
+    - ``max_files_per_bucket``: FILES, a major rewrite sized by
+      ``target_file_bytes`` when the table has one, once any live
+      bucket holds more parquet files (VERDICT r16 #4). It closes the
+      small-file loop of the map-only :meth:`SnapshotTable.rebucket`
+      split and of churny clustered merges, on copy-on-write tables
+      too.
+
+    Every fold keeps logical contents bit-exact (property-tested under
+    arbitrary schedules in test_property_mor) and carries the batch id
+    through, so a crash between a merge and its fold only defers the
+    fold to the next evaluation."""
 
     minor_ratio: float | None = None
     major_ratio: float | None = None
@@ -401,33 +426,49 @@ class MaintenancePolicy(NamedTuple):
 
 @dataclass
 class _Attempt:
-    """One merge attempt: the pointer it planned against and what it
-    staged under its writer-unique physical id ``pv``."""
+    """One write attempt on the skeleton (:meth:`SnapshotTable._write`):
+    the pointer it planned against, what it staged under its
+    writer-unique physical id ``pv``, and what its commit records."""
 
-    ptr: dict
+    #: the :class:`_Write` strategy that planned and staged it
+    op: object
+    #: pointer planned against; None when the attempt creates the table
+    ptr: dict | None
     #: committed schema the plan read the table's files under
     schema: object
     #: bucket modulus the staged files were routed with
     n_buckets: int
     batch_id: int | None
-    #: schema the commit records (the batch's evolution applied): a
-    #: fold reads every input under it
+    #: schema the commit records (a batch's evolution applied): a fold
+    #: reads every input under it
     evolved: object = None
-    #: the fold this attempt rides (``minor``/``major``/``files``),
-    #: decided against ``ptr`` before any job; None = a plain write
+    #: the fold this attempt runs or rides (``minor``/``major``/
+    #: ``files``), decided against ``ptr`` before any job
     maintenance: str | None = None
+    #: None until the plan finds something to stage
     pv: int | None = None
-    #: base buckets the commit replaces (found by the probe)
+    #: the merge batch, bucket-routed
+    source: DataFrame | None = None
+    #: base buckets the commit replaces
     touched: list = field(default_factory=list)
     batch_rows: int = 0
     #: base buckets whose new files landed under ``pv``
     written: list = field(default_factory=list)
-    #: merge-on-read run entries the commit appends
+    #: merge-on-read runs the commit appends (a fold's replace them)
     runs: list = field(default_factory=list)
+    #: what the public operation returns
+    result: object = None
 
     @property
     def base(self) -> int:
-        return int(self.ptr["version"])
+        return -1 if self.ptr is None else int(self.ptr["version"])
+
+    def rewrite(self, written: list) -> None:
+        """Stage a whole-table rewrite: every committed bucket drops
+        out of the manifest, replaced by the ``written`` ones."""
+        if self.ptr is not None:
+            self.touched = sorted(int(b) for b in self.ptr["buckets"])
+        self.written = written
 
 
 @dataclass
@@ -451,67 +492,66 @@ def _plus(total: int | None, n: int | None) -> int | None:
     return None if total is None or n is None else total + n
 
 
-class _CopyOnWrite:
-    """Copy-on-write merge: each touched bucket is rewritten as its
-    committed rows minus the batch's keys, plus the batch's upserts
-    (the MERGE-equivalence in the module docstring).
+class _Write:
+    """One kind of :class:`SnapshotTable` write, as a strategy on the
+    one plan → stage → commit skeleton (:meth:`SnapshotTable._write`).
 
-    A strategy holds only what differs between merge modes; the plan →
-    stage → commit skeleton in :meth:`SnapshotTable.merge` owns the
-    replay check, table creation, schema evolution, the probe, the
-    manifest overlay, the commit and the retries."""
+    The skeleton owns what every write shares: one pointer read per
+    attempt, the committed-layout adoption, one fresh physical id, the
+    job-failure → write-conflict translation, the one commit, the one
+    vacuum and the retries. A strategy holds only what differs: what it
+    plans from the pointer and what it stages. These defaults describe
+    a maintenance rewrite: it needs a committed table, is a physical
+    rewrite rather than a batch (the pointer's batch id and guard carry
+    through, so replay idempotence survives it), keeps adaptive
+    planning, takes fresh zone maps for what it writes, and replaces
+    the pending runs."""
 
-    #: persist the batch and observe its touched buckets before writing
-    probes = True
-    #: plan the write with adaptive execution off (see
+    #: skip the attempt when its batch id is already committed
+    replays = False
+    #: plan the staged write with adaptive execution off (see
     #: ``SnapshotTable.merge_static_planning``)
-    static_write = True
-    #: commit even when the batch staged nothing (records its batch id)
+    static_write = False
+    #: commit even when nothing was staged
     commits_empty = True
     #: guard metadata the commit records; None carries the pointer's
     guard: dict | None = None
-    #: whether the maintenance tier rides the write (else the policy
-    #: is evaluated on the committed state after the merge)
-    fuses = False
+    #: pending runs carry into a commit that runs no fold (an append
+    #: adds its run to them); otherwise the attempt's runs replace them
+    appends = False
+    #: written buckets drop their zone maps unless ``stats_on_merge``
+    lazy_stats = False
 
-    def __init__(self, op_col: str, delete_op: str) -> None:
-        self.op_col = op_col
-        self.delete_op = delete_op
-
-    def tier(self, t, ptr: dict) -> str | None:
-        """The fold this attempt rides, decided against ``ptr``."""
-        return None
-
-    def initial(self, t, compacted: DataFrame) -> DataFrame:
-        """The table's rows when this batch creates it."""
-        return compacted.filter(F.col(self.op_col) != self.delete_op).drop(
-            self.op_col
-        )
+    def create(self, t) -> _Write:
+        """The strategy that runs when the table does not exist yet."""
+        raise FileNotFoundError(f"no snapshot at {t.path}")
 
     def check(self, ptr: dict) -> None:
-        # a rewrite reads base buckets only: its output would let stale
-        # run rows outrank the batch
-        if ptr.get("runs"):
-            raise ValueError(
-                "copy-on-write merge on a table with pending merge-on-read "
-                "runs would strand the runs' rows: call compact() to fold "
-                "them in first (or keep merging with mode='mor')"
-            )
+        """Refuse a pointer this write does not apply to."""
+
+    def batch_of(self, ptr: dict | None) -> int | None:
+        return ptr.get("batch_id")
+
+    def evolve(self, t, schema):
+        """The schema the commit records."""
+        return schema
+
+    def tier(self, t, ptr: dict | None) -> str | None:
+        """The fold this attempt runs, decided against ``ptr``."""
+        return None
+
+    def plan(self, t, a: _Attempt) -> bool:
+        """Driver-side planning (and any probe job) before a physical
+        id is allocated; False = nothing to stage or commit."""
+        return True
 
     def rebases(self, a: _Attempt, ptr: dict) -> bool:
-        """Whether ``a``'s staged files may be re-pointed at the winner's
-        pointer ``ptr`` after a lost commit, with no job re-run. Sound
-        iff the winner changed nothing this merge read or wrote: every
-        bucket it TOUCHED keeps its planning-time manifest entry
-        (disjoint write sets, the Delta conflict rule) and the schema
-        the plan read its files under is unchanged. On any doubt the
-        merge replans, which is always correct."""
-        if json.loads(ptr["schema"]) != json.loads(a.ptr["schema"]):
-            return False
-        return all(
-            ptr["buckets"].get(str(b)) == a.ptr["buckets"].get(str(b))
-            for b in a.touched
-        )
+        """Whether ``a``'s staged files may be committed onto a racing
+        winner's pointer ``ptr`` without re-running a job."""
+        return False
+
+    def write(self, t, source: DataFrame | None, a: _Attempt) -> None:
+        raise NotImplementedError
 
     @staticmethod
     def _current(t, a: _Attempt) -> DataFrame | None:
@@ -523,6 +563,245 @@ class _CopyOnWrite:
             if str(b) in a.ptr["buckets"]
         ]
         return t.spark.read.schema(a.schema).parquet(*paths) if paths else None
+
+
+@dataclass(eq=False)
+class _Overwrite(_Write):
+    """Replace the table's whole contents with ``df`` — the initial
+    load and a merge's table creation: one range-clustered write, fresh
+    zone maps. On an existing table the rewrite lands in the committed
+    layout (bucket count, clustering): replacing contents is not a
+    license to silently revert another writer's rebucket. Two racing
+    creations never share a directory and the loser fails loudly."""
+
+    df: DataFrame
+    batch_id: int | None
+    guard: dict | None = None
+
+    def create(self, t) -> _Write:
+        return self
+
+    def batch_of(self, ptr: dict | None) -> int | None:
+        return self.batch_id
+
+    def evolve(self, t, schema):
+        return self.df.schema
+
+    def write(self, t, source: DataFrame | None, a: _Attempt) -> None:
+        a.rewrite(t._write_buckets(
+            self.df.withColumn("bucket", t._bucket_col()), a.pv,
+            expected_base=a.base, range_cluster=True,
+        ))
+
+
+@dataclass(eq=False)
+class _Fold(_Write):
+    """A maintenance fold with no batch: ``minor`` collapses the
+    pending runs into one (:meth:`SnapshotTable.compact_runs`),
+    ``major`` and ``files`` rewrite base ∪ runs as a new base
+    (:meth:`SnapshotTable.compact`, the file-count tier). The fold
+    bodies are the ones a merge-on-read merge rides
+    (:meth:`SnapshotTable._fold`)."""
+
+    kind: str
+    target_file_bytes: int | None = None
+
+    def tier(self, t, ptr: dict | None) -> str | None:
+        return self.kind
+
+    def plan(self, t, a: _Attempt) -> bool:
+        runs = a.ptr.get("runs") or []
+        if self.kind == "minor":
+            a.result = len(runs)
+            return len(runs) > 1
+        if self.target_file_bytes is not None:
+            a.result = t._packed_files(a.ptr, self.target_file_bytes)
+        return a.result is None
+
+    def write(self, t, source: DataFrame | None, a: _Attempt) -> None:
+        t._fold(a, target_file_bytes=self.target_file_bytes)
+        if self.kind != "minor":
+            a.result = sum(
+                1
+                for _, _, files in os.walk(f"{t.path}/v={a.pv}")
+                for fn in files
+                if fn.endswith(".parquet")
+            )
+
+
+@dataclass(eq=False)
+class _Rebucket(_Write):
+    """Rewrite the whole table under a new bucket count (see
+    :meth:`SnapshotTable.rebucket`); a pure copy-on-write table split
+    to a multiple of its count writes map-only, with no exchange."""
+
+    n_buckets: int
+    map_only: bool = False
+
+    def plan(self, t, a: _Attempt) -> bool:
+        # t.n_buckets is the committed count here (the skeleton adopted it)
+        self.map_only = (
+            self.n_buckets > t.n_buckets
+            and self.n_buckets % t.n_buckets == 0
+            and not a.ptr.get("runs")
+        )
+        t.n_buckets = self.n_buckets
+        return True
+
+    def write(self, t, source: DataFrame | None, a: _Attempt) -> None:
+        full = t._scan(t._plan(a.ptr), include_tombstones=True)
+        a.rewrite(t._write_buckets(
+            full.withColumn("bucket", t._bucket_col()), a.pv,
+            expected_base=a.base, repartition=not self.map_only,
+        ))
+
+
+@dataclass(eq=False)
+class _GcTombstones(_Write):
+    """Drop an order-guarded table's delete tombstones older than a
+    replay horizon (see :meth:`SnapshotTable.gc_tombstones`): one probe
+    job finds the buckets holding expired tombstones and counts them,
+    and only those buckets are rewritten."""
+
+    horizon: object
+    #: the expired-tombstone predicate, built from the planned pointer
+    expired: object = None
+
+    def check(self, ptr: dict) -> None:
+        if not ptr.get("guard"):
+            raise ValueError("gc_tombstones applies only to order-guarded tables")
+
+    def plan(self, t, a: _Attempt) -> bool:
+        guard = a.ptr["guard"]
+        self.expired = (F.col(guard["op_col"]) == guard["delete_op"]) & (
+            F.col(guard["guard_cols"][0]) < F.lit(self.horizon)
+        )
+        full = t._scan(t._plan(a.ptr), include_tombstones=True)
+        # one scan decides both the rewrite set and the dropped count
+        probe = (
+            full.withColumn("bucket", t._bucket_col())
+            .filter(self.expired)
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        a.touched = sorted(r.bucket for r in probe)
+        a.result = sum(r.n for r in probe)
+        return bool(probe)
+
+    def write(self, t, source: DataFrame | None, a: _Attempt) -> None:
+        kept = self._current(t, a).filter(~self.expired)
+        a.written = t._write_buckets(
+            kept.withColumn("bucket", t._bucket_col()), a.pv,
+            expected_base=a.base,
+        )
+
+
+@dataclass(eq=False)
+class _CopyOnWrite(_Write):
+    """Copy-on-write merge: each touched bucket is rewritten as its
+    committed rows minus the batch's keys, plus the batch's upserts
+    (the MERGE-equivalence in the module docstring). A merge replays
+    as a no-op, records its own batch id, plans statically, appends to
+    any pending runs and drops the zone maps of what it rewrites."""
+
+    replays = True
+    static_write = True
+    appends = True
+    lazy_stats = True
+    #: persist the batch and observe its touched buckets before writing
+    probes = True
+    #: whether the maintenance tier rides the write (else the policy
+    #: is evaluated on the committed state after the merge)
+    fuses = False
+
+    compacted: DataFrame
+    op_col: str
+    delete_op: str
+    batch_id: int | None
+    evolve_schema: bool
+
+    def create(self, t) -> _Write:
+        return _Overwrite(self.initial(t), self.batch_id, self.guard)
+
+    def initial(self, t) -> DataFrame:
+        """The table's rows when this batch creates it."""
+        return self.compacted.filter(
+            F.col(self.op_col) != self.delete_op
+        ).drop(self.op_col)
+
+    def batch_of(self, ptr: dict | None) -> int | None:
+        return self.batch_id
+
+    def evolve(self, t, schema):
+        from pyspark.sql.types import StructType
+
+        # before any job: an unsafe type change raises here
+        return StructType(_evolved_fields(
+            schema, self.compacted.schema, self.op_col, self.evolve_schema,
+            t.key_cols,
+        ))
+
+    def check(self, ptr: dict) -> None:
+        # a rewrite reads base buckets only: its output would let stale
+        # run rows outrank the batch
+        if ptr.get("runs"):
+            raise ValueError(
+                "copy-on-write merge on a table with pending merge-on-read "
+                "runs would strand the runs' rows: call compact() to fold "
+                "them in first (or keep merging with mode='mor')"
+            )
+
+    def plan(self, t, a: _Attempt) -> bool:
+        from pyspark.sql import Observation
+
+        # committed key types govern hash routing — see _align_key_types
+        a.source = _align_key_types(
+            self.compacted, a.schema, t.key_cols
+        ).withColumn("bucket", t._bucket_col())
+        if self.probes:
+            # persist once: the batch plan (parse + compact shuffle)
+            # feeds the probe and the write's consumers (anti-join
+            # broadcast, upsert union) — without this it would
+            # re-execute per consumer. The cached plan is fixed at
+            # persist(), so it must be planned inside the static
+            # window too: an adaptive cached plan runs each of its
+            # exchanges as its own job.
+            # The probe's bounded driver metadata — the touched-bucket
+            # set and the batch size that decides the anti-join
+            # strategy — is OBSERVED during the cache-materializing
+            # noop write instead of a separate groupBy + collect (r19
+            # event-log attribution: 5 probe jobs -> 3, and 1 with
+            # static planning). collect_set is ≤ n_buckets values.
+            obs = Observation()
+            with t._static_merge_planning():
+                a.source = a.source.persist()
+                (
+                    a.source.observe(
+                        obs,
+                        F.collect_set("bucket").alias("b"),
+                        F.count(F.lit(1)).alias("n"),
+                    )
+                    .write.format("noop")
+                    .mode("overwrite")
+                    .save()
+                )
+            a.touched = sorted(obs.get["b"])
+            a.batch_rows = int(obs.get["n"])
+        return True
+
+    def rebases(self, a: _Attempt, ptr: dict) -> bool:
+        """Sound iff the winner changed nothing this merge read or
+        wrote: every bucket it TOUCHED keeps its planning-time manifest
+        entry (disjoint write sets, the Delta conflict rule) and the
+        schema the plan read its files under is unchanged. On any doubt
+        the merge replans, which is always correct."""
+        if json.loads(ptr["schema"]) != json.loads(a.ptr["schema"]):
+            return False
+        return all(
+            ptr["buckets"].get(str(b)) == a.ptr["buckets"].get(str(b))
+            for b in a.touched
+        )
 
     def write(self, t, source: DataFrame, a: _Attempt) -> None:
         upserts = source.filter(F.col(self.op_col) != self.delete_op).drop(
@@ -586,6 +865,7 @@ class _CopyOnWrite:
         ]
 
 
+@dataclass(eq=False)
 class _OrderGuarded(_CopyOnWrite):
     """Order-guarded merge: an incoming row wins only if its
     ``guard_cols`` tuple exceeds the incumbent's.
@@ -611,18 +891,21 @@ class _OrderGuarded(_CopyOnWrite):
     #: it keeps adaptive planning
     static_write = False
 
-    def __init__(self, op_col: str, delete_op: str, guard_cols: list) -> None:
-        super().__init__(op_col, delete_op)
+    guard_cols: list
+
+    def __post_init__(self) -> None:
         self.guard = {
-            "op_col": op_col,
-            "delete_op": delete_op,
-            "guard_cols": guard_cols,
+            "op_col": self.op_col,
+            "delete_op": self.delete_op,
+            "guard_cols": self.guard_cols,
         }
 
-    def initial(self, t, compacted: DataFrame) -> DataFrame:
+    def initial(self, t) -> DataFrame:
         from changedatacapture_spark.operators.cdc import compact_latest
 
-        return compact_latest(compacted, t.key_cols, self.guard["guard_cols"])
+        return compact_latest(
+            self.compacted, t.key_cols, self.guard["guard_cols"]
+        )
 
     def write(self, t, source: DataFrame, a: _Attempt) -> None:
         from changedatacapture_spark.operators.cdc import compact_latest
@@ -638,6 +921,7 @@ class _OrderGuarded(_CopyOnWrite):
         )
 
 
+@dataclass(eq=False)
 class _MergeOnRead(_CopyOnWrite):
     """Merge-on-read: the batch — deletes riding as a keyed ``_mor_del``
     mask — appends as one bucket-partitioned delta run and the manifest
@@ -660,18 +944,13 @@ class _MergeOnRead(_CopyOnWrite):
     #: the maintenance tier is decided before the write and rides it
     fuses = True
 
-    def __init__(
-        self, op_col: str, delete_op: str,
-        policy: MaintenancePolicy | None = None,
-    ) -> None:
-        super().__init__(op_col, delete_op)
-        self.policy = policy
+    policy: MaintenancePolicy | None = None
 
     def check(self, ptr: dict) -> None:
         if ptr.get("guard"):
             raise ValueError(_MOR_GUARDED)
 
-    def tier(self, t, ptr: dict) -> str | None:
+    def tier(self, t, ptr: dict | None) -> str | None:
         return t._due_tier(ptr, self.policy, incoming=True)
 
     def rebases(self, a: _Attempt, ptr: dict) -> bool:
@@ -696,16 +975,9 @@ class _MergeOnRead(_CopyOnWrite):
         )
 
     def write(self, t, source: DataFrame, a: _Attempt) -> None:
-        if a.maintenance == "minor":
-            a.runs = t._fold_runs(
-                a.ptr, a.evolved, a.pv, a.batch_id,
-                self._as_run(source, a.evolved),
-            )
-            return
         if a.maintenance is not None:
-            a.touched = sorted(int(b) for b in a.ptr["buckets"])
-            a.written = t._fold_base(
-                a.ptr, a.evolved, a.pv, self._as_run(source, a.evolved),
+            t._fold(
+                a, self._as_run(source, a.evolved),
                 t.target_file_bytes if a.maintenance == "files" else None,
             )
             return
@@ -969,9 +1241,9 @@ class SnapshotTable:
         live in, so the anti-join never sees the incumbents — the key
         silently exists twice — and the commit would persist the stale
         count, stranding the manifest's other buckets for every future
-        reader. Every merge path calls this on the pointer it plans
-        against; the MoR commit-time guard remains as the belt for a
-        rebucket landing mid-write."""
+        reader. The write skeleton (:meth:`_write`) calls this on the
+        pointer every attempt plans against; the MoR commit-time guard
+        remains as the belt for a rebucket landing mid-write."""
         nb = int(ptr.get("n_buckets") or self.n_buckets)
         if nb != self.n_buckets:
             logging.getLogger(__name__).warning(
@@ -1121,51 +1393,51 @@ class SnapshotTable:
         self._ptr_cache = (key, ptr)
         return ptr
 
-    def _commit(
-        self,
-        version: int,
-        batch_id: int | None,
-        buckets: dict[int, int],
-        schema_ddl: str,
-        guard: dict | None = None,
-        expected_base: int | None = None,
-        fresh_stats: bool = True,
-        stale_stats_buckets: set[int] | None = None,
-        data_version: int | None = None,
-        runs: list[dict] | None = None,
-        maintenance: str | None = None,
-    ) -> None:
-        # maintenance: the fold this commit ran (minor/major/files, or
-        # None), recorded in the entry history() returns.
-        # data_version: the writer-unique PHYSICAL directory id this
-        # commit's fresh files were written under (see
-        # _new_data_version). Logical pointer versions stay sequential;
-        # manifest values are physical ids. None = the two coincide
-        # (pre-existing tables / callers that never write files).
-        # runs: merge-on-read delta segments (ordered oldest-first,
-        # each {"v": physical id, "batch_id", "buckets": [...]}) — the
-        # deletion-vector analogue; empty/None = pure copy-on-write
-        # state. Maintenance rewrites (overwrite/compact/rebucket)
-        # intentionally commit without runs: they fold the deltas in.
+    def _commit(self, a: _Attempt, ptr: dict | None) -> None:
+        """Publish attempt ``a`` as the version after ``ptr`` — the
+        pointer it planned against, or the racing winner's it rebases
+        onto; None creates the table. The one commit site: every write
+        reaches it through :meth:`_write`.
+
+        The manifest is ``ptr``'s with ``a.touched`` dropped and
+        ``a.written`` pointed at ``a.pv``, the writer-unique PHYSICAL
+        directory id the attempt staged under (see
+        :meth:`_new_data_version`); logical pointer versions stay
+        sequential, manifest values are physical ids. Merge-on-read
+        runs (ordered oldest-first, each ``{"v": physical id,
+        "batch_id", "buckets": [...]}``, the deletion-vector analogue)
+        are ``ptr``'s plus the attempt's for an append, or the
+        attempt's alone for a fold or a whole-table rewrite, which
+        fold the deltas in. ``a.maintenance`` (the fold the commit ran:
+        ``minor``/``major``/``files``, or None) lands in the entry
+        :meth:`history` returns."""
+        base = -1 if ptr is None else int(ptr["version"])
+        version = base + 1
         # concurrent-writer detection (commit-pointer CAS): the table is
         # single-writer by design, but a second writer must fail LOUDLY,
-        # not silently last-write-wins. Each write op captures the
-        # pointer version it planned against; if the pointer moved while
-        # the write ran, another writer committed and this commit would
-        # clobber its manifest. Check-then-rename is not atomic, so this
-        # is detection of discipline violations, not a lock — matching
-        # what a real deployment gets from a conditional-put object
-        # store; multi-writer deployments use DeltaTableSink.
+        # not silently last-write-wins. If the pointer moved off the one
+        # this commit applies onto, another writer committed and this
+        # commit would clobber its manifest. Check-then-rename is not
+        # atomic, so this is detection of discipline violations, not a
+        # lock — matching what a real deployment gets from a
+        # conditional-put object store; multi-writer deployments use
+        # DeltaTableSink.
         prev = self._read_pointer()
-        if expected_base is not None:
-            cur_v = -1 if prev is None else int(prev["version"])
-            if cur_v != expected_base:
-                raise ConcurrentWriteError(
-                    f"concurrent writer detected on {self.path}: commit "
-                    f"planned against version {expected_base} but the "
-                    f"pointer is now at {cur_v}; this writer's work is "
-                    f"discarded — re-read and retry the batch"
-                )
+        cur_v = -1 if prev is None else int(prev["version"])
+        if cur_v != base:
+            raise ConcurrentWriteError(
+                f"concurrent writer detected on {self.path}: commit "
+                f"planned against version {base} but the "
+                f"pointer is now at {cur_v}; this writer's work is "
+                f"discarded — re-read and retry the batch"
+            )
+        buckets = self._overlay(
+            {} if ptr is None else ptr["buckets"], a.touched, a.written, a.pv
+        )
+        runs = a.runs
+        if a.op.appends and a.maintenance is None and ptr is not None:
+            runs = (ptr.get("runs") or []) + a.runs
+        schema_ddl = json.dumps(a.evolved.jsonValue())
         # vacuum-race guard: the grace window in _vacuum is an mtime
         # heuristic, so a writer whose write job outlives vacuum_grace_s
         # can have its in-flight staging dir rmtree'd by a racing
@@ -1185,7 +1457,7 @@ class SnapshotTable:
             for b, v in buckets.items()
             if int(v) not in prev_versions
         ]
-        for r in runs or []:
+        for r in runs:
             if int(r["v"]) not in prev_versions:
                 fresh_paths += [
                     f"{self.path}/v={r['v']}/bucket={b}"
@@ -1200,27 +1472,22 @@ class SnapshotTable:
                 f"{' ...' if len(missing) > 3 else ''} — this writer's "
                 "work is discarded; re-read and retry the batch"
             )
+        guard = a.op.guard
         if guard is None:  # carry forward: a guarded table stays guarded
             guard = None if prev is None else prev.get("guard")
         # zone maps: carry forward untouched buckets' stats (their files
         # are the same files, so their bounds still hold); buckets
-        # written at THIS version get fresh stats (maintenance/bootstrap
-        # paths) or none (merge hot path with stats_on_merge=False —
+        # written at THIS version get fresh stats (folds, rewrites,
+        # creation) or none (a plain merge with stats_on_merge=False —
         # absent stats never prune, so reads stay exact either way)
         prev_stats = {} if prev is None else (prev.get("stats") or {})
         prev_fstats = {} if prev is None else (prev.get("fstats") or {})
-        # stale_stats_buckets: a REBASE commit (conflict retry) points
-        # some buckets at files written under an EARLIER version number
-        # than this commit, so the v != version carry test would adopt
-        # the winning writer's stats for content this writer replaced —
-        # those buckets must drop their carried stats instead (absent
-        # stats never prune, so reads stay exact)
-        wv = version if data_version is None else data_version
-
-        def _carry(b: int, v: int) -> bool:
-            if v == wv:
-                return False
-            return stale_stats_buckets is None or b not in stale_stats_buckets
+        # a REBASED commit (onto a winner's pointer, not the planning
+        # one) points the attempt's buckets at files planned against an
+        # earlier version: carried stats would describe the winner's
+        # view of content this writer replaced — those buckets drop
+        # their carried stats instead (absent stats never prune)
+        stale = set(a.touched) | set(a.written) if base != a.base else set()
 
         # stats are carried BY REFERENCE: the pointer stores
         # {bucket: sidecar_version} and only the buckets whose stats
@@ -1242,7 +1509,7 @@ class SnapshotTable:
         side_fstats: dict = {}
         for b, v in buckets.items():
             bs = str(b)
-            if not _carry(b, v):
+            if v == a.pv or b in stale:
                 continue
             if bs in prev_sref:
                 stats_ref[bs] = int(prev_sref[bs])
@@ -1254,10 +1521,12 @@ class SnapshotTable:
             elif bs in prev_fstats:
                 side_fstats[bs] = prev_fstats[bs]
                 fstats_ref[bs] = version
-        if fresh_stats:
+        if self.stats_on_merge or not (
+            a.op.lazy_stats and a.maintenance is None
+        ):
             new_stats, new_fstats = self._collect_stats(
-                wv,
-                [b for b, v in buckets.items() if v == wv],
+                a.pv,
+                [b for b, v in buckets.items() if v == a.pv],
                 schema_ddl,
             )
             side_stats.update(new_stats)
@@ -1266,7 +1535,7 @@ class SnapshotTable:
             fstats_ref.update({bs: version for bs in new_fstats})
         entry = {
             "version": version,
-            "batch_id": batch_id,
+            "batch_id": a.batch_id,
             "schema": schema_ddl,
             "buckets": {str(b): v for b, v in buckets.items()},
             "guard": guard,
@@ -1274,8 +1543,8 @@ class SnapshotTable:
             "cluster_cols": self.cluster_cols,
             "stats_ref": stats_ref,
             "fstats_ref": fstats_ref,
-            "runs": runs or [],
-            "maintenance": maintenance,
+            "runs": runs,
+            "maintenance": a.maintenance,
         }
         os.makedirs(self.path, exist_ok=True)
         if side_stats or side_fstats:
@@ -1307,7 +1576,7 @@ class SnapshotTable:
         # the pointer now references this attempt's files: the staging
         # marker's job is done (vacuum protects referenced versions by
         # the manifest itself from here on)
-        self._clear_staging(data_version)
+        self._clear_staging(a.pv)
         # O(1) size probe, not a line count: between compactions the
         # log is bounded, so the rewrite below amortizes to O(retention)
         # per commit instead of history() re-reading O(n_commits)
@@ -1463,22 +1732,14 @@ class SnapshotTable:
 
         out: dict[str, dict] = {}
         for b in buckets:
-            d = f"{self.path}/v={version}/bucket={b}"
-            try:
-                names = sorted(
-                    n for n in os.listdir(d) if n.endswith(".parquet")
-                )
-            except FileNotFoundError:
-                continue
-            fmap = {}
-            for n in names:
-                fmap[n] = {
-                    "__rows": int(
-                        pq.ParquetFile(f"{d}/{n}").metadata.num_rows
-                    )
+            files = sorted(
+                self._parquet_files(version, b) or [], key=lambda e: e.name
+            )
+            if files:
+                out[str(b)] = {
+                    e.name: {"__rows": pq.ParquetFile(e.path).metadata.num_rows}
+                    for e in files
                 }
-            if fmap:
-                out[str(b)] = fmap
         return out
 
     @staticmethod
@@ -2703,6 +2964,14 @@ class SnapshotTable:
         writer.parquet(f"{self.path}/v={version}")
         return self._written_buckets(version)
 
+    @staticmethod
+    def _ids(entries: list[dict]) -> set[int]:
+        """The physical ids the given pointers / commit-log entries
+        reference: their manifest buckets and their runs."""
+        return {
+            int(v) for e in entries for v in e["buckets"].values()
+        } | {int(r["v"]) for e in entries for r in e.get("runs") or []}
+
     def _vacuum(self) -> None:
         """Drop version directories no longer referenced by the manifest
         of the current commit or the last ``retain_history`` commits
@@ -2725,18 +2994,11 @@ class SnapshotTable:
           deployments use the Delta sink below.
         """
         ptr = self._read_pointer()
-        referenced = set(self._bucket_manifest().values())
-        if ptr is not None:
-            referenced |= {r["v"] for r in ptr.get("runs") or []}
         entries = self.history()
+        referenced = self._ids([] if ptr is None else [ptr])
         if self.retain_history > 0:
-            for entry in entries[-(self.retain_history + 1):]:
-                referenced |= set(entry["buckets"].values())
-                referenced |= {r["v"] for r in entry.get("runs") or []}
-        committed_ever = {v for e in entries for v in e["buckets"].values()}
-        committed_ever |= {
-            r["v"] for e in entries for r in e.get("runs") or []
-        }
+            referenced |= self._ids(entries[-(self.retain_history + 1):])
+        committed_ever = self._ids(entries)
         try:
             versions = [
                 int(d.split("=")[1])
@@ -2857,22 +3119,11 @@ class SnapshotTable:
         missing files. Returns the removed version ids.
         """
         entries = self.history()
-        referenced = set(self._bucket_manifest().values())
         ptr = self._read_pointer()
-        if ptr is not None:
-            referenced |= {int(r["v"]) for r in ptr.get("runs") or []}
+        referenced = self._ids([] if ptr is None else [ptr])
         if self.retain_history > 0:
-            for entry in entries[-(self.retain_history + 1):]:
-                referenced |= {int(v) for v in entry["buckets"].values()}
-                referenced |= {
-                    int(r["v"]) for r in entry.get("runs") or []
-                }
-        committed_ever = {
-            int(v) for e in entries for v in e["buckets"].values()
-        }
-        committed_ever |= {
-            int(r["v"]) for e in entries for r in e.get("runs") or []
-        }
+            referenced |= self._ids(entries[-(self.retain_history + 1):])
+        committed_ever = self._ids(entries)
         try:
             on_disk = [
                 int(d.split("=")[1])
@@ -2903,47 +3154,9 @@ class SnapshotTable:
         return sorted(removed)
 
     def overwrite(self, df: DataFrame, batch_id: int | None = None) -> None:
-        """Create / replace the table contents (initial load, K1).
-        On an EXISTING table the rewrite lands in the committed layout
-        (bucket count, clustering) — replacing contents is not a
-        license to silently revert another writer's rebucket."""
-        ptr = self._read_pointer()
-        if ptr is not None:
-            self._adopt_committed_layout(ptr)
-        self._replace(df, batch_id, -1 if ptr is None else int(ptr["version"]))
-
-    def _replace(
-        self,
-        df: DataFrame,
-        batch_id: int | None,
-        base: int,
-        guard: dict | None = None,
-        schema_json: str | None = None,
-        records_per_file: int | None = None,
-    ) -> int:
-        """Commit ``df`` as the table's whole contents onto logical
-        version ``base`` (-1 creates the table): one range-clustered
-        write under a fresh physical id, fresh zone maps, vacuum. The
-        pre-write check and the commit CAS both run against ``base``,
-        so two racing creations never share a directory and the loser
-        fails loudly. Returns the physical id written."""
-        pv = self._new_data_version()
-        written = self._write_buckets(
-            df.withColumn("bucket", self._bucket_col()), pv,
-            expected_base=base, records_per_file=records_per_file,
-            range_cluster=True,
-        )
-        self._commit(
-            base + 1,
-            batch_id,
-            {b: pv for b in written},
-            schema_json or json.dumps(df.schema.jsonValue()),
-            guard,
-            expected_base=base,
-            data_version=pv,
-        )
-        self._vacuum()
-        return pv
+        """Create / replace the table contents (initial load, K1) —
+        see :class:`_Overwrite`."""
+        self._write(_Overwrite(df, batch_id))
 
     @staticmethod
     def _overlay(buckets: dict, touched, written, pv: int) -> dict[int, int]:
@@ -2957,6 +3170,73 @@ class SnapshotTable:
         for b in written:
             manifest[b] = pv
         return manifest
+
+    def _write(self, op: _Write, retry_conflicts: int = 0) -> _Attempt | None:
+        """The one write skeleton under every commit — merges, folds,
+        rebucket, tombstone GC, overwrite and creation: each attempt
+        reads ONE pointer and plans against it, stages under one fresh
+        physical id, then goes through the one :meth:`_commit` and the
+        one :meth:`_vacuum`. The strategy ``op`` (a :class:`_Write`)
+        decides only what it plans and stages.
+
+        A lost commit race costs one of ``retry_conflicts`` retries
+        (0 = fail loudly, the contract of every maintenance op); the
+        next attempt rebases the staged files onto the winner's pointer
+        when ``op`` allows it, else it replans. Returns the last
+        attempt — committed, or found to have nothing to commit — or
+        None for a replayed batch."""
+        from pyspark.sql.types import StructType
+
+        staged = None
+        retries = retry_conflicts
+        while True:
+            try:
+                ptr = self._read_pointer()
+                step = op.create(self) if ptr is None else op
+                if ptr is not None:
+                    # per attempt: after a lost race the winner may have
+                    # been this batch's own replay
+                    if op.replays and op.batch_id is not None and (
+                        op.batch_id == ptr.get("batch_id")
+                    ):
+                        return None
+                    op.check(ptr)
+                    self._adopt_committed_layout(ptr)
+                schema = None if ptr is None else StructType.fromJson(
+                    json.loads(ptr["schema"])
+                )
+                evolved = step.evolve(self, schema)
+                tier = step.tier(self, ptr)
+                if staged is not None and (
+                    staged.op is not step
+                    or staged.maintenance != tier
+                    or not self._rebases(staged, ptr)
+                ):
+                    staged = None
+                if staged is None:
+                    staged = self._stage(
+                        _Attempt(
+                            step, ptr, schema, self.n_buckets,
+                            step.batch_of(ptr), evolved, tier,
+                        )
+                    )
+                # a rebased commit records the winner's schema with this
+                # attempt's evolution applied
+                staged.evolved = evolved
+                if staged.pv is None or (
+                    not step.commits_empty
+                    and not staged.runs
+                    and staged.maintenance is None
+                    and evolved == schema
+                ):
+                    return staged
+                self._commit(staged, ptr)
+                self._vacuum()
+                return staged
+            except ConcurrentWriteError:
+                if not retries:
+                    raise
+                retries -= 1
 
     def merge(
         self,
@@ -3003,7 +3283,7 @@ class SnapshotTable:
         and a ``cow`` merge while runs are pending raises rather than
         stranding run rows.
 
-        Every mode runs the same plan → stage → commit skeleton; the
+        Every mode runs on the one write skeleton (:meth:`_write`); the
         mode strategy only writes the staged files. ``retry_conflicts``
         (default 0 = the original fail-loudly contract) bounds
         OPTIMISTIC-CONCURRENCY retries on :class:`ConcurrentWriteError`
@@ -3043,96 +3323,20 @@ class SnapshotTable:
         batch — evaluates the policy on the committed state after the
         merge, as :meth:`compact_by_size` does.
         """
-        from pyspark.sql.types import StructType
-
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
+        args = (compacted, op_col, delete_op, batch_id, evolve_schema)
         if mode == "mor":
             if guard_cols is not None:
                 raise ValueError(_MOR_GUARDED)
-            strategy = _MergeOnRead(op_col, delete_op, maintain)
+            strategy = _MergeOnRead(*args, maintain)
         elif guard_cols is not None:
-            strategy = _OrderGuarded(op_col, delete_op, list(guard_cols))
+            strategy = _OrderGuarded(*args, list(guard_cols))
         else:
-            strategy = _CopyOnWrite(op_col, delete_op)
-        staged = None
-        for attempt in range(retry_conflicts + 1):
-            # per attempt: after a lost race the winner may have been
-            # this batch's own replay
-            if batch_id is not None and batch_id == self.last_batch_id():
-                break
-            try:
-                ptr = self._read_pointer()
-                if ptr is None:
-                    self._replace(
-                        strategy.initial(self, compacted), batch_id, -1,
-                        strategy.guard,
-                    )
-                    break
-                strategy.check(ptr)
-                self._adopt_committed_layout(ptr)
-                schema = StructType.fromJson(json.loads(ptr["schema"]))
-                # before any job: an unsafe type change raises here
-                evolved = StructType(_evolved_fields(
-                    schema, compacted.schema, op_col, evolve_schema,
-                    self.key_cols,
-                ))
-                tier = strategy.tier(self, ptr)
-                if staged is not None and (
-                    staged.maintenance != tier
-                    or not self._rebases(strategy, staged, ptr)
-                ):
-                    staged = None
-                if staged is None:
-                    staged = self._stage(
-                        strategy, compacted, ptr, schema, batch_id,
-                        evolved, tier,
-                    )
-                if (
-                    not strategy.commits_empty
-                    and not staged.runs
-                    and staged.maintenance is None
-                    and evolved == schema
-                ):
-                    return "none"
-                version = int(ptr["version"])
-                rebased = version != staged.base
-                # a fold replaces the runs it read; an append adds one
-                runs = staged.runs if staged.maintenance else (
-                    (ptr.get("runs") or []) + staged.runs
-                )
-                self._commit(
-                    version + 1,
-                    batch_id,
-                    self._overlay(
-                        ptr["buckets"], staged.touched, staged.written,
-                        staged.pv,
-                    ),
-                    json.dumps(evolved.jsonValue()),
-                    strategy.guard,
-                    expected_base=version,
-                    # a base fold is a full rewrite: fresh zone maps
-                    fresh_stats=self.stats_on_merge
-                    or staged.maintenance in ("major", "files"),
-                    # a rebased commit points buckets at files planned
-                    # against an earlier version: carried stats would
-                    # describe the winner's view of content this
-                    # writer replaced
-                    stale_stats_buckets=(
-                        set(staged.touched) | set(staged.written)
-                        if rebased else None
-                    ),
-                    data_version=staged.pv,
-                    runs=runs,
-                    maintenance=staged.maintenance,
-                )
-                self._vacuum()
-                if strategy.fuses:
-                    return staged.maintenance or "none"
-                break
-            except ConcurrentWriteError:
-                if attempt == retry_conflicts:
-                    raise
+            strategy = _CopyOnWrite(*args)
+        a = self._write(strategy, retry_conflicts)
+        if a is not None and a.op is strategy and strategy.fuses:
+            return a.maintenance or "none"
         return "none" if maintain is None else self.compact_by_size(*maintain)
 
     @contextmanager
@@ -3171,7 +3375,7 @@ class SnapshotTable:
                     else:
                         self.spark.conf.set(key, prior)
 
-    def _rebases(self, strategy, a: _Attempt, ptr: dict) -> bool:
+    def _rebases(self, a: _Attempt, ptr: dict) -> bool:
         """Whether the files ``a`` staged before losing a commit race
         may be committed onto the winner's pointer ``ptr`` as they are:
         the bucket modulus they were routed with still holds, they are
@@ -3184,89 +3388,50 @@ class SnapshotTable:
                 os.path.isdir(f"{self.path}/v={a.pv}/bucket={b}")
                 for b in buckets
             )
-            and strategy.rebases(a, ptr)
+            and a.op.rebases(a, ptr)
         )
 
-    def _stage(
-        self, strategy, compacted: DataFrame, ptr: dict, schema,
-        batch_id: int | None, evolved, tier: str | None,
-    ) -> _Attempt:
-        """Plan one merge attempt against ``ptr`` and write its files.
+    def _stage(self, a: _Attempt) -> _Attempt:
+        """Plan attempt ``a`` and write its files.
 
         Files land under this attempt's writer-unique ``pv`` dir — a
         racing writer (committed or in flight) can never touch them,
         and this write can never touch the winner's, which is what
         makes both the rebase and the full replan sound in a true
-        race."""
-        from pyspark.sql import Observation
-
-        a = _Attempt(
-            ptr, schema, self.n_buckets, batch_id, evolved, tier
-        )
-        # committed key types govern hash routing — see _align_key_types
-        source = _align_key_types(
-            compacted, schema, self.key_cols
-        ).withColumn("bucket", self._bucket_col())
+        race. A plan that finds nothing to do allocates no ``pv``."""
         try:
-            if strategy.probes:
-                # persist once: the batch plan (parse + compact shuffle)
-                # feeds the probe and the write's consumers (anti-join
-                # broadcast, upsert union) — without this it would
-                # re-execute per consumer. The cached plan is fixed at
-                # persist(), so it must be planned inside the static
-                # window too: an adaptive cached plan runs each of its
-                # exchanges as its own job.
-                # The probe's bounded driver metadata — the
-                # touched-bucket set and the batch size that decides
-                # the anti-join strategy — is OBSERVED during the
-                # cache-materializing noop write instead of a separate
-                # groupBy + collect (r19 event-log attribution: 5 probe
-                # jobs -> 3, and 1 with static planning). collect_set
-                # is ≤ n_buckets values.
-                obs = Observation()
-                with self._static_merge_planning():
-                    source = source.persist()
-                    (
-                        source.observe(
-                            obs,
-                            F.collect_set("bucket").alias("b"),
-                            F.count(F.lit(1)).alias("n"),
-                        )
-                        .write.format("noop")
-                        .mode("overwrite")
-                        .save()
-                    )
-                a.touched = sorted(obs.get["b"])
-                a.batch_rows = int(obs.get["n"])
-            a.pv = self._new_data_version()
-            with (
-                self._static_merge_planning()
-                if strategy.static_write
-                else nullcontext()
-            ):
-                strategy.write(self, source, a)
+            if a.op.plan(self, a):
+                a.pv = self._new_data_version()
+                with (
+                    self._static_merge_planning()
+                    if a.op.static_write
+                    else nullcontext()
+                ):
+                    a.op.write(self, a.source, a)
         except ConcurrentWriteError:
             raise
         except Exception as exc:
-            # a racing winner's post-commit vacuum may delete the base
-            # files this plan was reading mid-job (the documented
+            # a racing winner's post-commit vacuum may delete the files
+            # this plan was reading mid-job (the documented
             # pinned-reader caveat). If the pointer moved since
             # planning, the failure IS a write conflict — surface it as
-            # one so the retry loop replans against the winner's state
-            # instead of dying on a raw read error. A failure with the
-            # pointer unmoved is a genuine error.
-            if self.version != a.base:
+            # one so a merge's retry loop replans against the winner's
+            # state instead of dying on a raw read error. A failure
+            # with the pointer unmoved is a genuine error.
+            cur = self._read_pointer()
+            cur_v = -1 if cur is None else int(cur["version"])
+            if cur_v != a.base:
                 raise ConcurrentWriteError(
                     f"concurrent writer detected on {self.path}: the "
-                    f"merge job failed and the pointer moved from "
-                    f"{a.base} to {self.version} while it ran — the "
-                    f"winner's vacuum likely removed this plan's input "
-                    f"files; re-read and retry the batch"
+                    f"write job failed and the pointer moved from "
+                    f"{a.base} to {cur_v} while it ran — the winner's "
+                    f"vacuum likely removed this plan's input files; "
+                    f"re-read and retry"
                 ) from exc
             raise
         finally:
-            if strategy.probes:
-                source.unpersist()
+            if a.source is not None and a.source.is_cached:
+                a.source.unpersist()
         return a
 
     def compact(self, target_file_bytes: int | None = None) -> int:
@@ -3305,123 +3470,90 @@ class SnapshotTable:
         Cost is one full-table scan + write — schedule it off the hot
         path (e.g. per N merges), like OPTIMIZE. The rewrite is the
         major-fold body (:meth:`_fold_base`); its commit records the
-        tier ``"major"`` in :meth:`history`. Returns the number of
-        data files the new version holds.
+        tier ``"major"`` in :meth:`history`. A size-targeted compact of
+        a layout that already meets the target commits nothing
+        (:meth:`_packed_files`). Returns the number of data files the
+        new version (or the untouched layout) holds.
         """
-        return self._compact(target_file_bytes, "major")
+        return self._write(_Fold("major", target_file_bytes)).result
 
-    def _compact(self, target_file_bytes: int | None, maintenance: str) -> int:
-        """:meth:`compact`, committed as the tier ``maintenance`` (the
-        file-count tier's repack records ``"files"``)."""
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        # a stale instance must compact INTO the committed layout, not
-        # silently revert another writer's rebucket
-        self._adopt_committed_layout(ptr)
-        # OPTIMIZE fast path (r19, guide §6): a size-targeted compact
-        # whose committed layout ALREADY meets the target is a
-        # metadata no-op — rewriting it would re-read and re-write the
-        # whole table to reproduce what is on disk. "Meets the target":
-        # no pending MoR runs (they must fold), every bucket at ONE
-        # data version (a merge-fragmented manifest pins many version
-        # dirs and holds bucket-local merge files the rewrite
-        # re-clusters), no oversized file (> 2x target: needs
-        # splitting), and at most one sub-half-target file per
-        # writer-task slice per bucket (the remainder file every
-        # row-capped write leaves at each slice boundary — with fewer
-        # candidates than that, bin-packing cannot reduce the file
-        # count meaningfully). The check is driver-side scandir of the
-        # live bucket dirs, the same bounded-metadata class as the
-        # manifest; at 100 TB it replaces a full-table rewrite per
-        # maintenance tick with a listing.
-        if (
-            target_file_bytes is not None
-            and not (ptr.get("runs") or [])
-            and len(set(ptr["buckets"].values())) == 1
-        ):
-            width = max(
-                self.n_buckets,
-                self.spark.sparkContext.defaultParallelism,
-            )
-            small_allow = width // self.n_buckets + 1
-            meets = True
-            n_files_now = 0
-            for b, v in ptr["buckets"].items():
-                d = f"{self.path}/v={v}/bucket={b}"
-                small = 0
-                try:
-                    with os.scandir(d) as it:
-                        for e in it:
-                            if not e.name.endswith(".parquet"):
-                                continue
-                            n_files_now += 1
-                            size = e.stat().st_size
-                            if size > 2 * target_file_bytes:
-                                meets = False
-                                break
-                            if 2 * size < target_file_bytes:
-                                small += 1
-                except FileNotFoundError:
-                    meets = False
-                if not meets or small > small_allow:
-                    meets = False
-                    break
-            if meets:
-                return n_files_now
-        from pyspark.sql.types import StructType
+    def _packed_files(self, ptr: dict, target_file_bytes: int) -> int | None:
+        """The OPTIMIZE fast path (r19, guide §6): the file count of a
+        committed layout that ALREADY meets ``target_file_bytes``, or
+        None when it must be rewritten — a size-targeted compact of a
+        packed layout would re-read and re-write the whole table to
+        reproduce what is on disk. "Meets the target": no pending MoR
+        runs (they must fold), every bucket at ONE data version (a
+        merge-fragmented manifest pins many version dirs and holds
+        bucket-local merge files the rewrite re-clusters), no oversized
+        file (> 2x target: needs splitting), and at most one
+        sub-half-target file per writer-task slice per bucket (the
+        remainder file every row-capped write leaves at each slice
+        boundary — with fewer candidates than that, bin-packing cannot
+        reduce the file count meaningfully). Driver-side scandir of
+        the live bucket dirs, the same bounded-metadata class as the
+        manifest; at 100 TB it replaces a full-table rewrite per
+        maintenance tick with a listing."""
+        if ptr.get("runs") or len(set(ptr["buckets"].values())) != 1:
+            return None
+        width = max(self.n_buckets, self.spark.sparkContext.defaultParallelism)
+        small_allow = width // self.n_buckets + 1
+        n_files = 0
+        for b, v in ptr["buckets"].items():
+            files = self._parquet_files(v, b)
+            if files is None:
+                return None
+            sizes = [e.stat().st_size for e in files]
+            if max(sizes, default=0) > 2 * target_file_bytes or (
+                sum(2 * n < target_file_bytes for n in sizes) > small_allow
+            ):
+                return None
+            n_files += len(files)
+        return n_files
 
-        base = int(ptr["version"])
-        pv = self._new_data_version()
-        written = self._fold_base(
-            ptr, StructType.fromJson(json.loads(ptr["schema"])), pv,
-            target_file_bytes=target_file_bytes,
-        )
-        self._commit(
-            base + 1, ptr.get("batch_id"), {b: pv for b in written},
-            ptr["schema"], expected_base=base, data_version=pv,
-            maintenance=maintenance,
-        )
-        self._vacuum()
-        root = f"{self.path}/v={pv}"
-        return sum(
-            1
-            for _, _, files in os.walk(root)
-            for fn in files
-            if fn.endswith(".parquet")
-        )
+    def _fold(
+        self, a: _Attempt, batch: DataFrame | None = None,
+        target_file_bytes: int | None = None,
+    ) -> None:
+        """Stage the fold ``a.maintenance`` names — the one body behind
+        :meth:`compact_runs`, :meth:`compact`, the file-count tier and a
+        merge-on-read merge that rides a fold (whose run-shaped
+        ``batch`` is the newest run): ``minor`` is :meth:`_fold_runs`,
+        ``major``/``files`` is :meth:`_fold_base`."""
+        if a.maintenance == "minor":
+            self._fold_runs(a, batch)
+        else:
+            self._fold_base(a, batch, target_file_bytes)
 
     def _fold_base(
-        self, ptr: dict, schema, pv: int, batch: DataFrame | None = None,
+        self, a: _Attempt, batch: DataFrame | None = None,
         target_file_bytes: int | None = None,
-    ) -> list[int]:
-        """The MAJOR fold body, shared by :meth:`compact` and a
-        merge-on-read merge that rides a major fold: write ``ptr``'s
-        base ∪ pending runs (∪ an incoming run-shaped ``batch``, the
-        newest run), resolved to the latest row per key and read under
-        ``schema``, as a whole new base under ``pv`` — range-clustered
-        like any full rewrite; the commit takes fresh zone maps.
-        Guard tombstones are kept (a compaction is physical). With
-        ``target_file_bytes``, rows-per-file comes from the rewrite's
-        own row count over the table's on-disk bytes (see
-        :meth:`compact`). Returns the buckets written."""
+    ) -> None:
+        """The MAJOR fold body: stage ``a.ptr``'s base ∪ pending runs
+        (∪ an incoming run-shaped ``batch``, the newest run), resolved
+        to the latest row per key and read under ``a.evolved``, as a
+        whole new base under ``a.pv`` — range-clustered like any full
+        rewrite; the commit takes fresh zone maps. Guard tombstones are
+        kept (a compaction is physical). With ``target_file_bytes``,
+        rows-per-file comes from the rewrite's own row count over the
+        table's on-disk bytes (see :meth:`compact`)."""
         full = self._scan(
-            replace(self._plan(ptr), schema=schema),
+            replace(self._plan(a.ptr), schema=a.evolved),
             include_tombstones=True, batch=batch,
         )
         rpf = None
         if target_file_bytes is not None:
-            on_disk = self._base_bytes(ptr) + self._run_bytes(ptr)
+            on_disk = self._base_bytes(a.ptr) + self._run_bytes(a.ptr)
             # count the SAME plan the rewrite reads (not a second
             # definition); footer-only on pure CoW — see compact()
             n_rows = full.count()
             if n_rows > 0 and on_disk > 0:
                 rpf = max(1, int(n_rows * target_file_bytes / on_disk))
-        return self._write_buckets(
-            full.withColumn("bucket", self._bucket_col()), pv,
-            expected_base=int(ptr["version"]), records_per_file=rpf,
+        a.rewrite(self._write_buckets(
+            full.withColumn("bucket", self._bucket_col()), a.pv,
+            expected_base=a.base, records_per_file=rpf,
             range_cluster=True,
-        )
+        ))
 
     def compact_runs(self) -> int:
         """MINOR compaction for merge-on-read tables (the LSM L0 fold):
@@ -3441,69 +3573,37 @@ class SnapshotTable:
         Returns the number of pending runs folded (0/1 = nothing to
         do).
         """
-        from pyspark.sql.types import StructType
+        return self._write(_Fold("minor")).result
 
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        # the folded run's bucket ids must follow the committed modulus
-        # or key-routed reads would miss its masks/overrides
-        self._adopt_committed_layout(ptr)
-        runs = ptr.get("runs") or []
-        if len(runs) <= 1:
-            return len(runs)
-        base = int(ptr["version"])
-        pv = self._new_data_version()
-        folded = self._fold_runs(
-            ptr, StructType.fromJson(json.loads(ptr["schema"])), pv,
-            runs[-1].get("batch_id"),
-        )
-        self._commit(
-            base + 1,
-            ptr.get("batch_id"),
-            {int(b): v for b, v in ptr["buckets"].items()},
-            ptr["schema"],
-            expected_base=base,
-            fresh_stats=False,
-            data_version=pv,
-            runs=folded,
-            maintenance="minor",
-        )
-        self._vacuum()
-        return len(runs)
-
-    def _fold_runs(
-        self, ptr: dict, schema, pv: int, batch_id: int | None,
-        batch: DataFrame | None = None,
-    ) -> list[dict]:
-        """The MINOR fold body, shared by :meth:`compact_runs` and a
-        merge-on-read merge that rides a minor fold: ``ptr``'s pending
-        runs (∪ an incoming run-shaped ``batch``, the newest run) read
-        under ``schema`` and folded to the latest row per key, delete
-        masks kept, written under ``pv``. Returns the run list that
-        replaces the pending runs: one run entry tagged ``batch_id``
-        (empty if nothing was written)."""
+    def _fold_runs(self, a: _Attempt, batch: DataFrame | None = None) -> None:
+        """The MINOR fold body: ``a.ptr``'s pending runs (∪ an incoming
+        run-shaped ``batch``, the newest run) read under ``a.evolved``
+        and folded to the latest row per key, delete masks kept, staged
+        under ``a.pv`` as the run list that replaces the pending runs:
+        one run entry (none if nothing was written) tagged with its
+        newest input's batch id."""
         from changedatacapture_spark.operators.cdc import compact_latest
 
-        parts = self._load_runs(ptr.get("runs") or [], schema, batch)
+        runs = a.ptr.get("runs") or []
+        parts = self._load_runs(runs, a.evolved, batch)
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
-        payload = [f.name for f in schema.fields
+        payload = [f.name for f in a.evolved.fields
                    if f.name not in self.key_cols] + ["_mor_del"]
         folded = compact_latest(u, self.key_cols, ["_mor_seq"], payload)
         written = self._write_buckets(
-            folded.withColumn("bucket", self._bucket_col()), pv,
-            expected_base=int(ptr["version"]),
+            folded.withColumn("bucket", self._bucket_col()), a.pv,
+            expected_base=a.base,
         )
-        if not written:
-            return []
-        return [{
-            "v": pv,
-            "batch_id": batch_id,
-            "buckets": sorted(written),
-            "fstats": self._footer_fstats(pv, written),
-        }]
+        if written:
+            a.runs = [{
+                "v": a.pv,
+                "batch_id": a.batch_id if batch is not None
+                else runs[-1].get("batch_id"),
+                "buckets": sorted(written),
+                "fstats": self._footer_fstats(a.pv, written),
+            }]
 
     def _derived_records_per_file(self) -> int | None:
         """Rows-per-file cap that lands files near
@@ -3537,22 +3637,25 @@ class SnapshotTable:
             return None
         return max(1, int(self.target_file_bytes * rows / nbytes))
 
+    def _parquet_files(self, v: int, b) -> list | None:
+        """The parquet files (``os.DirEntry``) under ``v=<v>/bucket=<b>``,
+        None when the directory is gone — driver-side metadata (one
+        os.scandir, no Spark job), the same class of bookkeeping the
+        zone-map manifest already does."""
+        try:
+            with os.scandir(f"{self.path}/v={v}/bucket={b}") as it:
+                return [e for e in it if e.name.endswith(".parquet")]
+        except FileNotFoundError:
+            return None
+
     def _bucket_dir_bytes(self, v: int, buckets) -> int:
         """Parquet bytes under ``v=<v>/bucket=<b>`` for the given
-        buckets — driver-side metadata stats (an os.scandir per bucket
-        dir, no Spark job), the same class of bookkeeping the zone-map
-        manifest already does."""
-        total = 0
-        for b in buckets:
-            d = f"{self.path}/v={v}/bucket={b}"
-            try:
-                with os.scandir(d) as it:
-                    for e in it:
-                        if e.name.endswith(".parquet"):
-                            total += e.stat().st_size
-            except FileNotFoundError:
-                continue
-        return total
+        buckets."""
+        return sum(
+            e.stat().st_size
+            for b in buckets
+            for e in self._parquet_files(v, b) or []
+        )
 
     def base_bytes(self) -> int:
         """Parquet bytes of the copy-on-write base (manifest buckets)."""
@@ -3580,23 +3683,14 @@ class SnapshotTable:
 
     def _max_files_per_bucket(self, ptr: dict) -> int:
         """Largest parquet-file count any live manifest bucket holds —
-        driver-side scandir over the committed bucket dirs (the same
-        bounded-metadata class as ``_bucket_dir_bytes``), never a
-        Spark job. Fragmentation measure for the file-count
-        compaction tier below."""
-        worst = 0
-        for b, v in ptr["buckets"].items():
-            d = f"{self.path}/v={v}/bucket={b}"
-            n = 0
-            try:
-                with os.scandir(d) as it:
-                    for e in it:
-                        if e.name.endswith(".parquet"):
-                            n += 1
-            except FileNotFoundError:
-                continue
-            worst = max(worst, n)
-        return worst
+        the fragmentation measure of the file-count compaction tier."""
+        return max(
+            (
+                len(self._parquet_files(v, b) or [])
+                for b, v in ptr["buckets"].items()
+            ),
+            default=0,
+        )
 
     def compact_by_size(
         self,
@@ -3605,51 +3699,16 @@ class SnapshotTable:
         max_files_per_bucket: int | None = None,
         compact_every: int | None = None,
     ) -> str:
-        """Size-based compaction policy — one evaluation of the
-        byte-budget rule production MoR tables run instead of a
-        run-count cadence: let ``pending`` = delta-run bytes and
-        ``base`` = manifest-bucket bytes; MAJOR-fold (full rewrite,
-        runs absorbed into the base) when ``pending >= major_ratio *
-        base``, else MINOR-fold (runs collapse into one at delta cost)
-        when ``pending >= minor_ratio * base`` and ≥2 runs are
-        pending. Byte thresholds track what compaction actually costs
-        and what reads actually pay — a run-count cadence fires the
-        same way for 1 KB ticks and 10 GB backfills.
-
-        Either ratio may be None (that tier disabled). A minor fold
-        that doesn't shrink bytes below the threshold (disjoint keys)
-        simply re-arms: the next evaluation folds the new run in at
-        delta cost until the major threshold takes over — the LSM
-        behavior. Returns ``"major"``, ``"minor"``, ``"files"``, or
-        ``"none"`` (policy evaluated, nothing due). All folds preserve
-        logical contents bit-exactly (property-tested under arbitrary
-        schedules in test_property_mor).
-
-        ``max_files_per_bucket`` adds the FILE-COUNT tier (VERDICT
-        r16 #4): when any live bucket holds more parquet files than
-        this, the table re-packs itself with a major rewrite — sized
-        by ``target_file_bytes`` when the table has one. This is what
-        closes the small-file loop the map-only :meth:`rebucket`
-        split opens (file count ×m per scan task, by design) and that
-        churny clustered merges accumulate: wire it into the same
-        maintenance hook as the byte tiers and a rebucketed table
-        repacks on its next policy evaluation, no operator action.
-        Evaluated on pure-CoW tables too (runs aren't a precondition
-        for fragmentation).
-
-        ``compact_every`` adds the RUN-COUNT tier, checked first: a
-        minor fold once that many runs (and at least two) are pending
-        — the cadence that bounds read amplification at base +
-        ``compact_every`` runs without a full-table rewrite per
-        trigger. The tier comes from :meth:`_due_tier`, the one rule
-        a merge carrying the same policy (``merge(maintain=...)``,
-        how ``CdcPipeline`` and ``SecondaryIndex`` apply theirs) also
-        decides by; with every tier disabled this returns ``"none"``
-        without reading the pointer. A crash after a merge's commit
-        but before a post-merge fold only defers the fold to the next
-        evaluation: folds are physical rewrites that carry the batch
-        id through.
-        """
+        """One evaluation of the table's maintenance policy — the tiers
+        and their order are :class:`MaintenancePolicy`'s, decided by
+        :meth:`_due_tier`, the one rule a merge carrying the same policy
+        (``merge(maintain=...)``, how ``CdcPipeline`` and
+        ``SecondaryIndex`` apply theirs) also decides by — then the due
+        fold: :meth:`compact_runs` for ``"minor"``, :meth:`compact` for
+        ``"major"``, and for ``"files"`` a major rewrite sized by
+        ``target_file_bytes`` when the table has one. Returns the tier
+        (``"none"`` when nothing was due); with every tier disabled it
+        returns ``"none"`` without reading the pointer."""
         policy = MaintenancePolicy(
             minor_ratio, major_ratio, max_files_per_bucket, compact_every
         )
@@ -3664,19 +3723,19 @@ class SnapshotTable:
         elif tier == "major":
             self.compact()
         elif tier == "files":
-            self._compact(self.target_file_bytes, "files")
+            self._write(_Fold("files", self.target_file_bytes))
         return tier or "none"
 
     def _due_tier(
         self, ptr: dict, policy: MaintenancePolicy | None, incoming: bool
     ) -> str | None:
-        """The one maintenance-tier rule (the tiers of
-        :meth:`compact_by_size`, in its order): ``"minor"``,
-        ``"major"``, ``"files"`` or None, decided on the driver from
-        ``ptr`` alone (pointer metadata and directory stats, no Spark
-        job). ``incoming`` counts a batch about to be written as one
-        more run, for a merge-on-read merge asking before its write;
-        byte tiers always weigh the COMMITTED runs."""
+        """The one maintenance-tier rule (stated on
+        :class:`MaintenancePolicy`): ``"minor"``, ``"major"``,
+        ``"files"`` or None, decided on the driver from ``ptr`` alone
+        (pointer metadata and directory stats, no Spark job).
+        ``incoming`` counts a batch about to be written as one more run,
+        for a merge-on-read merge asking before its write; byte tiers
+        always weigh the COMMITTED runs."""
         if policy is None:
             return None
         minor_ratio, major_ratio, max_files, every = policy
@@ -3760,16 +3819,13 @@ class SnapshotTable:
             p for p in paths_of(ptr)
             if not os.path.isdir(f"{self.path}/{p}")
         ]
-        referenced = {int(v) for v in ptr["buckets"].values()}
-        referenced |= {int(r["v"]) for r in ptr.get("runs") or []}
+        referenced = self._ids([ptr])
         missing_history: list[str] = []
         entries = self.history()
         if self.retain_history > 0:
-            for entry in entries[-(self.retain_history + 1):-1]:
-                referenced |= {int(v) for v in entry["buckets"].values()}
-                referenced |= {
-                    int(r["v"]) for r in entry.get("runs") or []
-                }
+            retained = entries[-(self.retain_history + 1):-1]
+            referenced |= self._ids(retained)
+            for entry in retained:
                 missing_history += [
                     p for p in paths_of(entry)
                     if not os.path.isdir(f"{self.path}/{p}")
@@ -3782,13 +3838,7 @@ class SnapshotTable:
             }
         except FileNotFoundError:
             on_disk = set()
-        committed_ever = {
-            int(v) for e in entries for v in e["buckets"].values()
-        }
-        committed_ever |= {
-            int(r["v"]) for e in entries for r in e.get("runs") or []
-        }
-        orphans = sorted(on_disk - referenced - committed_ever)
+        orphans = sorted(on_disk - referenced - self._ids(entries))
         # stats sidecars: referenced-but-absent ones are reported as
         # INFO, not corruption — a lost sidecar composes to absent
         # stats (reads stay exact, pruning degrades), so it never
@@ -3899,29 +3949,7 @@ class SnapshotTable:
         """
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        old_n = int(ptr.get("n_buckets") or self.n_buckets)
-        map_only = (
-            n_buckets > old_n
-            and n_buckets % old_n == 0
-            and not ptr.get("runs")
-        )
-        full = self.read(include_tombstones=True)
-        self.n_buckets = n_buckets
-        base = int(ptr["version"])
-        version = base + 1
-        pv = self._new_data_version()
-        written = self._write_buckets(
-            full.withColumn("bucket", self._bucket_col()), pv,
-            expected_base=base, repartition=not map_only,
-        )
-        self._commit(
-            version, ptr.get("batch_id"), {b: pv for b in written},
-            ptr["schema"], expected_base=base, data_version=pv,
-        )
-        self._vacuum()
+        self._write(_Rebucket(n_buckets))
 
     def changes_between(
         self, v_from: int, v_to: int, include_preimage: bool = False
@@ -4070,14 +4098,13 @@ class SnapshotTable:
         ride along. Returns a summary dict.
         """
         dropped = 0
-        if tombstone_horizon is not None:
-            ptr = self._read_pointer()
-            if ptr is not None and ptr.get("guard"):
-                dropped = self.gc_tombstones(tombstone_horizon)
-        n_files = self.compact()
+        if tombstone_horizon is not None and (
+            (self._read_pointer() or {}).get("guard")
+        ):
+            dropped = self.gc_tombstones(tombstone_horizon)
         return {
             "tombstones_dropped": dropped,
-            "files_after_compaction": n_files,
+            "files_after_compaction": self.compact(),
             "version": self.version,
         }
 
@@ -4100,60 +4127,7 @@ class SnapshotTable:
         the horizon contract says cannot arrive. Returns the number of
         tombstones dropped.
         """
-        ptr = self._read_pointer()
-        if ptr is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        # touched-bucket discovery routes rows; a stale modulus would
-        # pair wrong bucket ids with the committed manifest's paths
-        self._adopt_committed_layout(ptr)
-        guard = ptr.get("guard")
-        if not guard:
-            raise ValueError("gc_tombstones applies only to order-guarded tables")
-        expired = (F.col(guard["op_col"]) == guard["delete_op"]) & (
-            F.col(guard["guard_cols"][0]) < F.lit(horizon)
-        )
-        manifest = self._bucket_manifest()
-        schema = self.schema()
-        full = self.read(include_tombstones=True).withColumn(
-            "bucket", self._bucket_col()
-        )
-        # one scan decides both the rewrite set and the dropped count
-        probe = (
-            full.filter(expired)
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        if not probe:
-            return 0
-        touched = sorted(r.bucket for r in probe)
-        dropped = sum(r.n for r in probe)
-        base = int(ptr["version"])
-        version = base + 1
-        pv = self._new_data_version()
-        paths = [
-            f"{self.path}/v={manifest[b]}/bucket={b}"
-            for b in touched
-            if b in manifest
-        ]
-        kept = (
-            self.spark.read.schema(schema)
-            .parquet(*paths)
-            .filter(~expired)
-        )
-        written = self._write_buckets(
-            kept.withColumn("bucket", self._bucket_col()), pv,
-            expected_base=base,
-        )
-        # batch_id and guard carry forward: GC is a physical rewrite,
-        # not a logical batch — replay idempotence must survive it
-        self._commit(
-            version, ptr.get("batch_id"),
-            self._overlay(manifest, touched, written, pv), ptr["schema"],
-            expected_base=base, data_version=pv,
-        )
-        self._vacuum()
-        return dropped
+        return self._write(_GcTombstones(horizon)).result
 
 
 class DeltaTableSink:

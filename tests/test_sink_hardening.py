@@ -198,8 +198,13 @@ def test_commit_cas_detects_stale_base(spark, tmp_path):
         spark.createDataFrame([(1, "c", 10)], "k long, op string, v long"),
         batch_id=0,
     )
+    # an attempt planned against version 7 while the table is at 0
+    stale = sink_mod._Attempt(
+        sink_mod._Fold("major"), {"version": 7, "buckets": {}}, t.schema(),
+        t.n_buckets, None, t.schema(),
+    )
     with pytest.raises(ConcurrentWriteError, match="planned against version 7"):
-        t._commit(8, None, {}, "{}", expected_base=7)
+        t._commit(stale, stale.ptr)
 
 
 def test_interleaved_writers_fail_loudly(spark, tmp_path, monkeypatch):
