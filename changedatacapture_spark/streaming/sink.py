@@ -622,10 +622,7 @@ class _Fold(_Write):
         t._fold(a, target_file_bytes=self.target_file_bytes)
         if self.kind != "minor":
             a.result = sum(
-                1
-                for _, _, files in os.walk(f"{t.path}/v={a.pv}")
-                for fn in files
-                if fn.endswith(".parquet")
+                len(t._parquet_files(a.pv, b) or []) for b in a.written
             )
 
 
@@ -3223,15 +3220,21 @@ class SnapshotTable:
                 # a rebased commit records the winner's schema with this
                 # attempt's evolution applied
                 staged.evolved = evolved
-                if staged.pv is None or (
-                    not step.commits_empty
-                    and not staged.runs
-                    and staged.maintenance is None
-                    and evolved == schema
-                ):
+                if staged.pv is None:
                     return staged
-                self._commit(staged, ptr)
-                self._vacuum()
+                if (
+                    step.commits_empty
+                    or staged.runs
+                    or staged.maintenance is not None
+                    or evolved != schema
+                ):
+                    self._commit(staged, ptr)
+                    self._vacuum()
+                else:
+                    # nothing landed to commit: reclaim the staging now
+                    # rather than once its marker is staging_ttl_s old
+                    shutil.rmtree(f"{self.path}/v={staged.pv}", ignore_errors=True)
+                    self._clear_staging(staged.pv)
                 return staged
             except ConcurrentWriteError:
                 if not retries:

@@ -11,11 +11,15 @@ that buys every write:
    write, in the commit before it publishes, or in the vacuum after it
    leaves a table that re-running the same op repairs — ``fsck`` clean,
    the crashed staging reclaimable by ``vacuum_orphans``, contents
-   equal to the op's expected result, one history entry per logical op.
+   equal to the op's expected result, one history entry per logical op;
+3. a merge-on-read append rebased onto a racing winner commits the
+   winner's schema, so a column the winner added survives;
+4. an attempt that finds nothing to commit leaves no staging behind.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -309,3 +313,18 @@ def test_rebased_append_keeps_the_winners_new_column(
     assert [e["batch_id"] for e in t1.history()] == [0, 50, 1]
     assert t1.schema().fieldNames() == ["k", "v", "w"]
     assert _state(t1) == {0: (2, "x"), 1: (3, None)}
+
+
+def test_empty_mor_ticks_leave_no_staging(spark, tmp_path):
+    """A merge-on-read merge of an empty batch with no fold due commits
+    nothing and leaves nothing behind: no staging marker, no orphan
+    ``v=`` directory for ``fsck`` to report."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable(spark, path, ["k"], n_buckets=2)
+    t.merge(_kv(spark, [(1, "c", 1)]), batch_id=0)
+    for i in range(1, 4):
+        assert t.merge(_kv(spark, []), batch_id=i, mode="mor") == "none"
+    assert t.version == 0
+    assert os.listdir(f"{path}/_staging") == []
+    assert t.fsck()["orphans"] == []
+    assert _state(t) == {1: (1,)}
